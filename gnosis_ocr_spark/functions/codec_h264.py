@@ -565,16 +565,3 @@ def encode_h264_ipcm(
     idr_nal = b"\x65" + _insert_emulation(bw.trailing())
     return sps_nal, pps_nal, idr_nal
 
-
-def encode_h264_annexb(frames: list[np.ndarray]) -> bytes:
-    """Annex B byte stream: SPS + PPS + one all-I_PCM IDR per frame."""
-    if not frames:
-        raise ValueError("H264: need at least one frame")
-    out = bytearray()
-    sps, pps, _ = encode_h264_ipcm(frames[0])
-    out += b"\x00\x00\x00\x01" + sps
-    out += b"\x00\x00\x00\x01" + pps
-    for f in frames:
-        _, _, idr = encode_h264_ipcm(f)
-        out += b"\x00\x00\x00\x01" + idr
-    return bytes(out)

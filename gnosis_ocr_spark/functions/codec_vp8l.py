@@ -316,14 +316,6 @@ def _avg2(a: int, b: int) -> int:
     return (((a ^ b) & 0xFEFEFEFE) >> 1) + (a & b)
 
 
-def _sub3(a: int, b: int, c: int) -> int:
-    d = abs(((a >> 24) & 0xFF) - ((c >> 24) & 0xFF)) - abs(((b >> 24) & 0xFF) - ((c >> 24) & 0xFF))
-    d += abs(((a >> 16) & 0xFF) - ((c >> 16) & 0xFF)) - abs(((b >> 16) & 0xFF) - ((c >> 16) & 0xFF))
-    d += abs(((a >> 8) & 0xFF) - ((c >> 8) & 0xFF)) - abs(((b >> 8) & 0xFF) - ((c >> 8) & 0xFF))
-    d += abs((a & 0xFF) - (c & 0xFF)) - abs((b & 0xFF) - (c & 0xFF))
-    return d
-
-
 def _select(left: int, top: int, top_left: int) -> int:
     """RFC 9649 §4.2.2 Select: compare L/T against the full predictor
     p = L + T - TL; pick the neighbor closer to p."""

@@ -33,6 +33,11 @@ from gnosis_ocr_spark.functions.text import fingerprint, tokens
 
 LOG = logging.getLogger("gnosis_ocr_spark.dedup")
 
+# word-shingle width and bottom-s sketch size shared by every MinHash /
+# sketch entry point below
+SHINGLE_WORDS = 3
+SKETCH_SIZE = 1024
+
 
 def cap_bucket_members(
     df: DataFrame,
@@ -117,7 +122,7 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     Docs with fewer than n tokens yield an EMPTY array: F.sequence DESCENDS
     when its end < start (the repo's documented gotcha), and the descending
     index would feed slice() a 0/negative start → runtime error. Guarded like
-    winnowing_fingerprints.
+    winnow_windows.
 
     SCALE CAVEAT: the transform() lambda re-evaluates the captured token
     expression PER ELEMENT (no CSE in higher-order functions) — quadratic in
@@ -193,7 +198,7 @@ def char_ngrams(text: Column, n: int = 3, max_chars: int = 200) -> Column:
 
 
 def minhash_signature(docs: DataFrame, id_col: str, text_col: str, k: int = 32,
-                      shingle_words: int = 3) -> DataFrame:
+                      shingle_words: int = SHINGLE_WORDS) -> DataFrame:
     """(doc_id, sig array<bigint>): k min-hashes via seeded xxhash64 over
     word shingles — computed with ONE explode + ONE groupBy (k partial mins),
     no per-seed passes over the data. Shingles come from the linear
@@ -280,8 +285,8 @@ def shingle_sketches(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
 ) -> DataFrame:
     """(doc_id, sk array<bigint>): the ``sketch_size`` SMALLEST seeded hashes
     of each document's distinct shingle set — a deterministic bottom-s sketch.
@@ -361,8 +366,8 @@ def minhash_near_duplicates(
     bands: int = 8,
     rows: int = 4,
     threshold: float = 0.7,
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
     max_bucket_size: int | None = None,
     sketches: DataFrame | None = None,
 ) -> DataFrame:
@@ -402,8 +407,8 @@ def minhash_star_edges(
     bands: int = 8,
     rows: int = 4,
     threshold: float = 0.7,
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
     sketches: DataFrame | None = None,
 ) -> DataFrame:
     """(a, b, jaccard) verified STAR edges for the clustering consumer —
@@ -845,8 +850,8 @@ def duplicate_clusters(
     gen = {"star": minhash_star_edges, "pairs": minhash_near_duplicates}[edge_mode]
     sketches = shingle_sketches(
         docs, id_col, text_col,
-        minhash_kwargs.get("shingle_words", 3),
-        minhash_kwargs.get("sketch_size", 1024),
+        minhash_kwargs.get("shingle_words", SHINGLE_WORDS),
+        minhash_kwargs.get("sketch_size", SKETCH_SIZE),
     )
     sc = docs.sparkSession.sparkContext
     if checkpoint_dir is not None:
@@ -873,7 +878,7 @@ def duplicate_clusters_seeded(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 1.0,
-    shingle_words: int = 3,
+    shingle_words: int = SHINGLE_WORDS,
     checkpoint_dir: str | None = None,
     **minhash_kwargs,
 ) -> DataFrame:
@@ -1055,13 +1060,14 @@ def decontaminate(
 
 def row_sketch(
     toks: Column,
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
 ) -> Column:
     """The bottom-s shingle sketch as a PER-ROW pure Column expression —
     the stream-safe form of :func:`shingle_sketches` (no explode, no
     groupBy): shingle positions come from one sequence, hashes sort and
-    slice in-row. Unit-tested equal to the batch aggregation path.
+    slice in-row. Unit-tested against a plain-Python bottom-s sketch built
+    from the same ``xxhash64(shingle, 99)`` hashes.
 
     ``toks`` MUST be a MATERIALIZED token array column referenced at least
     twice in the enclosing plan (the HOF lambdas below re-evaluate

@@ -28,11 +28,6 @@ def parse_page_no(name: Column | str) -> Column:
     return F.regexp_extract(col, r"_(\d+)\.", 1).cast("int")
 
 
-def trim_text(text: Column | str) -> Column:
-    """F4: the final .strip() of OCR output (reference app/ocr_service.py:208)."""
-    return F.trim(F.col(text) if isinstance(text, str) else text)
-
-
 def url_extension(url: Column | str) -> Column:
     """F5: lower-cased extension (reference app/config.py:93-94 —
     os.path.splitext semantics): query strings / fragments are stripped
@@ -43,15 +38,6 @@ def url_extension(url: Column | str) -> Column:
     col = F.col(url) if isinstance(url, str) else url
     path = F.regexp_replace(col, r"[?#].*$", "")
     return F.lower(F.regexp_extract(path, r"[^./](\.[^./]+)$", 1))
-
-
-def utf8_decode(b: Column | str) -> Column:
-    """F6 (reference app/storage_service.py:139-140)."""
-    return F.decode(F.col(b) if isinstance(b, str) else b, "UTF-8")
-
-
-def utf8_encode(s: Column | str) -> Column:
-    return F.encode(F.col(s) if isinstance(s, str) else s, "UTF-8")
 
 
 def to_json_manifest(*cols: Column) -> Column:

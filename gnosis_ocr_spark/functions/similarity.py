@@ -144,24 +144,11 @@ def _hyperplane(dim: int, plane_id: int, seed: int = 1234) -> list[float]:
     return out
 
 
-def signs_col(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket key: bit b = sign(vec · plane_b), packed into a bigint."""
-    key = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(v)) for v in plane])
-        bit = F.when(dot(vec.cast("array<double>"), p) >= 0, F.lit(1 << b)).otherwise(
-            F.lit(0)
-        )
-        key = key + bit
-    return key
-
-
 def _signs_sql(vec_sql: str, planes: list[list[float]]) -> str:
-    """SQL text of :func:`signs_col` over an already-``array<double>``
-    NAMED column — the same CASE-per-plane sum, one F.expr parse (the
-    Column form costs n_planes × dim py4j literal calls per query build).
-    Bucket bits are exact integer comparisons, so the two forms agree
-    bit-for-bit."""
+    """LSH bucket key as SQL text over an already-``array<double>`` NAMED
+    column: bit b = sign(vec · plane_b), packed into a bigint as a
+    CASE-per-plane sum. One F.expr parse — a Column-built form costs
+    n_planes × dim py4j literal calls per query build."""
     terms = ["CAST(0 AS BIGINT)"]
     for b, plane in enumerate(planes):
         terms.append(

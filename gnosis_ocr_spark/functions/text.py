@@ -317,17 +317,6 @@ def winnow_windows(df, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def winnowing_fingerprints(df, id_col: str = "doc_id", text_col: str = "text",
-                           k: int = 8, window: int = 4, max_chars: int = 120):
-    """Distinct winnowing fingerprint set per document — see
-    :func:`winnow_windows` for the algorithm and plan shape."""
-    return (
-        winnow_windows(df, id_col, text_col, k, window, max_chars)
-        .select("doc_id", "fp")
-        .distinct()
-    )
-
-
 def hot_window_spans(df, id_col: str = "doc_id", text_col: str = "text",
                      k: int = 8, window: int = 4, max_chars: int = 120,
                      min_docs: int = 3, gap: int | None = None):

@@ -348,11 +348,6 @@ def extract_html_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_main_text)
 
 
-def with_extracted_html(df, html_col: str = "html", out_col: str = "extracted_text"):
-    """DataFrame helper: add the extracted-text column to HTML-routed rows."""
-    return df.withColumn(out_col, extract_html_udf(F.col(html_col)))
-
-
 # ---------------------------------------------------------------------------
 # Document metadata (head-level): title / description / canonical /
 # OpenGraph / lang / published time — the fields a curation pipeline

@@ -1,5 +1,5 @@
-"""U3/U4 — OCR inference as an iterator ``pandas_udf`` with an
-executor-singleton engine.
+"""U3/U4 — OCR engines behind one scored protocol, loaded as an
+executor singleton.
 
 Reference semantics being reproduced (SURVEY.md §2.8 U3): the model is loaded
 once per process (/root/reference/app/ocr_service.py:36-77), each page image
@@ -17,18 +17,14 @@ Two engines behind one seam:
   constants, import-gated on torch/transformers (absent in this container →
   ``NotImplementedError`` at load, never at import).
 
-The UDF uses the ``Iterator[pd.Series] -> Iterator[pd.Series]`` form so the
-engine loads once per Python worker, not once per batch — the Spark analog of
-the reference's process-wide model singleton.
+Every engine implements one method, ``ocr_batch_scored(pngs) -> (texts,
+confs)``. :func:`get_engine` keeps one engine per Python worker process;
+``pdf_split.raster_ocr_pages`` fetches it once at the top of its
+``mapInPandas`` iterator, so the model loads once per worker, not once per
+batch — the Spark analog of the reference's process-wide model singleton.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from gnosis_ocr_spark.functions.codec_png import (
     decode_scan_png_text,
@@ -61,37 +57,31 @@ class DeterministicStubOCR:
 
     name = "stub"
 
-    def ocr_batch(self, pngs: list[bytes | None]) -> list[str]:
-        out = []
-        for png in pngs:
-            if png is None:
-                out.append("")
-                continue
-            try:
-                out.append(decode_stub_text(bytes(png)).strip())
-            except Exception:
-                scanned = decode_scan_png_text(bytes(png))
-                out.append(scanned.strip() if scanned else "")
-        return out
-
     def ocr_batch_scored(
         self, pngs: list[bytes | None]
     ) -> tuple[list[str], list[float]]:
-        """(texts, per-page confidences). The engine protocol's scored form
-        (round-3 task: metrics carried a hardcoded 1.0/0.0 'until the real
-        model surfaces logprobs'). The real-model analog averages token
-        logprobs over the greedy decode; the stub derives a deterministic
-        confidence in [0.5, 1.0) from the page pixels (crc32) so every page
-        gets a distinct, reproducible score — 0.0 for failed/empty pages."""
+        """(texts, per-page confidences) — the one engine method. Texts get
+        the reference's final ``.strip()``; a NULL page reads as ''. The
+        real-model analog of the confidence averages token logprobs over
+        the greedy decode; the stub derives a deterministic confidence in
+        [0.5, 1.0) from the page pixels (crc32) so every page gets a
+        distinct, reproducible score — 0.0 for failed/empty pages."""
         import zlib
 
-        texts = self.ocr_batch(pngs)
-        confs = []
-        for png, text in zip(pngs, texts):
-            if png is None or not text:
-                confs.append(0.0)
-            else:
-                confs.append(0.5 + (zlib.crc32(bytes(png)) % 5000) / 10000.0)
+        texts: list[str] = []
+        confs: list[float] = []
+        for png in pngs:
+            text = ""
+            if png is not None:
+                try:
+                    text = decode_stub_text(bytes(png)).strip()
+                except Exception:
+                    scanned = decode_scan_png_text(bytes(png))
+                    text = scanned.strip() if scanned else ""
+            texts.append(text)
+            confs.append(
+                0.5 + (zlib.crc32(bytes(png)) % 5000) / 10000.0 if text else 0.0
+            )
         return texts, confs
 
 
@@ -114,17 +104,18 @@ class ComputeCalibratedStubOCR(DeterministicStubOCR):
 
         self.iters = int(os.environ.get("SPARK_GRAFT_OCR_ITERS", "60000"))
 
-    def ocr_batch(self, pngs: list[bytes | None]) -> list[str]:
+    def ocr_batch_scored(
+        self, pngs: list[bytes | None]
+    ) -> tuple[list[str], list[float]]:
         import hashlib
 
-        out = super().ocr_batch(pngs)
         for png in pngs:
             if png is None:
                 continue
             h = bytes(png[:64])
             for _ in range(self.iters):
                 h = hashlib.sha256(h).digest()
-        return out
+        return super().ocr_batch_scored(pngs)
 
 
 class NanonetsOCR:
@@ -150,7 +141,9 @@ class NanonetsOCR:
             "real-model inference is environment-gated in this sandbox"
         )
 
-    def ocr_batch(self, pngs: list[bytes | None]) -> list[str]:  # pragma: no cover
+    def ocr_batch_scored(  # pragma: no cover
+        self, pngs: list[bytes | None]
+    ) -> tuple[list[str], list[float]]:
         raise NotImplementedError
 
 
@@ -171,16 +164,3 @@ def get_engine(kind: str = "stub"):
         _SINGLETON_KIND = kind
     return _SINGLETON
 
-
-def make_ocr_udf(engine_kind: str = "stub"):
-    """Build the iterator-form OCR UDF bound to an engine kind."""
-
-    @pandas_udf(StringType())
-    def ocr_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        engine = get_engine(engine_kind)  # loads once per worker, not per batch
-        for pngs in batches:
-            yield pd.Series(
-                engine.ocr_batch(list(pngs)), index=pngs.index, dtype="object"
-            )
-
-    return ocr_udf

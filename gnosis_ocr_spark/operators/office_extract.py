@@ -749,11 +749,6 @@ def extract_office_udf(data: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["extracted_text", "n_pages", "subtype"])
 
 
-def office_text_col(col):
-    """Text-only convenience: struct UDF projected to the text field."""
-    return extract_office_udf(col).getField("extracted_text")
-
-
 _LIGHT_SCHEMA = StructType(
     [
         StructField("extracted_text", StringType()),

@@ -12,12 +12,13 @@ Here the work is split into two stages with scale-correct topology:
    ``(url, html=pdf bytes) → (url, page_no, page_text)``. Cheap per page
    (content-stream parse), parsed in fixed 10-page windows so peak memory
    stays bounded like the reference's batching.
-2. :func:`rasterize_udf` — vectorized ``pandas_udf``
-   ``page_text → png BINARY``. This is the HEAVY per-page work (a dpi=150
-   page is a ~2 MB raster), so the pipeline repartitions page rows *between*
-   the two stages: a 500-page document's raster+OCR cost spreads across the
-   cluster instead of pinning one task. This is the Spark restatement of the
-   reference's window jobs — with real poppler, stage 1 would ship
+2. :func:`raster_ocr_pages` — fused raster+OCR ``mapInPandas``
+   ``(url, page_no, page_text, page_png) → (url, page_no, page_text)``.
+   This is the HEAVY per-page work (a dpi=150 page is a ~2 MB raster), so
+   the pipeline repartitions page rows *between* the two stages: a
+   500-page document's raster+OCR cost spreads across the cluster instead
+   of pinning one task. This is the Spark restatement of the reference's
+   window jobs — with real poppler, stage 1 would ship
    ``(url, window_no, pdf_bytes)`` per 10-page window (bytes duplicated per
    window, exactly like each continuation job re-reading the PDF from GCS)
    and stage 2 would call poppler with first_page/last_page.
@@ -39,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType, IntegerType
+from pyspark.sql.types import IntegerType
 
 from gnosis_ocr_spark.functions.codec_pdf import (
     extract_pages_with_images,
@@ -304,18 +305,6 @@ def _materialize_scan(blob, w: int, h: int) -> bytes | None:
     return b
 
 
-def make_materialize_png_udf(raster: str | None = None):
-    """Vectorized page_png → PNG materializer for the unfused/debug
-    paths (the fused raster+OCR stage inlines the same conversion)."""
-    w, h = _raster_size(raster)
-
-    @pandas_udf(BinaryType())
-    def materialize_udf(col: pd.Series) -> pd.Series:
-        return col.map(lambda b: _materialize_scan(b, w, h))
-
-    return materialize_udf
-
-
 def _scan_png(images, rotate: int = 0) -> bytes | None:
     """A page's drawn images as ONE grayscale PNG for the OCR stage.
     Multiple decodable images stack vertically in draw order (scanners
@@ -486,27 +475,6 @@ def split_pdf_text_pages(
     return slim.mapInPandas(_make_split_batches(with_route), schema=schema)
 
 
-def make_rasterize_udf(raster: str | None = None):
-    """U2 rasterize: page content → PNG bytes (heavy; run after the page
-    respread). NULL in (sentinel) → NULL out.
-
-    ``raster`` ("WxH" or "dpi150") is resolved on the DRIVER and captured in
-    the closure, so the size reliably reaches executors regardless of their
-    environment (env var is the driver-side default only)."""
-    w, h = _raster_size(raster)
-
-    @pandas_udf(BinaryType())
-    def rasterize_udf(page_text_col: pd.Series) -> pd.Series:
-        return page_text_col.map(
-            lambda t: None if t is None else encode_page_png(t, w, h)
-        )
-
-    return rasterize_udf
-
-
-rasterize_udf = make_rasterize_udf()
-
-
 OCR_PAGE_SCHEMA = "url string, page_no int, page_text string"
 OCR_PAGE_CONF_SCHEMA = OCR_PAGE_SCHEMA + ", ocr_conf double"
 
@@ -524,13 +492,12 @@ def raster_ocr_pages(
     cross the Python↔JVM Arrow boundary — measured at sf0.1 the unfused
     two-UDF form moves ~14 GB through Arrow for 10k pages and costs 3× the
     wall-clock. Same fusion the reference uses (raster→save→OCR in one loop,
-    SURVEY.md §4 "operator fusion"). The unfused operators remain available
-    (make_rasterize_udf + make_ocr_udf) for debug page dumps and multimodal
-    reuse of the PNG column.
+    SURVEY.md §4 "operator fusion").
 
-    ``with_confidence`` adds a per-page ``ocr_conf`` column from the engine's
-    scored protocol (real model: mean token logprob; stub: deterministic
-    function of the page pixels) — the metrics-table input.
+    The engine always scores its pages; ``with_confidence`` only chooses
+    the output schema, adding the per-page ``ocr_conf`` column (real model:
+    mean token logprob; stub: deterministic function of the page pixels)
+    — the metrics-table input.
     """
     w, h = _raster_size(raster)
     pass_route = "route" in pages.columns
@@ -550,13 +517,10 @@ def raster_ocr_pages(
                 else (None if t is None else encode_page_png(t, w, h))
                 for t, s in zip(b["page_text"], scans)
             ]
-            cols = {"url": b["url"], "page_no": b["page_no"]}
+            texts, confs = engine.ocr_batch_scored(pngs)
+            cols = {"url": b["url"], "page_no": b["page_no"], "page_text": texts}
             if with_confidence:
-                texts, confs = engine.ocr_batch_scored(pngs)
-                cols["page_text"] = texts
                 cols["ocr_conf"] = confs
-            else:
-                cols["page_text"] = engine.ocr_batch(pngs)
             if pass_route:
                 cols["route"] = b["route"]
             yield pd.DataFrame(cols)
@@ -571,20 +535,3 @@ def raster_ocr_pages(
         schema += ", route string"
     return pages.select(*cols).mapInPandas(fused, schema=schema)
 
-
-def split_pdf_pages(pdf_rows: DataFrame, raster: str | None = None) -> DataFrame:
-    """Fused convenience form: (url, html) → (url, page_no, png).
-
-    Prefer split_pdf_text_pages + make_rasterize_udf with a respread in
-    between (see plans.pipeline) — this fused form keeps a giant document's
-    raster cost in one task and exists for unit tests / small corpora."""
-    pages = split_pdf_text_pages(pdf_rows)
-    return pages.select(
-        "url",
-        "page_no",
-        # scanned pages carry their (deferred) raster; text pages render one
-        F.coalesce(
-            make_materialize_png_udf(raster)(F.col("page_png")),
-            make_rasterize_udf(raster)(F.col("page_text")),
-        ).alias("png"),
-    )

@@ -22,6 +22,9 @@ ROUTE_OFFICE = "office"
 ROUTE_FEED = "feed"
 ROUTE_HTML = "html"
 ROUTE_EMPTY = "empty"
+# routes the heavy branch (split → respread → raster+OCR → assembly) takes;
+# every other route is extracted by the light branch
+HEAVY_ROUTES = (ROUTE_PDF, ROUTE_TIFF, ROUTE_IMAGE)
 
 _PDF_MAGIC = b"%PDF-"
 _TIFF_MAGIC_LE = b"II*\x00"

@@ -2120,37 +2120,6 @@ def _docs_with_copies(spark: SparkSession, sf_dir: str, limit: int | None = None
     return docs.unionByName(copies)
 
 
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing rolling-hash fingerprints, exploded to (doc_id, fp) rows."""
-    from gnosis_ocr_spark.functions.text import winnowing_fingerprints
-
-    docs = _t(spark, sf_dir, "documents")
-    return winnowing_fingerprints(docs, "doc_id", "text")
-
-
-ORACLE_WINNOW_FINGERPRINTS = """
-WITH n AS (
-  SELECT doc_id,
-         substr(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), 1, 120) AS s
-  FROM documents
-), g AS (
-  SELECT doc_id, i, md5(substr(s, i, 8)) AS h
-  FROM n, generate_series(1, 113) t(i)
-  WHERE i <= length(s) - 7
-), m AS (
-  SELECT doc_id, MAX(i) AS max_i FROM g GROUP BY doc_id
-), w AS (
-  SELECT g.doc_id, j.j, MIN(g.h) AS fp
-  FROM g JOIN m USING (doc_id), generate_series(1, 110) j(j)
-  WHERE g.i BETWEEN j.j AND j.j + 3 AND j.j <= m.max_i - 3
-  GROUP BY g.doc_id, j.j
-)
-SELECT DISTINCT doc_id, fp FROM w
-"""
-# (max_i precomputed in a CTE: a correlated MAX subquery re-scanned g per row
-# and turned the oracle O(n²) — stalled at sf0.1)
-
-
 _BOILER_PREFIX = "subscribe to our newsletter footer boilerplate banner "
 
 

@@ -4,25 +4,25 @@
       ├─ light branch (ONE scan): route on magic bytes → HTML rows get the
       │    vectorized boilerplate strip (U7), office containers
       │    (docx/xlsx/pptx/odt/epub/rtf) get the codec_zip/XML extractors,
-      │    empty rows get ('', 0) — one fused UDF (bytes cross Arrow once),
+      │    feeds their item text, empty rows ('', 0) — one fused UDF (bytes cross Arrow once),
       │    narrow end-to-end, zero shuffles
-      └─ heavy branch (second scan, PDFs + multi-page TIFFs): salted
-           repartition (skew) → mapInPandas page split (U2 parse, cheap;
-           TIFF pages rebuilt as still-compressed single-page files) →
-           page-level respread → rasterize UDF (heavy) →
-           iterator-UDF OCR (U3) → sort-aggregate assembly (A6/U8)
-      unionByName (SO2) → (url, extracted_text, n_pages, route)
+      └─ heavy branch (second scan, PDFs + multi-page TIFFs + images):
+           salted repartition (skew) → mapInPandas page split (U2 parse,
+           cheap; TIFF pages rebuilt as still-compressed single-page files)
+           → page-level respread → fused raster+OCR mapInPandas (U2/U3,
+           heavy) → sort-aggregate assembly (A6/U8)
+      unionByName (SO2) → (url, extracted_text, n_pages, route,
+                           ocr_confidence)
 
 Shuffle census at scale: light branch 0 exchanges; heavy branch 3 (salted
-repartition, page respread, groupBy(url) assembly) — or 2 with
-``page_level_parallelism=False``. The input is scanned twice, both scans
-column-pruned to (url, html); on an Iceberg deployment, partitioning the
-table by a routed flag at ingest lets each branch prune to its own
-partitions instead.
+repartition, page respread, groupBy(url) assembly). The input is scanned
+twice, both scans column-pruned to (url, html); on an Iceberg deployment,
+partitioning the table by a routed flag at ingest lets each branch prune to
+its own partitions instead.
 
 Straggler control (north rule): the salted size-bucket repartition spreads
-*documents* for the cheap parse stage; the page-level respread (default ON)
-then spreads the HEAVY per-page work — rasterization (~100 ms/page at
+*documents* for the cheap parse stage; the page-level respread then
+spreads the HEAVY per-page work — rasterization (~100 ms/page at
 dpi=150) and OCR (seconds/page with the real model) — so one 500-page PDF
 fans out across the cluster instead of pinning a task, and the assembly
 groupBy brings pages back together. This is the Spark restatement of the
@@ -42,117 +42,75 @@ from gnosis_ocr_spark.operators.pdf_split import (
     raster_ocr_pages,
     split_pdf_text_pages,
 )
-from gnosis_ocr_spark.operators.routing import (
-    ROUTE_IMAGE,
-    ROUTE_PDF,
-    ROUTE_TIFF,
-    with_route,
-)
+from gnosis_ocr_spark.operators.routing import HEAVY_ROUTES, with_route
 from gnosis_ocr_spark.operators.skew import salted_repartition
 
-RESULT_COLS = ["url", "extracted_text", "n_pages", "route"]
+
+def light_branch(routed: DataFrame) -> DataFrame:
+    """Routed rows off the heavy routes → their extraction, in ONE scan and
+    ONE fused UDF so the raw bytes cross Arrow once: html → U7 main-content
+    strip, office containers (docx/xlsx/pptx/odt/epub/rtf) → codec_zip/XML
+    extraction, feeds → item text, empty → ('', 0). Narrow end to end, zero
+    shuffles.
+
+    Adds ``extracted_text`` and ``n_pages`` and drops ``html``; every other
+    input column passes through, so the batch plan and the stateless stream
+    select their own outputs from this one definition."""
+    return (
+        routed.filter(~F.col("route").isin(*HEAVY_ROUTES))
+        .withColumn("_lx", light_extract_udf(F.col("html"), F.col("route")))
+        .withColumns({
+            "extracted_text": F.col("_lx.extracted_text"),
+            "n_pages": F.col("_lx.n_pages"),
+        })
+        .drop("_lx", "html")
+    )
 
 
 def extract_corpus(
     docs: DataFrame,
     ocr_engine: str = "stub",
     pdf_partitions: int | None = None,
-    page_level_parallelism: bool = True,
     raster: str | None = None,
-    debug_pages_path: str | None = None,
-    with_confidence: bool = False,
 ) -> DataFrame:
-    """documents → (url, extracted_text, n_pages, route[, ocr_confidence]).
+    """documents → (url, extracted_text, n_pages, route, ocr_confidence).
 
-    ``pdf_partitions`` sizes the salted PDF repartition (default:
-    spark.sql.shuffle.partitions; AQE coalesces small outputs).
-    ``page_level_parallelism`` spreads per-page raster/OCR cost across the
-    cluster (see module docstring); turn off only for tiny corpora where the
-    extra exchange outweighs the per-page work.
-    ``with_confidence`` adds a per-document ``ocr_confidence`` column: the
-    page-average of the OCR engine's per-page score on the PDF branch
-    (aggregated inside the existing assembly groupBy — no extra shuffle);
-    HTML extraction is not model inference, so that branch reports 1.0 for
-    non-empty text and 0.0 for empty/unparseable rows.
+    ``pdf_partitions`` sizes the salted PDF repartition and the page
+    respread (default: spark.sql.shuffle.partitions; AQE coalesces small
+    outputs). ``ocr_confidence`` is the page-average of the OCR engine's
+    per-page score on the heavy branch (aggregated inside the existing
+    assembly groupBy — no extra shuffle); light extraction is not model
+    inference, so that branch reports 1.0 for non-empty text and 0.0 for
+    empty/unparseable rows.
     """
-
     routed = with_route(docs)
 
-    # one scan for ALL narrow routes: html → U7 main-content strip, office
-    # (docx/xlsx/pptx/odt/epub/rtf containers) → codec_zip/XML extraction,
-    # empty → ('', 0). One fused UDF so the raw bytes cross Arrow once.
-    non_pdf = (
-        routed.filter(~F.col("route").isin(ROUTE_PDF, ROUTE_TIFF, ROUTE_IMAGE))
-        .withColumn(
-            "_lx", light_extract_udf(F.col("html"), F.col("route"))
-        )
-        .select(
-            "url",
-            F.col("_lx.extracted_text").alias("extracted_text"),
-            F.col("_lx.n_pages").alias("n_pages"),
-            F.col("route"),
-        )
+    light = light_branch(routed).select(
+        "url",
+        "extracted_text",
+        "n_pages",
+        "route",
+        F.when(F.length("extracted_text") > 0, F.lit(1.0))
+        .otherwise(0.0)
+        .alias("ocr_confidence"),
     )
-    if with_confidence:
-        non_pdf = non_pdf.withColumn(
-            "ocr_confidence",
-            F.when(F.length("extracted_text") > 0, F.lit(1.0)).otherwise(0.0),
-        )
 
-    # heavy branch: PDFs AND multi-page TIFFs share one topology — the
-    # split stage re-sniffs the magic per blob and emits a route column
+    # heavy branch: PDFs, multi-page TIFFs and images share one topology —
+    # the split stage re-sniffs the magic per blob and emits a route column
     # that rides the existing exchanges (no extra shuffle)
-    pdf_rows = routed.filter(
-        F.col("route").isin(ROUTE_PDF, ROUTE_TIFF, ROUTE_IMAGE)
-    ).select("url", "html")
-    pdf_rows = salted_repartition(pdf_rows, pdf_partitions)
-    pages = split_pdf_text_pages(pdf_rows, with_route=True)
-    if page_level_parallelism:
-        # spread a giant document's pages across the cluster BEFORE the
-        # heavy per-page stages (raster + OCR)
-        pages = pages.repartition(
-            *([pdf_partitions] if pdf_partitions else []), "url", "page_no"
-        )
-    if debug_pages_path:
-        # debug mode mirrors the reference's materialized pages/ directory
-        # (/root/reference/app/jobs.py:395-401): page PNGs are written out
-        # and OCR reads the materialized column — slower (pixels cross the
-        # Arrow boundary) but inspectable. Production stays fused.
-        from gnosis_ocr_spark.operators.ocr import make_ocr_udf
-        from gnosis_ocr_spark.operators.pdf_split import (
-            make_materialize_png_udf,
-            make_rasterize_udf,
-        )
-
-        rastered = pages.withColumn(
-            "png",
-            # scanned pages carry their own (deferred) raster; text pages
-            # render one
-            F.coalesce(
-                make_materialize_png_udf(raster)(F.col("page_png")),
-                make_rasterize_udf(raster)(F.col("page_text")),
-            ),
-        )
-        rastered.write.mode("overwrite").parquet(debug_pages_path)
-        rastered = pages.sparkSession.read.parquet(debug_pages_path)
-        ocred = rastered.select(
-            "url", "page_no",
-            make_ocr_udf(ocr_engine)(F.col("png")).alias("page_text"),
-            "route",
-        )
-        if with_confidence:  # debug path uses the unscored UDF: flat 1.0/0.0
-            ocred = ocred.withColumn(
-                "ocr_conf",
-                F.when(F.length("page_text") > 0, F.lit(1.0)).otherwise(0.0),
-            )
-    else:
-        # fused raster+OCR: pixels never cross the Arrow boundary (see
-        # operators/pdf_split.raster_ocr_pages)
-        ocred = raster_ocr_pages(
-            pages, ocr_engine=ocr_engine, raster=raster,
-            with_confidence=with_confidence,
-        )
+    heavy = routed.filter(F.col("route").isin(*HEAVY_ROUTES)).select("url", "html")
+    pages = split_pdf_text_pages(
+        salted_repartition(heavy, pdf_partitions), with_route=True
+    )
+    # spread a giant document's pages across the cluster BEFORE the heavy
+    # per-page stage
+    pages = pages.repartition(
+        *([pdf_partitions] if pdf_partitions else []), "url", "page_no"
+    )
+    # fused raster+OCR: pixels never cross the Arrow boundary (see
+    # operators/pdf_split.raster_ocr_pages)
+    ocred = raster_ocr_pages(
+        pages, ocr_engine=ocr_engine, raster=raster, with_confidence=True
+    )
     # assembly folds the per-page route into the same sort-aggregate
-    pdf_branch = assemble_documents(ocred)
-
-    return non_pdf.unionByName(pdf_branch)
+    return light.unionByName(assemble_documents(ocred))

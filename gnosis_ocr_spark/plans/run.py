@@ -96,9 +96,7 @@ def run_extraction(
         todo = docs.join(done, "url", "left_anti")
 
     tagged = _with_partition_metrics(
-        extract_corpus(
-            todo, ocr_engine=ocr_engine, raster=raster, with_confidence=True
-        )
+        extract_corpus(todo, ocr_engine=ocr_engine, raster=raster)
     )
     tagged = tagged.persist()
     try:

@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gnosis_ocr_spark.corpus import INPUT_SCHEMA
-from gnosis_ocr_spark.operators.html_extract import extract_html_udf
-from gnosis_ocr_spark.operators.routing import ROUTE_HTML, with_route
+from gnosis_ocr_spark.operators.routing import with_route
+from gnosis_ocr_spark.plans.pipeline import extract_corpus, light_branch
 
 
 def read_document_stream(spark: SparkSession, in_dir: str,
@@ -31,32 +31,13 @@ def read_document_stream(spark: SparkSession, in_dir: str,
 
 
 def html_extract_stream(docs: DataFrame) -> DataFrame:
-    """Stateless streaming transform: route + HTML/office extraction (the
-    PDF branch requires per-document aggregation → handled by the batch
-    resume plan or a foreachBatch sink; HTML + office containers are the
-    high-volume stateless paths on real crawls)."""
-    from gnosis_ocr_spark.operators.office_extract import light_extract_udf
-    from gnosis_ocr_spark.operators.routing import (
-        ROUTE_EMPTY,
-        ROUTE_FEED,
-        ROUTE_OFFICE,
-    )
-
-    routed = with_route(docs)
-    # ROUTE_EMPTY rides the light branch exactly like batch extract_corpus
-    # — silently dropping those urls made the streamed output incomplete
-    # versus the batch plan for any completeness check keyed on url
-    return (
-        routed.filter(
-            F.col("route").isin(ROUTE_HTML, ROUTE_OFFICE, ROUTE_FEED, ROUTE_EMPTY)
-        )
-        .withColumn("_lx", light_extract_udf(F.col("html"), F.col("route")))
-        .select(
-            "url",
-            "warc_ts",
-            F.col("_lx.extracted_text").alias("extracted_text"),
-            F.col("_lx.n_pages").alias("n_pages"),
-        )
+    """Stateless streaming transform: route + the batch plan's light branch
+    (HTML, office containers, feeds and empty rows — the high-volume
+    stateless paths on real crawls). The heavy branch requires
+    per-document aggregation → handled by the batch resume plan or the
+    foreachBatch sink below."""
+    return light_branch(with_route(docs)).select(
+        "url", "warc_ts", "extracted_text", "n_pages"
     )
 
 
@@ -98,7 +79,6 @@ def start_full_extract_stream(
     replaces its own epoch partition instead of appending duplicates.
     Per-document completeness holds because file sources never split one row
     across batches."""
-    from gnosis_ocr_spark.plans.pipeline import extract_corpus
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         (

@@ -206,21 +206,52 @@ def test_static_lm_matches_self_trained(spark):
 
 
 def test_row_sketch_matches_batch_sketches(spark):
-    from gnosis_ocr_spark.functions.dedup import row_sketch, shingle_sketches
+    """row_sketch equals a bottom-s sketch built outside the expression:
+    word shingles in plain Python, each hashed by Spark's
+    ``xxhash64(shingle, 99)`` on a one-column frame, then distinct → sort
+    → slice in Python. Sketch size 4 is below doc 2's distinct-shingle
+    count, so the slice is exercised too."""
+    from gnosis_ocr_spark.functions.dedup import (
+        SHINGLE_WORDS,
+        SKETCH_SIZE,
+        row_sketch,
+    )
     from gnosis_ocr_spark.functions.text import tokens
 
-    docs = _curation_corpus(spark).select("doc_id", "text")
-    ltoks = F.filter(tokens(F.lower(F.col("text"))), lambda t: F.length(t) > 0)
-    got = {
-        r["doc_id"]: list(r["sk"])
-        for r in docs.withColumn("_ltoks", ltoks)
-        .select("doc_id", row_sketch(F.col("_ltoks")).alias("sk"))
-        .collect()
+    texts = {
+        1: "a b c d a b c d a b",  # repeated shingles: distinct matters
+        2: "The quick brown fox jumps over the lazy dog near the river bank",
+        3: "dup dup dup " * 12,
+        4: "too short",  # fewer than SHINGLE_WORDS tokens → empty sketch
     }
-    want = {r["doc_id"]: list(r["sk"]) for r in shingle_sketches(docs).collect()}
-    # batch path emits no row for docs with < n tokens; row form emits []
-    want_full = {d: want.get(d, []) for d in got}
-    assert got == want_full
+    n = SHINGLE_WORDS
+    shingles = {}
+    for doc_id, text in texts.items():
+        toks = text.lower().split()
+        shingles[doc_id] = {
+            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+        }
+    distinct = sorted(set().union(*shingles.values()))
+    hashed = dict(
+        spark.createDataFrame([(sh,) for sh in distinct], "s string")
+        .select("s", F.xxhash64("s", F.lit(99)))
+        .collect()
+    )
+
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    docs = docs.withColumn("_toks", tokens(F.lower(F.col("text"))))
+    for size in (SKETCH_SIZE, 4):
+        got = {
+            r["doc_id"]: list(r["sk"])
+            for r in docs.select(
+                "doc_id", row_sketch(F.col("_toks"), n, size).alias("sk")
+            ).collect()
+        }
+        want = {
+            doc_id: sorted({hashed[sh] for sh in sh_set})[:size]
+            for doc_id, sh_set in shingles.items()
+        }
+        assert got == want, size
 
 
 def test_streaming_curation_reproduces_batch_decision(spark, tmp_path):

@@ -5,15 +5,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gnosis_ocr_spark.corpus import corpus_df, write_corpus
+from gnosis_ocr_spark.corpus import corpus_df, golden_df, write_corpus
 from gnosis_ocr_spark.functions.codec_png import encode_page_png
-from gnosis_ocr_spark.operators.html_extract import extract_html_udf
 from gnosis_ocr_spark.operators.multimodal import (
     media_features,
     media_metadata,
     sniff_media_type,
 )
-from gnosis_ocr_spark.operators.routing import ROUTE_HTML, with_route
+from gnosis_ocr_spark.operators.routing import HEAVY_ROUTES, with_route
 from gnosis_ocr_spark.streaming.extract_stream import (
     start_extract_stream,
     windowed_throughput,
@@ -79,29 +78,22 @@ def test_streaming_extraction_available_now(spark, tmp_path):
     q.awaitTermination(120)
 
     got = spark.read.parquet(out_dir)
-    # the stateless stream carries html + office + feed routes (corpus
-    # v11+ has office docs); expectation mirrors the batch light branch
-    from gnosis_ocr_spark.operators.office_extract import light_extract_udf
-    from gnosis_ocr_spark.operators.routing import (
-        ROUTE_EMPTY,
-        ROUTE_FEED,
-        ROUTE_OFFICE,
-    )
-
-    batch = with_route(corpus_df(spark, n=40)).filter(
-        F.col("route").isin(ROUTE_HTML, ROUTE_OFFICE, ROUTE_FEED, ROUTE_EMPTY)
-    )
-    expected = batch.select(
-        "url",
-        light_extract_udf(F.col("html"), F.col("route"))
-        .getField("extracted_text")
-        .alias("extracted_text"),
-    )
+    # the stateless stream carries every light route (html, office, feed,
+    # empty); each streamed row must equal the by-construction golden
+    light_urls = with_route(corpus_df(spark, n=40)).filter(
+        ~F.col("route").isin(*HEAVY_ROUTES)
+    ).select("url")
+    expected = golden_df(spark, n=40).join(light_urls, "url")
     assert got.count() == expected.count() > 0
-    joined = got.alias("s").join(expected.alias("b"), "url")
-    mismatches = joined.filter(
-        ~F.col("s.extracted_text").eqNullSafe(F.col("b.extracted_text"))
-    ).count()
+    mismatches = (
+        got.alias("s")
+        .join(expected.alias("g"), "url", "full_outer")
+        .filter(
+            ~F.col("s.extracted_text").eqNullSafe(F.col("g.extracted_text"))
+            | ~F.col("s.n_pages").eqNullSafe(F.col("g.n_pages"))
+        )
+        .count()
+    )
     assert mismatches == 0
 
     # restart with same checkpoint: no duplicates (idempotent resume)

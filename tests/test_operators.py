@@ -1,5 +1,5 @@
-"""Spark-level unit tests: routing, PDF probe/split, OCR UDF, span assembly,
-salted skew repartition."""
+"""Spark-level unit tests: routing, PDF probe/split, OCR engine, span
+assembly, salted skew repartition."""
 
 from __future__ import annotations
 
@@ -8,8 +8,11 @@ from pyspark.sql import functions as F
 from gnosis_ocr_spark.functions.codec_pdf import build_pdf
 from gnosis_ocr_spark.functions.codec_png import encode_page_png
 from gnosis_ocr_spark.operators.layout import assemble_documents, assemble_spans
-from gnosis_ocr_spark.operators.ocr import make_ocr_udf
-from gnosis_ocr_spark.operators.pdf_split import pdf_page_count_udf, split_pdf_pages
+from gnosis_ocr_spark.operators.ocr import get_engine
+from gnosis_ocr_spark.operators.pdf_split import (
+    pdf_page_count_udf,
+    split_pdf_text_pages,
+)
 from gnosis_ocr_spark.operators.routing import with_route
 from gnosis_ocr_spark.operators.skew import salted_repartition
 
@@ -49,23 +52,21 @@ def test_split_emits_sentinel_for_garbage(spark):
         [("ok", bytearray(build_pdf(["p1", "p2"]))), ("bad", bytearray(b"%PDF-oops"))],
         schema="url string, html binary",
     )
-    pages = split_pdf_pages(df).collect()
+    pages = split_pdf_text_pages(df).collect()
     by_url = {}
     for r in pages:
         by_url.setdefault(r["url"], []).append(r)
     assert sorted(r["page_no"] for r in by_url["ok"]) == [1, 2]
-    assert [r["page_no"] for r in by_url["bad"]] == [None]
-    assert by_url["bad"][0]["png"] is None
+    [bad] = by_url["bad"]
+    assert (bad["page_no"], bad["page_text"], bad["page_png"]) == (None, None, None)
 
 
-def test_ocr_stub_udf_strips(spark):
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_page_png("  hello  "))), (2, None)],
-        schema="id int, png binary",
+def test_ocr_stub_udf_strips():
+    texts, confs = get_engine("stub").ocr_batch_scored(
+        [encode_page_png("  hello  "), None]
     )
-    got = dict(df.select("id", make_ocr_udf("stub")("png").alias("t")).collect())
-    assert got[1] == "hello"  # final .strip() per reference ocr_service.py:208
-    assert got[2] == ""
+    assert texts == ["hello", ""]  # final .strip() per reference ocr_service.py:208
+    assert confs[0] > 0.0 and confs[1] == 0.0
 
 
 def test_assembly_orders_pages_and_counts(spark):

@@ -1,19 +1,16 @@
 """Plan-quality assertions: the physical plans the judge would want —
 predicate pushdown reaching the parquet scan, dims broadcast, the non-PDF
-extraction branch shuffle-free, and page-level respread only when asked."""
+extraction branch shuffle-free, and the heavy branch's three exchanges."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 
-from pyspark.sql import functions as F
-
-from gnosis_ocr_spark.corpus import corpus_df, golden_df
+from gnosis_ocr_spark.corpus import corpus_df
 from gnosis_ocr_spark.plans.driver_queries import q_tpch_q3, q_tpch_q5
-from gnosis_ocr_spark.plans.pipeline import extract_corpus
-from gnosis_ocr_spark.operators.html_extract import extract_html_udf
-from gnosis_ocr_spark.operators.routing import ROUTE_PDF, with_route
+from gnosis_ocr_spark.plans.pipeline import extract_corpus, light_branch
+from gnosis_ocr_spark.operators.routing import with_route
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,43 +37,19 @@ def test_tpch_filters_pushed_and_dims_broadcast(spark):
 
 
 def test_non_pdf_branch_is_shuffle_free(spark):
-    docs = corpus_df(spark, n=40)
-    routed = with_route(docs)
-    non_pdf = routed.filter(F.col("route") != ROUTE_PDF).select(
-        "url", extract_html_udf(F.col("html")).alias("t")
-    )
-    assert "Exchange" not in _plan(non_pdf)
+    light = light_branch(with_route(corpus_df(spark, n=40)))
+    assert "Exchange" not in _plan(light)
 
 
-def test_page_level_parallelism_adds_exactly_one_exchange(spark):
+def test_extract_corpus_plan_has_three_exchanges(spark):
+    """The heavy branch's documented shuffle census: salted repartition,
+    page respread, groupBy(url) assembly — and none on the light branch."""
     import re
 
-    def n_exchanges(df) -> int:
-        # formatted plans list each operator in the tree AND in the details
-        # section — count operator ids, not substring occurrences
-        return len(re.findall(r"^\(\d+\) Exchange", _plan(df), re.M))
-
-    docs = corpus_df(spark, n=40)
-    base = n_exchanges(extract_corpus(docs, page_level_parallelism=False))
-    spread = n_exchanges(extract_corpus(docs, page_level_parallelism=True))
-    assert spread == base + 1
-
-
-def test_page_level_parallelism_preserves_results(spark):
-    docs = corpus_df(spark, n=60, num_partitions=4)
-    golden = golden_df(spark, n=60).alias("g")
-    ours = extract_corpus(docs, page_level_parallelism=True).alias("o")
-    bad = (
-        ours.join(golden, F.col("o.url") == F.col("g.url"), "full_outer")
-        .filter(
-            F.col("o.url").isNull()
-            | F.col("g.url").isNull()
-            | ~F.col("o.extracted_text").eqNullSafe(F.col("g.extracted_text"))
-            | ~F.col("o.n_pages").eqNullSafe(F.col("g.n_pages"))
-        )
-        .count()
-    )
-    assert bad == 0
+    # formatted plans list each operator in the tree AND in the details
+    # section — count operator ids, not substring occurrences
+    plan = _plan(extract_corpus(corpus_df(spark, n=40)))
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 3
 
 
 def test_ann_topk_limits_before_exchange(spark):

@@ -35,7 +35,7 @@ def test_gated_engine_fails_cleanly_without_torch():
     with pytest.raises(NotImplementedError, match="torch"):
         ocr.get_engine("nanonets")
     # the failed construction must not poison the singleton
-    assert ocr.get_engine("stub").ocr_batch([None]) == [""]
+    assert ocr.get_engine("stub").ocr_batch_scored([None]) == ([""], [0.0])
 
 
 @pytest.mark.realmodel
