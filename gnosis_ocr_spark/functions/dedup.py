@@ -861,15 +861,17 @@ def duplicate_clusters(
         before = _persistent_rdd_ids(sc)
         sk = sketches.localCheckpoint(eager=True)
         sk_ids = _persistent_rdd_ids(sc) - before
-    edges = gen(
-        docs, id_col=id_col, text_col=text_col, threshold=threshold,
-        sketches=sk, **minhash_kwargs,
-    ).select("a", "b")
-    labels = connected_components(edges, checkpoint_dir=checkpoint_dir)
-    # the label table no longer references the sketch frame (the edge set
-    # was materialized inside connected_components) — drop its blocks now
-    _unpersist_rdd_ids(sc, sk_ids)
-    return labels
+    try:
+        edges = gen(
+            docs, id_col=id_col, text_col=text_col, threshold=threshold,
+            sketches=sk, **minhash_kwargs,
+        ).select("a", "b")
+        return connected_components(edges, checkpoint_dir=checkpoint_dir)
+    finally:
+        # the label table no longer references the sketch frame (the edge
+        # set was materialized inside connected_components) — drop its
+        # blocks now, and on failure too
+        _unpersist_rdd_ids(sc, sk_ids)
 
 
 def duplicate_clusters_seeded(

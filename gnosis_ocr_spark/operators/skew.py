@@ -11,6 +11,12 @@ the cluster. Deterministic (no rand()) so retried/resumed runs place rows
 identically — required for idempotent re-execution. At 100 TB this is the
 difference between a 1000-executor stage finishing together and one executor
 grinding on the giant-PDF bucket.
+
+Width: the caller's ``num_partitions``, else ``sparkContext.defaultParallelism``
+(``spark.default.parallelism``: the cluster's cores unless set). The count is
+always explicit because the shuffled bytes are tiny next to the work they
+carry — a count left to ``spark.sql.shuffle.partitions`` is coalesced by AQE
+to a single task.
 """
 
 from __future__ import annotations
@@ -32,22 +38,10 @@ def salted_repartition(
     url_col: str = "url",
     salt_factor: int | None = None,
 ) -> DataFrame:
-    # salt cardinality must be ≥ the partition count, or a single hot size
-    # bucket (e.g. the giant-PDF bucket) can only reach salt_factor
-    # partitions. When the caller doesn't pin num_partitions, the
-    # repartition below uses spark.sql.shuffle.partitions — size the salt
-    # from THAT (the default path previously salted 64 ways under a
-    # 200-partition shuffle, idling 2/3 of the cluster on the hot bucket)
-    if salt_factor is None:
-        if num_partitions:
-            salt_factor = max(64, 4 * num_partitions)
-        else:
-            target = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            salt_factor = max(64, 4 * target)
+    # salt cardinality must be ≥ the partition count, or a hot size bucket
+    # (the giant-PDF bucket) can only reach salt_factor partitions
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    salt_factor = salt_factor or max(64, 4 * n)
     bucket = size_bucket_col(html_col)
     salt = (F.crc32(F.col(url_col).cast("string")) % salt_factor).alias("salt")
-    if num_partitions:
-        return df.repartition(num_partitions, bucket, salt)
-    return df.repartition(bucket, salt)
+    return df.repartition(n, bucket, salt)

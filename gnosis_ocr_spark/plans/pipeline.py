@@ -75,12 +75,16 @@ def extract_corpus(
 ) -> DataFrame:
     """documents → (url, extracted_text, n_pages, route, ocr_confidence).
 
-    ``pdf_partitions`` sizes the salted PDF repartition and the page
-    respread (default: spark.sql.shuffle.partitions; AQE coalesces small
-    outputs). ``ocr_confidence`` is the page-average of the OCR engine's
-    per-page score on the heavy branch (aggregated inside the existing
-    assembly groupBy — no extra shuffle); light extraction is not model
-    inference, so that branch reports 1.0 for non-empty text and 0.0 for
+    ``pdf_partitions`` is the heavy branch's width: the salted PDF
+    repartition, the page respread and the coalesced assembly output all
+    run that many tasks (default: ``sparkContext.defaultParallelism``, one
+    task per core). The count is explicit because AQE would coalesce these
+    byte-light, CPU-heavy exchanges to one task.
+
+    ``ocr_confidence`` is the page-average of the OCR engine's per-page
+    score on the heavy branch (aggregated inside the existing assembly
+    groupBy — no extra shuffle); light extraction is not model inference,
+    so that branch reports 1.0 for non-empty text and 0.0 for
     empty/unparseable rows.
     """
     routed = with_route(docs)
@@ -98,19 +102,18 @@ def extract_corpus(
     # heavy branch: PDFs, multi-page TIFFs and images share one topology —
     # the split stage re-sniffs the magic per blob and emits a route column
     # that rides the existing exchanges (no extra shuffle)
+    n = pdf_partitions or docs.sparkSession.sparkContext.defaultParallelism
     heavy = routed.filter(F.col("route").isin(*HEAVY_ROUTES)).select("url", "html")
-    pages = split_pdf_text_pages(
-        salted_repartition(heavy, pdf_partitions), with_route=True
-    )
+    pages = split_pdf_text_pages(salted_repartition(heavy, n), with_route=True)
     # spread a giant document's pages across the cluster BEFORE the heavy
     # per-page stage
-    pages = pages.repartition(
-        *([pdf_partitions] if pdf_partitions else []), "url", "page_no"
-    )
+    pages = pages.repartition(n, "url", "page_no")
     # fused raster+OCR: pixels never cross the Arrow boundary (see
     # operators/pdf_split.raster_ocr_pages)
     ocred = raster_ocr_pages(
         pages, ocr_engine=ocr_engine, raster=raster, with_confidence=True
     )
-    # assembly folds the per-page route into the same sort-aggregate
-    return light.unionByName(assemble_documents(ocred))
+    # assembly folds the per-page route into the same sort-aggregate; the
+    # coalesce (no exchange) keeps the stages above the union at n tasks
+    # instead of spark.sql.shuffle.partitions
+    return light.unionByName(assemble_documents(ocred).coalesce(n))

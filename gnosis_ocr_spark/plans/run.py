@@ -14,18 +14,23 @@ Spark restatement of the reference's restart-safety design (SURVEY.md §2.9):
   no-op; a killed run re-processes only unfinished urls. Replayed tasks
   cannot duplicate final state because the canonical view dedups on
   (url, latest run) — at-least-once execution, exactly-once table semantics.
-- per-partition lineage + metrics (north rule): each task appends one row
-  (run_id, partition_id, url_count, page_count, char_count, elapsed_sec,
-  docs_per_sec, pages_per_sec) — the analog of the reference's per-page
-  status writes, but O(partitions) not O(pages).
+  A fresh run (empty manifest) skips the join: an anti-join against an
+  empty set is the identity, and planning it would shuffle every input
+  blob by url.
+- per-partition lineage + metrics (north rule): one row per partition of
+  the run's output (run_id, partition_id = ``spark_partition_id()`` over
+  the union, url_count, page_count, char_count, ocr_confidence) — the
+  analog of the reference's per-page status writes, but O(partitions) not
+  O(pages). ``elapsed_sec`` is the driver-timed wall of the materializing
+  count, the same on every row of a run, so ``docs_per_sec`` and
+  ``pages_per_sec`` sum across partitions to the run's rates. No extra
+  Python stage tags the rows.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,29 +46,6 @@ METRICS_SCHEMA = (
 RESULTS_SCHEMA = (
     "url string, extracted_text string, n_pages int, route string, run_id string"
 )
-
-
-def _with_partition_metrics(result: DataFrame) -> DataFrame:
-    """Compute per-partition metrics in the same pass as the results
-    (mapInPandas with TaskContext), returning results + a metrics row tag.
-    (The run_id tag is applied by the caller via F.lit.)"""
-    schema = (
-        "url string, extracted_text string, n_pages int, route string, "
-        "ocr_confidence double, partition_id int, elapsed_sec double"
-    )
-
-    def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        start = time.monotonic()
-        for b in batches:
-            b = b.copy()
-            b["partition_id"] = pid
-            b["elapsed_sec"] = time.monotonic() - start
-            yield b
-
-    return result.mapInPandas(tag, schema=schema)
 
 
 def run_extraction(
@@ -93,17 +75,21 @@ def run_extraction(
         # partially-resumed run previously reported skipped_done=0, making
         # the resume indistinguishable from a fresh run in the metrics)
         n_done = done.distinct().count()
-        todo = docs.join(done, "url", "left_anti")
+        if n_done:
+            todo = docs.join(done, "url", "left_anti")
 
-    tagged = _with_partition_metrics(
-        extract_corpus(todo, ocr_engine=ocr_engine, raster=raster)
+    tagged = extract_corpus(todo, ocr_engine=ocr_engine, raster=raster).withColumn(
+        "partition_id", F.spark_partition_id()
     )
     tagged = tagged.persist()
     try:
         # count AFTER persist: this materializes the cache the three writes
         # below reuse — no separate pre-count scan of the (100 TB) input
-        # (round-1 review flagged the extra job)
+        # (round-1 review flagged the extra job). Its wall is the run's
+        # extraction time.
+        start = time.monotonic()
         n_todo = tagged.count()
+        elapsed = time.monotonic() - start
         if n_todo == 0:
             return {"processed": 0, "skipped_done": n_done or docs.count()}
         results = tagged.select(
@@ -117,7 +103,6 @@ def run_extraction(
             F.count("*").alias("url_count"),
             F.sum("n_pages").alias("page_count"),
             F.sum(F.length("extracted_text")).alias("char_count"),
-            F.max("elapsed_sec").alias("elapsed_sec"),
             # per-partition mean OCR confidence (north_star metrics list):
             # the document-level page-average from the engine's scored
             # protocol (real model: mean token logprob; stub: deterministic
@@ -129,13 +114,9 @@ def run_extraction(
             F.col("url_count").cast("long"),
             F.col("page_count").cast("long"),
             F.col("char_count").cast("long"),
-            "elapsed_sec",
-            (F.col("url_count") / F.greatest(F.col("elapsed_sec"), F.lit(1e-9))).alias(
-                "docs_per_sec"
-            ),
-            (F.col("page_count") / F.greatest(F.col("elapsed_sec"), F.lit(1e-9))).alias(
-                "pages_per_sec"
-            ),
+            F.lit(elapsed).alias("elapsed_sec"),
+            (F.col("url_count") / elapsed).alias("docs_per_sec"),
+            (F.col("page_count") / elapsed).alias("pages_per_sec"),
             "ocr_confidence",
         )
         tables.append(metrics, metrics_path)

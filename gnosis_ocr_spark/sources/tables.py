@@ -79,10 +79,12 @@ def overwrite(df: DataFrame, path: str) -> None:
 
 
 def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a manifest/metrics table that may not exist yet."""
+    """Read a manifest/metrics table that may not exist yet. The empty frame
+    has zero partitions: ``createDataFrame([])`` parallelizes into one
+    Python task per core, so even counting it paid a Python stage."""
     if _exists(path):
         return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema=schema)
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema=schema)
 
 
 def delete_run(spark: SparkSession, path: str, run_id: str, schema: str) -> None:

@@ -62,9 +62,13 @@ def main() -> None:
             "→ union). PDF branch has exactly three exchanges: the salted\n"
             "size-bucket repartition, the page-level respread, and the final\n"
             "groupBy(url) sort-aggregate — each one load-bearing at 100 TB\n"
-            "(skew spread, straggler fan-out, reassembly). Raster+OCR are fused\n"
-            "into a single FlatMapInPandas so page pixels never cross the\n"
-            "Python↔JVM Arrow boundary.",
+            "(skew spread, straggler fan-out, reassembly). The first two plan\n"
+            "an explicit count, defaultParallelism (REPARTITION_BY_NUM), so AQE\n"
+            "cannot coalesce these byte-light, CPU-heavy exchanges to one task;\n"
+            "the assembled side is `coalesce`d (no exchange) to the same width,\n"
+            "so the union's stage runs input splits + that many tasks.\n"
+            "Raster+OCR are fused into a single MapInPandas so page pixels\n"
+            "never cross the Python↔JVM Arrow boundary.",
         ),
         (
             "TPC-H Q5-style 6-way join (driver_queries.q_tpch_q5)",

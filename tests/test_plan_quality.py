@@ -1,11 +1,16 @@
 """Plan-quality assertions: the physical plans the judge would want —
 predicate pushdown reaching the parquet scan, dims broadcast, the non-PDF
-extraction branch shuffle-free, and the heavy branch's three exchanges."""
+extraction branch shuffle-free, the heavy branch's three exchanges pinned
+to one task per core, and a fresh run with no resume join and no extra
+Python stage."""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
+
+import pytest
 
 from gnosis_ocr_spark.corpus import corpus_df
 from gnosis_ocr_spark.plans.driver_queries import q_tpch_q3, q_tpch_q5
@@ -44,20 +49,84 @@ def test_non_pdf_branch_is_shuffle_free(spark):
 def test_extract_corpus_plan_has_three_exchanges(spark):
     """The heavy branch's documented shuffle census: salted repartition,
     page respread, groupBy(url) assembly — and none on the light branch."""
-    import re
-
     # formatted plans list each operator in the tree AND in the details
     # section — count operator ids, not substring occurrences
     plan = _plan(extract_corpus(corpus_df(spark, n=40)))
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 3
 
 
+def test_heavy_exchanges_pinned_to_default_parallelism(spark):
+    """With ``pdf_partitions`` unset, the salted repartition and the page
+    respread plan an explicit count (REPARTITION_BY_NUM, which AQE does not
+    coalesce to one task) of ``defaultParallelism`` partitions."""
+    plan = _plan(extract_corpus(corpus_df(spark, n=40)))
+    counts = re.findall(
+        r"^Arguments: hashpartitioning\(.*, (\d+)\), REPARTITION_BY_NUM", plan, re.M
+    )
+    assert counts == [str(spark.sparkContext.defaultParallelism)] * 2
+
+
+def _distinct_operators(plan: str, name: str) -> set[str]:
+    """Detail blocks of the ``name`` operators in a formatted plan. An AQE
+    plan lists each operator under its final and its initial plan, with the
+    same details, so distinct blocks count operators."""
+    blocks = re.findall(r"^\(\d+\) (\w+).*\n((?:.+\n)*)", plan, re.M)
+    return {body for op, body in blocks if op == name}
+
+
+@pytest.fixture(scope="module")
+def fresh_run_plan(spark, tmp_path_factory):
+    """Physical plan of a fresh run's materializing count, read from the SQL
+    status store: the SQL execution of the run's job group that scans the
+    persisted frame without writing a table."""
+    from gnosis_ocr_spark.plans.run import run_extraction
+
+    sc = spark.sparkContext
+    group = "test_plan_quality.fresh_run"
+    sc.setJobGroup(group, group)
+    try:
+        out = str(tmp_path_factory.mktemp("fresh") / "run")
+        run_extraction(spark, corpus_df(spark, n=40, num_partitions=4), out, run_id="r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    seq = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    plans = [
+        e.physicalPlanDescription()
+        for e in seq(store.executionsList())
+        if jobs & {int(j) for j in seq(e.jobs().keySet())}
+    ]
+    (plan,) = [
+        p for p in plans
+        if "InMemoryRelation" in p and "InsertIntoHadoopFsRelationCommand" not in p
+    ]
+    return plan
+
+
+def test_fresh_run_plans_no_resume_join(fresh_run_plan):
+    """An empty manifest means nothing to skip: no anti-join, so no
+    url-hash exchange over the input scans."""
+    assert "Join" not in fresh_run_plan
+    scan_urls = re.findall(
+        r"^\(\d+\) Scan .*\nOutput \[\d+\]: \[(url#\d+)", fresh_run_plan, re.M
+    )
+    assert len(scan_urls) == 2  # the light and the heavy branch's scans
+    for url in scan_urls:
+        assert f"hashpartitioning({url}," not in fresh_run_plan
+
+
+def test_run_plan_python_operator_census(fresh_run_plan):
+    """One Python operator per extraction step — the light UDF, the page
+    split, the fused raster+OCR — and no per-row tag stage on top."""
+    assert len(_distinct_operators(fresh_run_plan, "ArrowEvalPython")) == 1
+    assert len(_distinct_operators(fresh_run_plan, "MapInPandas")) == 2
+
+
 def test_ann_topk_limits_before_exchange(spark):
     """The per-query top-k must apply map-side (WindowGroupLimit below the
     rank exchange) so only k candidates per partition shuffle — the property
     that keeps bucketed ANN viable at huge corpus sizes."""
-    import re
-
     from gnosis_ocr_spark.plans.driver_queries import (
         q_ivf_cosine_topk,
         q_lsh_cosine_topk,
@@ -74,8 +143,6 @@ def test_ann_topk_limits_before_exchange(spark):
 def test_ann_replica_corpus_is_single_extra_scan(spark):
     """The replica corpus builds with ONE extra embeddings scan (explode over
     sequence), not one scan per replica."""
-    import re
-
     from gnosis_ocr_spark.plans.driver_queries import _emb_with_query_copies
 
     plan = _plan(_emb_with_query_copies(spark, SF))

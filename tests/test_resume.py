@@ -81,6 +81,17 @@ def test_metrics_lineage_written(spark, tmp_path):
     assert agg["pages"] == golden_pages
     assert metrics.filter(F.col("partition_id") < 0).count() == 0
 
+    rows = metrics.collect()
+    # one run-wide wall on every row, so the per-partition rates sum to the
+    # run's rates
+    (elapsed,) = {r["elapsed_sec"] for r in rows}
+    assert elapsed > 0
+    assert abs(sum(r["docs_per_sec"] for r in rows) * elapsed - agg["urls"]) < 1e-6 * N
+    assert abs(sum(r["pages_per_sec"] for r in rows) * elapsed - agg["pages"]) < (
+        1e-6 * golden_pages
+    )
+    assert len({r["partition_id"] for r in rows}) == len(rows)
+
 
 def test_canonical_latest_wins_by_time_not_lexicographic(spark, tmp_path):
     """Regression (round-2 advice): run 'r10' finishing after 'r9' must win

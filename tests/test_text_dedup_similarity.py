@@ -223,6 +223,25 @@ def test_duplicate_clusters_end_to_end(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def test_duplicate_clusters_releases_sketches_on_failure(spark, monkeypatch):
+    """A components step that raises must not leak the eagerly persisted
+    sketch blocks into the session."""
+    import pytest
+
+    from gnosis_ocr_spark.functions import dedup
+
+    def boom(edges, **kwargs):
+        raise RuntimeError("components failed")
+
+    monkeypatch.setattr(dedup, "connected_components", boom)
+    df = _docs(spark, [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")])
+    sc = spark.sparkContext
+    before = dedup._persistent_rdd_ids(sc)
+    with pytest.raises(RuntimeError, match="components failed"):
+        dedup.duplicate_clusters(df)
+    assert dedup._persistent_rdd_ids(sc) == before
+
+
 def test_duplicate_clusters_seeded_equals_base(spark):
     """r6: the exact-dedup-seeded clustering (shingles run on canonicals
     only) must emit exactly the base operator's (id, component) set — on a
