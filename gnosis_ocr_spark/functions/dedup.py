@@ -44,7 +44,6 @@ def cap_bucket_members(
     bucket_cols: list[str],
     id_col: str,
     max_bucket_size: int,
-    log_truncation: bool = True,
     context: str = "bucket",
 ) -> DataFrame:
     """Deterministically truncate each bucket to its ``max_bucket_size``
@@ -57,31 +56,29 @@ def cap_bucket_members(
     APIs take this cap; the pair CONSUMER (clustering) uses star edges instead
     (see :func:`minhash_star_edges`), which need no cap.
 
-    NO SILENT CAPS: when ``log_truncation`` is set (default), a small count
-    aggregate runs eagerly and the number of truncated buckets / dropped rows
-    is logged at WARNING. The extra job is a map-side-combined count over the
-    bucketed rows — cheap relative to the pair join it protects, and only paid
-    when a cap is requested.
+    NO SILENT CAPS: a small count aggregate runs eagerly and the number of
+    truncated buckets / dropped rows is logged at WARNING. The extra job is a
+    map-side-combined count over the bucketed rows — cheap relative to the
+    pair join it protects, and only paid when a cap is requested.
     """
     w = Window.partitionBy(*bucket_cols).orderBy(id_col)
     ranked = df.withColumn("_rk", F.row_number().over(w))
-    if log_truncation:
-        dropped = ranked.filter(F.col("_rk") > max_bucket_size)
-        stats = dropped.agg(
-            F.count("*").alias("rows_dropped"),
-            F.count_distinct(*[F.col(c) for c in bucket_cols]).alias(
-                "buckets_truncated"
-            ),
-        ).first()
-        if stats["rows_dropped"]:
-            LOG.warning(
-                "%s: capped %d bucket(s) at %d members, dropping %d row(s) "
-                "from pair generation",
-                context,
-                stats["buckets_truncated"],
-                max_bucket_size,
-                stats["rows_dropped"],
-            )
+    dropped = ranked.filter(F.col("_rk") > max_bucket_size)
+    stats = dropped.agg(
+        F.count("*").alias("rows_dropped"),
+        F.count_distinct(*[F.col(c) for c in bucket_cols]).alias(
+            "buckets_truncated"
+        ),
+    ).first()
+    if stats["rows_dropped"]:
+        LOG.warning(
+            "%s: capped %d bucket(s) at %d members, dropping %d row(s) "
+            "from pair generation",
+            context,
+            stats["buckets_truncated"],
+            max_bucket_size,
+            stats["rows_dropped"],
+        )
     return ranked.filter(F.col("_rk") <= max_bucket_size).drop("_rk")
 
 # ---------------------------------------------------------------- exact
@@ -241,7 +238,6 @@ def lsh_candidate_pairs(
     bands: int = 8,
     rows: int = 4,
     max_bucket_size: int | None = None,
-    log_truncation: bool = True,
 ) -> DataFrame:
     """(a, b) candidate pairs sharing ≥1 LSH band. Pairs are oriented a < b.
 
@@ -264,7 +260,6 @@ def lsh_candidate_pairs(
             ["band_id", "band_hash"],
             "doc_id",
             max_bucket_size,
-            log_truncation,
             context="lsh_candidate_pairs",
         )
     left = banded.alias("l")
@@ -369,7 +364,6 @@ def minhash_near_duplicates(
     shingle_words: int = SHINGLE_WORDS,
     sketch_size: int = SKETCH_SIZE,
     max_bucket_size: int | None = None,
-    sketches: DataFrame | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → bottom-s Jaccard verification.
 
@@ -385,17 +379,13 @@ def minhash_near_duplicates(
     never wrong pairs). Verification row width is bounded at ``sketch_size``
     bigints per side (the full-``collect_set`` join was unbounded in document
     length). ``max_bucket_size`` caps hot-bucket pair output (logged, never
-    silent); the clustering consumer should prefer :func:`minhash_star_edges`.
-
-    ``sketches``: optionally inject a precomputed (ideally materialized)
-    :func:`shingle_sketches` frame over the SAME docs/params — the verify
-    step references it twice, so a caller that checkpoints it (as
-    :func:`duplicate_clusters` does) pays the sketch plan once."""
+    silent). This is the pair-REPORTING API; clustering goes through
+    :func:`duplicate_clusters`, whose :func:`minhash_star_edges` emits O(B)
+    edges per identical-content cluster instead of O(B²) pairs."""
     assert bands * rows == k
     sigs = minhash_signature(docs, id_col, text_col, k, shingle_words)
     cands = lsh_candidate_pairs(sigs, bands, rows, max_bucket_size=max_bucket_size)
-    if sketches is None:
-        sketches = shingle_sketches(docs, id_col, text_col, shingle_words, sketch_size)
+    sketches = shingle_sketches(docs, id_col, text_col, shingle_words, sketch_size)
     return _verify_pairs(cands, sketches, threshold, sketch_size)
 
 
@@ -434,21 +424,23 @@ def minhash_star_edges(
        with the bottom-s sketch Jaccard as usual (distinct-sketch near-dups
        are genuinely near, not identical, so their buckets are small).
 
-    Component equivalence: within a sketch group, pairs mode connects
-    members pairwise (every such pair verifies at 1.0) and star mode through
-    the rep — the same component. Across groups both modes use the same
-    banded-LSH + verify machinery, restricted to reps here; sub-threshold
-    linkage is approximate in BOTH modes (LSH recall), and the driver-oracle
-    regime (threshold=1.0, verbatim copies) is provably identical. See
-    VERDICT r2 "What's wrong #1".
+    Component equivalence with the full pair graph of
+    :func:`minhash_near_duplicates`: within a sketch group the pair graph
+    connects members pairwise (every such pair verifies at 1.0) and the
+    star through the rep — the same component. Across groups both use the
+    same banded-LSH + verify machinery, restricted to reps here; sub-
+    threshold linkage is approximate in both (LSH recall), and the
+    driver-oracle regime (threshold=1.0, verbatim copies) is provably
+    identical — tests/test_star_edges.py checks the components against a
+    pair-graph reference built from :func:`minhash_near_duplicates`.
 
     ``sketches``: optionally inject a precomputed (ideally materialized)
     :func:`shingle_sketches` frame over the SAME docs/params. This plan
     references the sketch frame three times (star collapse + both verify
     sides); a caller that checkpoints it first — :func:`duplicate_clusters`
-    does, with eager cleanup — pays the sketch plan once instead of
-    re-deriving it per reference (r6; measured 2.3 s/reference at sf0.1
-    over the curate corpus).
+    does, and releases it before returning — pays the sketch plan once
+    instead of re-deriving it per reference (r6; measured 2.3 s/reference
+    at sf0.1 over the curate corpus).
     """
     assert bands * rows == k
     if sketches is None:
@@ -534,8 +526,6 @@ def simhash_near_duplicates(
     text_col: str = "text",
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
-    log_truncation: bool = True,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """(a, b, hamming): pairs within ``max_hamming`` bits.
 
@@ -553,28 +543,21 @@ def simhash_near_duplicates(
     capped per bucket via ``max_bucket_size`` (logged, never silent).
 
     Note the output is star-compressed within identical-signature groups:
-    consumers that need every within-group pair explicitly can expand a
-    group's star (all members share one rep) or pass
-    ``collapse_identical=False`` for the legacy all-pairs form (ONLY safe on
-    corpora without boilerplate mega-clusters — B² within-group pairs), but
-    the clustering consumer — the only one that scales anyway — gets
-    identical connected components from the star form.
+    a consumer that needs every within-group pair expands a group's star
+    (all members share one rep); the clustering consumer gets identical
+    connected components from the star form.
     """
     sigs = simhash(docs, id_col, text_col)
-    if collapse_identical:
-        rep_w = F.min("doc_id").over(Window.partitionBy("simhash"))
-        with_rep = sigs.select("doc_id", "simhash", rep_w.alias("rep"))
-        star = with_rep.filter(F.col("doc_id") != F.col("rep")).select(
-            F.col("rep").alias("a"),
-            F.col("doc_id").alias("b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-        reps_only = with_rep.filter(F.col("doc_id") == F.col("rep")).select(
-            "doc_id", "simhash"
-        )
-    else:
-        star = None
-        reps_only = sigs
+    rep_w = F.min("doc_id").over(Window.partitionBy("simhash"))
+    with_rep = sigs.select("doc_id", "simhash", rep_w.alias("rep"))
+    star = with_rep.filter(F.col("doc_id") != F.col("rep")).select(
+        F.col("rep").alias("a"),
+        F.col("doc_id").alias("b"),
+        F.lit(0).cast("int").alias("hamming"),
+    )
+    reps_only = with_rep.filter(F.col("doc_id") == F.col("rep")).select(
+        "doc_id", "simhash"
+    )
     quarters = reps_only.select(
         "doc_id",
         "simhash",
@@ -594,7 +577,6 @@ def simhash_near_duplicates(
             ["q_id", "q_val"],
             "doc_id",
             max_bucket_size,
-            log_truncation,
             context="simhash_near_duplicates",
         )
     l, r = quarters.alias("l"), quarters.alias("r")
@@ -613,25 +595,40 @@ def simhash_near_duplicates(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    return rep_pairs if star is None else rep_pairs.unionByName(star)
+    return rep_pairs.unionByName(star)
 
 
 # ---------------------------------------------------------------- clustering
 
 
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of currently persisted RDDs — the before/after diff attributes
-    blocks created by an eager localCheckpoint to the enclosing call (same
-    single-writer assumption as connected_components' _save)."""
-    jsc = sc._jsc
-    return {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
+def _materialize(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage: a ``localCheckpoint``
+    (blocks on executor storage) by default, a reliable ``checkpoint`` into
+    ``checkpoint_dir`` (files that survive executor loss) when one is given.
+    Pair every call with :func:`_release` once the frame is dead."""
+    if checkpoint_dir is None:
+        return df.localCheckpoint(eager=True)
+    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    return df.checkpoint(eager=True)
 
 
-def _unpersist_rdd_ids(sc, ids: set[int]) -> None:
-    jsc = sc._jsc
-    for e in jsc.getPersistentRDDs().entrySet().toArray():
-        if e.getKey() in ids:
-            e.getValue().unpersist(False)
+def _release(df: DataFrame) -> None:
+    """Drop what :func:`_materialize` stored for ``df``: unpersist its local
+    blocks, or delete its ``rdd-*`` checkpoint directory. The frame's own
+    RDD is its ``LogicalRDD`` leaf, so nothing else in the session is
+    touched. Eager on purpose: localCheckpoint blocks are otherwise held
+    until the async ContextCleaner notices the dropped reference (measured
+    as a broad slowdown of every later query in the session; at 100 TB the
+    residue evicts useful cache), and reliable checkpoint files are never
+    deleted at all."""
+    rdd = df._jdf.queryExecution().logical().rdd()
+    ckpt = rdd.getCheckpointFile()
+    if ckpt.isDefined():
+        sc = df.sparkSession.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+    else:
+        rdd.unpersist(False)
 
 
 def connected_components(
@@ -673,46 +670,24 @@ def connected_components(
     long multi-executor run; localCheckpoint remains the low-latency local
     default.
 
-    Superseded rounds are unpersisted EAGERLY (only the final label table
-    stays pinned): localCheckpoint blocks are otherwise held until the
-    async ContextCleaner notices the dropped references, so every round of
-    every clustering call would stack ~3 materialized tables into executor
-    storage — measured here as a broad slowdown of every query that shares
-    the session afterwards, and at 100 TB the same residue evicts useful
-    cache and forces shuffle spill."""
-    jsc = edges.sparkSession.sparkContext._jsc
+    Every materialized round goes through :func:`_materialize` and is
+    released by :func:`_release` as soon as it is superseded; a ``finally``
+    releases the rest, so on success only the returned label table stays
+    stored (blocks, or one ``rdd-*`` directory), and on the ``max_iter``
+    RuntimeError or a failed job every frame materialized so far is
+    released. (A job that fails INSIDE an eager checkpoint leaves that one
+    RDD behind: Spark builds the checkpointed frame only after its job
+    succeeds, so there is no frame to release.)"""
+    held: list[DataFrame] = []  # materialized frames not yet released
 
-    def _persistent_ids() -> set[int]:
-        return {
-            e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()
-        }
+    def save(df: DataFrame) -> DataFrame:
+        held.append(_materialize(df, checkpoint_dir))
+        return held[-1]
 
-    def _unpersist(ids: set[int]) -> None:
-        for e in jsc.getPersistentRDDs().entrySet().toArray():
-            if e.getKey() in ids:
-                e.getValue().unpersist(False)
-
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _save(df: DataFrame) -> tuple[DataFrame, set[int]]:
-            # reliable checkpoint: files, not storage blocks — cleanup is
-            # spark.cleaner.referenceTracking.cleanCheckpoints territory
-            return df.checkpoint(eager=True), set()
-
-    else:
-
-        def _save(df: DataFrame) -> tuple[DataFrame, set[int]]:
-            # SINGLE-WRITER ASSUMPTION: the before/after diff attributes
-            # every RDD persisted during the eager checkpoint to THIS
-            # call — an RDD another thread persists in that window would
-            # be unpersisted at the next round. The repo's bench rules
-            # already forbid concurrent Spark jobs in one session
-            # (CLAUDE.md); use checkpoint_dir= (reliable checkpoints, no
-            # diff) when sharing a session across drivers.
-            before = _persistent_ids()
-            out = df.localCheckpoint(eager=True)
-            return out, _persistent_ids() - before
+    def drop(*dead: DataFrame) -> None:
+        for df in dead:
+            held.remove(df)
+            _release(df)
 
     # symmetrize with ONE Generate instead of a self-union (r6): the union
     # referenced the lazy ``edges`` plan twice, so the whole upstream
@@ -729,92 +704,100 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    # materialize the symmetrized edge set ONCE: every propagation round
-    # joins against `sym`, and only `labels` was checkpointed — each round
-    # re-executed the whole upstream edge-generation plan (for the dedup
-    # consumers that is minhash → LSH → sketch-verify over the full corpus,
-    # re-run once per round; measured r6 at sf0.1: dedup_clusters 9.0 s →
-    # 3.4 s, curate_compose near-dup leg similar). One extra materialization
-    # job, then every round reads the stored blocks.
-    sym, sym_ids = _save(sym)
-    # initial labels FUSE the first propagation round (r6): comp₀ =
-    # min(id, min neighbor) is exactly what one round of min-propagation
-    # over comp=id produces, computed here in the same groupBy that
-    # deduplicates node ids — every graph converges one round earlier
-    # (one fewer propagation join + checkpoint + fixpoint probe; star
-    # graphs — the dedup topology — now finish with a single loop round).
-    labels = sym.groupBy("src").agg(F.min("dst").alias("_m")).select(
-        F.col("src").alias("id"),
-        F.least(F.col("src"), F.col("_m")).alias("comp"),
-    )
-    labels, cur_ids = _save(labels)
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # the change FLAG rides the propagation projection (r6): the
-        # fixpoint probe is one integer count over the materialized
-        # table — previously two DECIMAL(38) label-sum jobs per round
-        # compared totals across rounds. A propagation round that lowers
-        # ZERO labels IS the fixpoint (comp(v) ≤ comp(u) both ways
-        # across every edge ⇒ comps constant per component, and the
-        # component min keeps itself — the r5 proof), detected directly.
-        stepped = (
-            labels.join(nbr, labels["id"] == nbr["src"], "left")
-            .select(
-                labels["id"],
-                F.least(
-                    labels["comp"], F.coalesce(F.col("nbr_comp"), labels["comp"])
-                ).alias("comp"),
-                (F.coalesce(F.col("nbr_comp"), labels["comp"])
-                 < labels["comp"]).alias("_chg"),
+    keep = None  # the label table handed back; set only on convergence
+    try:
+        # materialize the symmetrized edge set ONCE: every propagation
+        # round joins against `sym`, and only `labels` was checkpointed —
+        # each round re-executed the whole upstream edge-generation plan
+        # (for the dedup consumers that is minhash → LSH → sketch-verify
+        # over the full corpus, re-run once per round; measured r6 at
+        # sf0.1: dedup_clusters 9.0 s → 3.4 s, curate_compose near-dup leg
+        # similar). One extra materialization job, then every round reads
+        # the stored blocks.
+        sym = save(sym)
+        # initial labels FUSE the first propagation round (r6): comp₀ =
+        # min(id, min neighbor) is exactly what one round of
+        # min-propagation over comp=id produces, computed here in the same
+        # groupBy that deduplicates node ids — every graph converges one
+        # round earlier (one fewer propagation join + checkpoint + fixpoint
+        # probe; star graphs — the dedup topology — now finish with a
+        # single loop round).
+        labels = save(
+            sym.groupBy("src").agg(F.min("dst").alias("_m")).select(
+                F.col("src").alias("id"),
+                F.least(F.col("src"), F.col("_m")).alias("comp"),
             )
         )
-        # materialize before the count + self-join below: the fixpoint
-        # check and both sides of the pointer jump reference this plan and
-        # would execute the propagation join repeatedly otherwise
-        stepped, stepped_ids = _save(stepped)
-        n_changed = (
-            stepped.agg(F.sum(F.col("_chg").cast("int"))).collect()[0][0]
-        )
-        stepped = stepped.select("id", "comp")
-        if not n_changed:  # 0, or None on an empty edge set
-            # propagation fixpoint ⇒ fully converged (docstring proof);
-            # the pointer-jump join is pure acceleration and is skipped
-            _unpersist(cur_ids)
-            labels, cur_ids = stepped, stepped_ids
-            break
-        # pointer jumping: follow the label's own label (comp[comp]) — the
-        # doubling step that turns O(diameter) convergence into O(log d)
-        parent = stepped.select(
-            F.col("id").alias("pid"), F.col("comp").alias("pcomp")
-        )
-        new_labels = (
-            stepped.join(parent, stepped["comp"] == parent["pid"], "left")
-            .select(
-                stepped["id"],
-                F.least(
-                    stepped["comp"], F.coalesce(F.col("pcomp"), stepped["comp"])
-                ).alias("comp"),
+        for _ in range(max_iter):
+            nbr = (
+                sym.join(labels, sym["dst"] == labels["id"])
+                .groupBy("src")
+                .agg(F.min("comp").alias("nbr_comp"))
             )
-        )
-        new_labels, new_ids = _save(new_labels)
-        # this round's intermediate + the superseded label table are dead
-        # now that new_labels is materialized
-        _unpersist(stepped_ids | cur_ids)
-        labels, cur_ids = new_labels, new_ids
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(pointer-jumping covers diameter ~2^rounds — this indicates a bug "
-            "or an adversarial graph, not normal dedup input)"
-        )
-    # the final label table no longer references sym — drop its blocks now
-    # (same eager-cleanup rationale as the superseded label tables)
-    _unpersist(sym_ids)
-    return labels.select("id", F.col("comp").alias("component"))
+            # the change FLAG rides the propagation projection (r6): the
+            # fixpoint probe is one integer count over the materialized
+            # table — previously two DECIMAL(38) label-sum jobs per round
+            # compared totals across rounds. A propagation round that
+            # lowers ZERO labels IS the fixpoint (comp(v) ≤ comp(u) both
+            # ways across every edge ⇒ comps constant per component, and
+            # the component min keeps itself — the r5 proof), detected
+            # directly. Materialized before the count + self-join below:
+            # the fixpoint check and both sides of the pointer jump
+            # reference this plan and would execute the propagation join
+            # repeatedly otherwise.
+            stepped = save(
+                labels.join(nbr, labels["id"] == nbr["src"], "left").select(
+                    labels["id"],
+                    F.least(
+                        labels["comp"],
+                        F.coalesce(F.col("nbr_comp"), labels["comp"]),
+                    ).alias("comp"),
+                    (F.coalesce(F.col("nbr_comp"), labels["comp"])
+                     < labels["comp"]).alias("_chg"),
+                )
+            )
+            n_changed = (
+                stepped.agg(F.sum(F.col("_chg").cast("int"))).collect()[0][0]
+            )
+            if not n_changed:  # 0, or None on an empty edge set
+                # propagation fixpoint ⇒ fully converged (docstring proof);
+                # the pointer-jump join is pure acceleration and is skipped
+                drop(labels)
+                labels = stepped
+                break
+            # pointer jumping: follow the label's own label (comp[comp]) —
+            # the doubling step that turns O(diameter) convergence into
+            # O(log d)
+            cur = stepped.select("id", "comp")
+            parent = cur.select(
+                F.col("id").alias("pid"), F.col("comp").alias("pcomp")
+            )
+            new_labels = save(
+                cur.join(parent, cur["comp"] == parent["pid"], "left").select(
+                    cur["id"],
+                    F.least(
+                        cur["comp"], F.coalesce(F.col("pcomp"), cur["comp"])
+                    ).alias("comp"),
+                )
+            )
+            # this round's intermediate + the superseded label table are
+            # dead now that new_labels is materialized
+            drop(stepped, labels)
+            labels = new_labels
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                "(pointer-jumping covers diameter ~2^rounds — this indicates a "
+                "bug or an adversarial graph, not normal dedup input)"
+            )
+        keep = labels
+    finally:
+        # the final label table no longer references sym — on success
+        # everything else is dead, on failure everything is
+        for df in held:
+            if df is not keep:
+                _release(df)
+    return keep.select("id", F.col("comp").alias("component"))
 
 
 def duplicate_clusters(
@@ -822,142 +805,45 @@ def duplicate_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 1.0,
-    edge_mode: str = "star",
     checkpoint_dir: str | None = None,
     **minhash_kwargs,
 ) -> DataFrame:
-    """Full dedup-clustering pipeline: MinHash+LSH edges → connected
+    """Full dedup-clustering pipeline: MinHash+LSH star edges → connected
     components → (id, component) with component = the cluster's canonical
-    (smallest) doc id. Singleton documents (no duplicate) are not emitted.
+    (smallest) doc id. Singleton documents (no duplicate) are not emitted,
+    and neither are documents with fewer than ``shingle_words`` tokens
+    (no shingles; exact-dedup territory — see
+    :func:`minhash_near_duplicates`).
 
-    ``edge_mode='star'`` (default, the 100 TB topology) feeds the components
-    step O(B) star edges per identical-content cluster instead of O(B²)
-    pairs — identical components, see :func:`minhash_star_edges`.
-    ``edge_mode='pairs'`` keeps the full pair graph (only safe on corpora
-    without boilerplate mega-clusters). ``checkpoint_dir`` selects reliable
-    checkpointing for the iterative components step (executor-loss-tolerant;
-    see :func:`connected_components`).
+    The edges are :func:`minhash_star_edges`: O(B) star edges per
+    identical-content cluster instead of O(B²) pairs, with the same
+    components as the full pair graph. ``checkpoint_dir`` selects reliable
+    checkpointing for the sketch frame and the iterative components step
+    (executor-loss-tolerant; see :func:`connected_components`).
 
     The shingle sketch frame is materialized ONCE here (r6) and injected
     into the edge generator: the star-edge plan otherwise re-derives the
-    sketch pipeline (explode → distinct → bottom-s window → collect) per
-    reference — three times per call (star collapse + both verify sides;
-    measured 2.3 s/reference at sf0.1 over the curate corpus). Lifetime is
-    bounded inside this call: :func:`connected_components` materializes
-    the edge set eagerly as its first step, after which the sketch blocks
-    are dropped — the same eager-cleanup invariant (and single-writer
-    assumption) as the components step's own checkpoints."""
-    gen = {"star": minhash_star_edges, "pairs": minhash_near_duplicates}[edge_mode]
-    sketches = shingle_sketches(
-        docs, id_col, text_col,
-        minhash_kwargs.get("shingle_words", SHINGLE_WORDS),
-        minhash_kwargs.get("sketch_size", SKETCH_SIZE),
+    sketch pipeline per reference — three times per call (star collapse +
+    both verify sides; measured 2.3 s/reference at sf0.1 over the curate
+    corpus). Its lifetime is bounded by this call:
+    :func:`connected_components` materializes the edge set as its first
+    step, and the sketch frame is released on return and on failure."""
+    sketches = _materialize(
+        shingle_sketches(
+            docs, id_col, text_col,
+            minhash_kwargs.get("shingle_words", SHINGLE_WORDS),
+            minhash_kwargs.get("sketch_size", SKETCH_SIZE),
+        ),
+        checkpoint_dir,
     )
-    sc = docs.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        sc.setCheckpointDir(checkpoint_dir)
-        sk, sk_ids = sketches.checkpoint(eager=True), set()
-    else:
-        before = _persistent_rdd_ids(sc)
-        sk = sketches.localCheckpoint(eager=True)
-        sk_ids = _persistent_rdd_ids(sc) - before
     try:
-        edges = gen(
+        edges = minhash_star_edges(
             docs, id_col=id_col, text_col=text_col, threshold=threshold,
-            sketches=sk, **minhash_kwargs,
+            sketches=sketches, **minhash_kwargs,
         ).select("a", "b")
         return connected_components(edges, checkpoint_dir=checkpoint_dir)
     finally:
-        # the label table no longer references the sketch frame (the edge
-        # set was materialized inside connected_components) — drop its
-        # blocks now, and on failure too
-        _unpersist_rdd_ids(sc, sk_ids)
-
-
-def duplicate_clusters_seeded(
-    docs: DataFrame,
-    dup: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 1.0,
-    shingle_words: int = SHINGLE_WORDS,
-    checkpoint_dir: str | None = None,
-    **minhash_kwargs,
-) -> DataFrame:
-    """:func:`duplicate_clusters` seeded from an exact-dedup table —
-    identical ``(id, component)`` output, with shingling/sketching run on
-    the EXACT-CANONICAL documents only (r6 optimization; VERDICT r5 #4).
-
-    ``dup`` is :func:`exact_duplicates`' output over the same ``docs``
-    (the composed curation plan already computes it). Why the outputs are
-    equal: the exact fingerprint is md5 of the whitespace-collapsed
-    lowercased text, so same fingerprint ⇒ same token sequence ⇒ same
-    shingle set ⇒ same bottom-s sketch — every member of an exact group
-    would collapse onto its group's sketch group anyway, landing in the
-    same component as its canonical. Therefore
-
-    - clustering the canonicals alone finds exactly the cross-group
-      structure, with the same component ids (each canonical IS its exact
-      group's min id, so component minima are unchanged);
-    - a member maps through its canonical: ``comp(d) =
-      comp_reps(canonical(d))`` when the canonical clustered with other
-      reps, else ``canonical(d)`` when the exact group has ≥ 2 SHINGLED
-      members (they form a clique by themselves), else absent —
-      mirroring the base operator's "singletons are not emitted" and
-      "docs with < shingle_words tokens never participate" contracts.
-
-    At 100 TB verbatim copies dominate duplicate mass; this removes their
-    entire shingle/hash/sketch cost rather than (as the star collapse
-    already does) just their pair blowup. Unit-tested equal to the base
-    operator on permuted-token equal-sets, short docs, NULL text and
-    mega-groups."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    d = dup.select("doc_id", "canonical_id")
-    # exact-group size and shingle participation (identical text ⇒ the
-    # canonical's token count speaks for every member)
-    grp = d.groupBy("canonical_id").agg(F.count("*").alias("_n"))
-    reps = base.join(
-        d.filter(F.col("doc_id") == F.col("canonical_id")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    comp_reps = duplicate_clusters(
-        reps,
-        id_col="doc_id",
-        text_col="text",
-        threshold=threshold,
-        shingle_words=shingle_words,
-        checkpoint_dir=checkpoint_dir,
-        **minhash_kwargs,
-    )
-    shingled = base.select(
-        "doc_id",
-        (F.size(tokens(F.lower(F.col("text")))) >= shingle_words).alias(
-            "_sh"
-        ),
-    )
-    return (
-        d.join(grp, "canonical_id")
-        .join(shingled, "doc_id")
-        .join(
-            comp_reps.withColumnRenamed("id", "canonical_id"),
-            "canonical_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.coalesce(
-                F.col("component"),
-                F.when(
-                    (F.col("_n") >= 2) & F.col("_sh"), F.col("canonical_id")
-                ),
-            ).alias("component"),
-        )
-        .filter(F.col("component").isNotNull())
-        .select(F.col("doc_id").alias("id"), "component")
-    )
+        _release(sketches)
 
 
 # ---------------------------------------------------------------- jaccard (exact)

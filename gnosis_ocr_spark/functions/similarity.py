@@ -388,8 +388,6 @@ def embedding_near_duplicates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = None,
-    log_truncation: bool = True,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (a < b, cos ≥ threshold) via the same
     sign-LSH bucketing — self-join within buckets only.
@@ -402,9 +400,11 @@ def embedding_near_duplicates(
     byte-equal) hot buckets can additionally be bounded with
     ``max_bucket_size`` (deterministic smallest-id truncation, logged loudly
     — see dedup.cap_bucket_members). Within an identical-vector group the
-    output is star-compressed (``collapse_identical=False`` restores legacy
-    all-pairs — only safe without mega-clusters); the clustering consumer
-    gets identical connected components."""
+    output is star-compressed; the clustering consumer gets identical
+    connected components.
+
+    All-zero vectors (failed encoders) have cosine 0 with everything, each
+    other included, so they never pair."""
     from gnosis_ocr_spark.functions.dedup import cap_bucket_members
 
     planes = [_hyperplane(dim, b) for b in range(n_planes)]
@@ -412,38 +412,32 @@ def embedding_near_duplicates(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if collapse_identical:
-        # narrow-key collapse: exchange partitions on xxhash64(v) (8 bytes)
-        # while grouping stays on the exact vector — see
-        # dedup.minhash_star_edges for the full argument
-        with_h = c.withColumn("_hv", F.xxhash64("v")).repartition("_hv")
-        rep_w = F.min("vec_id").over(Window.partitionBy("_hv", "v"))
-        with_rep = with_h.select("vec_id", "v", rep_w.alias("rep"))
-        # identical-vector star edges claim cos=1.0 — true only for
-        # nonzero vectors. Zero embeddings (failed encoders) have cosine
-        # 0 with EVERYTHING incl. each other; emitting them as near-dups
-        # contradicted the collapse_identical=False path on the same data
-        nonzero = F.exists("v", lambda x: x != 0.0)
-        star = with_rep.filter(
-            (F.col("vec_id") != F.col("rep")) & nonzero
-        ).select(
-            F.col("rep").alias("a"),
-            F.col("vec_id").alias("b"),
-            F.lit(1.0).alias("cos"),
-        )
-        reps = with_rep.filter(F.col("vec_id") == F.col("rep")).select(
-            "vec_id", "v"
-        ).withColumn("bucket", F.expr(_signs_sql("v", planes)))
-    else:
-        star = None
-        reps = c.withColumn("bucket", F.expr(_signs_sql("v", planes)))
+    # narrow-key collapse: exchange partitions on xxhash64(v) (8 bytes)
+    # while grouping stays on the exact vector — see
+    # dedup.minhash_star_edges for the full argument
+    with_h = c.withColumn("_hv", F.xxhash64("v")).repartition("_hv")
+    rep_w = F.min("vec_id").over(Window.partitionBy("_hv", "v"))
+    with_rep = with_h.select("vec_id", "v", rep_w.alias("rep"))
+    # identical-vector star edges claim cos=1.0 — true only for nonzero
+    # vectors. Zero embeddings (failed encoders) have cosine 0 with
+    # EVERYTHING incl. each other, so they get no star edge
+    nonzero = F.exists("v", lambda x: x != 0.0)
+    star = with_rep.filter(
+        (F.col("vec_id") != F.col("rep")) & nonzero
+    ).select(
+        F.col("rep").alias("a"),
+        F.col("vec_id").alias("b"),
+        F.lit(1.0).alias("cos"),
+    )
+    reps = with_rep.filter(F.col("vec_id") == F.col("rep")).select(
+        "vec_id", "v"
+    ).withColumn("bucket", F.expr(_signs_sql("v", planes)))
     if max_bucket_size is not None:
         reps = cap_bucket_members(
             reps,
             ["bucket"],
             "vec_id",
             max_bucket_size,
-            log_truncation,
             context="embedding_near_duplicates",
         )
     l, r = reps.alias("l"), reps.alias("r")
@@ -460,7 +454,7 @@ def embedding_near_duplicates(
         )
         .filter(F.col("cos") >= threshold)
     )
-    return rep_pairs if star is None else rep_pairs.unionByName(star)
+    return rep_pairs.unionByName(star)
 
 
 def quantize_embeddings(

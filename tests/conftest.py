@@ -14,3 +14,15 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def persisted_rdd_ids(spark):
+    """Callable returning the ids of the session's persisted RDDs — the
+    registry the checkpoint-cleanup tests compare before and after a call."""
+    jsc = spark.sparkContext._jsc
+
+    def ids() -> set[int]:
+        return {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
+
+    return ids

@@ -223,7 +223,9 @@ def test_duplicate_clusters_end_to_end(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_duplicate_clusters_releases_sketches_on_failure(spark, monkeypatch):
+def test_duplicate_clusters_releases_sketches_on_failure(
+    spark, monkeypatch, persisted_rdd_ids
+):
     """A components step that raises must not leak the eagerly persisted
     sketch blocks into the session."""
     import pytest
@@ -235,26 +237,20 @@ def test_duplicate_clusters_releases_sketches_on_failure(spark, monkeypatch):
 
     monkeypatch.setattr(dedup, "connected_components", boom)
     df = _docs(spark, [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")])
-    sc = spark.sparkContext
-    before = dedup._persistent_rdd_ids(sc)
+    before = persisted_rdd_ids()
     with pytest.raises(RuntimeError, match="components failed"):
         dedup.duplicate_clusters(df)
-    assert dedup._persistent_rdd_ids(sc) == before
+    assert persisted_rdd_ids() == before
 
 
-def test_duplicate_clusters_seeded_equals_base(spark):
-    """r6: the exact-dedup-seeded clustering (shingles run on canonicals
-    only) must emit exactly the base operator's (id, component) set — on a
-    corpus exercising every tricky regime: verbatim mega-group, exact
-    groups whose DISTINCT texts share one shingle set (token permutations
-    joining two exact groups into one component), short docs (< 3 tokens:
-    exact-dup territory, never near-dup), NULL text, whitespace-variant
-    copies (same fingerprint via normalization), and a unique doc."""
-    from gnosis_ocr_spark.functions.dedup import (
-        duplicate_clusters,
-        duplicate_clusters_seeded,
-        exact_duplicates,
-    )
+def test_duplicate_clusters_tricky_regimes(spark):
+    """duplicate_clusters' full (id, component) set on a corpus exercising
+    every tricky regime: verbatim mega-group, exact groups whose DISTINCT
+    texts share one shingle set (token permutations joining two exact
+    groups into one component), short docs (< 3 tokens: exact-dup
+    territory, never near-dup), NULL text, whitespace-variant copies (same
+    token sequence after normalization), and a unique doc."""
+    from gnosis_ocr_spark.functions.dedup import duplicate_clusters
 
     rows = [
         # verbatim mega-group (5 members)
@@ -279,17 +275,13 @@ def test_duplicate_clusters_seeded_equals_base(spark):
         (99, "completely unique document text here"),
     ]
     df = spark.createDataFrame(rows, schema="doc_id long, text string")
-    dup = exact_duplicates(df)
-    base = {(r["id"], r["component"])
-            for r in duplicate_clusters(df).collect()}
-    seeded = {(r["id"], r["component"])
-              for r in duplicate_clusters_seeded(df, dup).collect()}
-    assert seeded == base
-    # sanity on the regimes themselves
-    comp = dict(base)
-    assert comp[20] == comp[21] == comp[30] == 20  # permutation merge
-    assert 50 not in comp and 51 not in comp       # short docs absent
-    assert 60 not in comp and 99 not in comp
+    got = {(r["id"], r["component"])
+           for r in duplicate_clusters(df).collect()}
+    assert got == (
+        {(i, 1) for i in range(1, 6)}           # mega-group
+        | {(20, 20), (21, 20), (30, 20)}        # permutation merge
+        | {(40, 40), (41, 40)}                  # whitespace variant
+    )  # short docs (50, 51), NULL text (60) and the unique doc (99) absent
 
 
 def test_pii_redaction_order_and_counts(spark):
@@ -426,7 +418,9 @@ def test_connected_components_long_chain_converges(spark):
     assert len(got) == 100 and set(got.values()) == {0}
 
 
-def test_connected_components_edge_plan_materialized_and_cleaned(spark):
+def test_connected_components_edge_plan_materialized_and_cleaned(
+    spark, persisted_rdd_ids
+):
     """r6 optimization internals: the symmetrized edge set is checkpointed
     ONCE (every propagation round used to re-execute the whole upstream
     edge-generation plan), and its blocks are unpersisted on return — only
@@ -434,8 +428,7 @@ def test_connected_components_edge_plan_materialized_and_cleaned(spark):
     lazy edge plan (join + union) over a multi-round graph."""
     from gnosis_ocr_spark.functions.dedup import connected_components
 
-    jsc = spark.sparkContext._jsc
-    before = {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
+    before = persisted_rdd_ids()
     left = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], schema="a long, b long"
     )
@@ -447,12 +440,11 @@ def test_connected_components_edge_plan_materialized_and_cleaned(spark):
     )
     got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert all(got[i] == 0 for i in range(21)) and got[51] == 50
-    after = {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
     # at most the final label table survives this call
-    assert len(after - before) <= 1
+    assert len(persisted_rdd_ids() - before) <= 1
 
 
-def test_duplicate_clusters_sketch_checkpoint_cleaned(spark):
+def test_duplicate_clusters_sketch_checkpoint_cleaned(spark, persisted_rdd_ids):
     """r6 optimization internals: duplicate_clusters materializes the
     shingle-sketch frame once (the star-edge plan references it three
     times) and drops its blocks before returning — only the final label
@@ -460,8 +452,7 @@ def test_duplicate_clusters_sketch_checkpoint_cleaned(spark):
     contract on a mixed corpus (mega-group + near pair + singleton)."""
     from gnosis_ocr_spark.functions.dedup import duplicate_clusters
 
-    jsc = spark.sparkContext._jsc
-    before = {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
+    before = persisted_rdd_ids()
     rows = [(i, "alpha beta gamma delta epsilon zeta") for i in range(6)]
     rows += [(10, "one two three four five six"), (11, "one two three four five six")]
     rows += [(20, "a lonely unrelated document body here")]
@@ -470,8 +461,7 @@ def test_duplicate_clusters_sketch_checkpoint_cleaned(spark):
     assert all(got[i] == 0 for i in range(6))
     assert got[10] == 10 and got[11] == 10
     assert 20 not in got  # singleton not emitted
-    after = {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
-    assert len(after - before) <= 1
+    assert len(persisted_rdd_ids() - before) <= 1
 
 
 def test_lang_id_extended_languages(spark):
@@ -1199,18 +1189,15 @@ def test_sampling_salt_decorrelates_composed_selectors(spark):
 
 def test_zero_embeddings_are_not_near_duplicates(spark):
     """All-zero embeddings (failed encoders) have cosine 0 with everything
-    — the identical-vector collapse must not report them as cos=1 pairs
-    (and both collapse modes must agree)."""
+    — the identical-vector collapse must not report them as cos=1 pairs."""
     from gnosis_ocr_spark.functions.similarity import embedding_near_duplicates
 
     dim = 8
     rows = [(1, [0.0] * dim), (2, [0.0] * dim), (3, [1.0] + [0.0] * (dim - 1)),
             (4, [1.0] + [0.0] * (dim - 1))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for collapse in (True, False):
-        pairs = {(r["a"], r["b"]) for r in embedding_near_duplicates(
-            df, threshold=0.99, n_planes=4, dim=dim,
-            collapse_identical=collapse,
-        ).collect()}
-        assert (3, 4) in pairs, collapse
-        assert all(1 not in p and 2 not in p for p in pairs), collapse
+    pairs = {(r["a"], r["b"]) for r in embedding_near_duplicates(
+        df, threshold=0.99, n_planes=4, dim=dim,
+    ).collect()}
+    assert (3, 4) in pairs
+    assert all(1 not in p and 2 not in p for p in pairs)
