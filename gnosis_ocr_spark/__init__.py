@@ -11,8 +11,8 @@ idiomatic Spark batch pipeline over a Common-Crawl-style table
 - layout reconstruction reassembles page/span text per ``url`` with a single
   sort-aggregate,
 - skew is handled by salted size-bucket repartitioning, and
-- runs are resumable via checkpointed done-manifests with per-partition
-  lineage + metrics.
+- runs are resumable: each run is one results write plus one commit row in
+  a ``runs/`` table, and every results row carries its partition lineage.
 
 Everything here is built from public knowledge only (Apache Spark APIs, the
 PDF/PNG file-format specs, Readability/trafilatura-style heuristics from

@@ -1,2 +1,2 @@
 """Sources & sinks: corpus reader (parquet now, Iceberg-shaped API) and the
-idempotent results/metrics/manifest writers."""
+idempotent results and run-commit writers."""

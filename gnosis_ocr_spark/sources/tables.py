@@ -79,10 +79,11 @@ def overwrite(df: DataFrame, path: str) -> None:
 
 
 def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a manifest/metrics table that may not exist yet. The empty frame
-    has zero partitions: ``createDataFrame([])`` parallelizes into one
-    Python task per core, so even counting it paid a Python stage."""
-    if _exists(path):
+    """Read a table that may not exist yet (``results/`` or ``runs/``
+    before the first run). The empty frame has zero partitions:
+    ``createDataFrame([])`` parallelizes into one Python task per core, so
+    even counting it paid a Python stage."""
+    if exists(path):
         return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema=schema)
 
@@ -90,7 +91,7 @@ def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
 def delete_run(spark: SparkSession, path: str, run_id: str, schema: str) -> None:
     """S6 drop-namespace analog: remove one run's rows (Iceberg: DELETE FROM
     tbl WHERE run_id = ...). Parquet fallback rewrites the table."""
-    if not _exists(path):
+    if not exists(path):
         return
     remaining = spark.read.schema(schema).parquet(path).filter(
         # null-safe: `run_id != x` is NULL for NULL run_id, and filter()
@@ -132,7 +133,9 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
-def _exists(path: str) -> bool:
+def exists(path: str) -> bool:
+    """Whether a table has been written at ``path`` (Iceberg: the catalog's
+    ``tableExists``). Non-local paths are assumed to exist."""
     if "://" in path:  # non-local FS: let spark try
         return True
     return os.path.exists(path) and any(

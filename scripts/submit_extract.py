@@ -10,8 +10,8 @@ spark-submit --py-files on multi-executor clusters").
 
 On a cluster, spark-submit owns the master URL; locally this falls back to
 local[$SPARK_GRAFT_CPUS]. The job is resumable: re-submitting with the same
---output anti-joins the done-manifest and processes only unfinished urls
-(plans/run.py).
+--output anti-joins the urls of the committed runs (results/ joined with
+runs/) and processes only the rest (plans/run.py).
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="documents table (parquet/Iceberg path)")
-    ap.add_argument("--output", required=True, help="output dir (results/, metrics/, done_manifest/)")
+    ap.add_argument("--output", required=True, help="output dir (results/, runs/)")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--engine", default="stub", choices=["stub", "nanonets"])
     ap.add_argument("--raster", default=None, help="page raster: WxH or dpi150")

@@ -2,7 +2,7 @@
 predicate pushdown reaching the parquet scan, dims broadcast, the non-PDF
 extraction branch shuffle-free, the heavy branch's three exchanges pinned
 to one task per core, and a fresh run with no resume join and no extra
-Python stage."""
+Python stage, in one results write plus one commit."""
 
 from __future__ import annotations
 
@@ -75,10 +75,9 @@ def _distinct_operators(plan: str, name: str) -> set[str]:
 
 
 @pytest.fixture(scope="module")
-def fresh_run_plan(spark, tmp_path_factory):
-    """Physical plan of a fresh run's materializing count, read from the SQL
-    status store: the SQL execution of the run's job group that scans the
-    persisted frame without writing a table."""
+def fresh_run_plans(spark, tmp_path_factory):
+    """Physical plans of the SQL executions that ran jobs in a fresh run,
+    read from the SQL status store under the run's job group."""
     from gnosis_ocr_spark.plans.run import run_extraction
 
     sc = spark.sparkContext
@@ -92,20 +91,36 @@ def fresh_run_plan(spark, tmp_path_factory):
     jobs = set(sc.statusTracker().getJobIdsForGroup(group))
     store = spark._jsparkSession.sharedState().statusStore()
     seq = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-    plans = [
+    return [
         e.physicalPlanDescription()
         for e in seq(store.executionsList())
         if jobs & {int(j) for j in seq(e.jobs().keySet())}
     ]
-    (plan,) = [
-        p for p in plans
-        if "InMemoryRelation" in p and "InsertIntoHadoopFsRelationCommand" not in p
-    ]
+
+
+def _written_table(plan: str) -> str | None:
+    target = re.search(
+        r"Execute InsertIntoHadoopFsRelationCommand\nInput: .*\nArguments: ([^,\s]+)", plan
+    )
+    return target and target.group(1).rsplit("/", 1)[-1]
+
+
+@pytest.fixture(scope="module")
+def fresh_run_plan(fresh_run_plans):
+    """Physical plan of a fresh run's ``results/`` write."""
+    (plan,) = [p for p in fresh_run_plans if _written_table(p) == "results"]
     return plan
 
 
+def test_fresh_run_is_one_write_and_one_commit(fresh_run_plans):
+    """A fresh run runs two SQL actions — the results write and the
+    ``runs/`` commit — and caches nothing."""
+    assert sorted(map(_written_table, fresh_run_plans), key=str) == ["results", "runs"]
+    assert not any("InMemoryRelation" in p for p in fresh_run_plans)
+
+
 def test_fresh_run_plans_no_resume_join(fresh_run_plan):
-    """An empty manifest means nothing to skip: no anti-join, so no
+    """No ``runs/`` table means nothing to skip: no anti-join, so no
     url-hash exchange over the input scans."""
     assert "Join" not in fresh_run_plan
     scan_urls = re.findall(

@@ -12,9 +12,9 @@ from gnosis_ocr_spark.sources import tables
 def test_delete_run_removes_only_that_run(spark, tmp_path):
     path = str(tmp_path / "results")
     rows = [
-        ("u1", "t", 1, "html", "r1"),
-        ("u2", "t", 1, "html", "r1"),
-        ("u3", "t", 1, "html", "r2"),
+        ("u1", "t", 1, "html", "r1", 1.0, 0),
+        ("u2", "t", 1, "html", "r1", 1.0, 0),
+        ("u3", "t", 1, "html", "r2", 1.0, 1),
     ]
     df = spark.createDataFrame(rows, schema=RESULTS_SCHEMA)
     tables.overwrite(df, path)
