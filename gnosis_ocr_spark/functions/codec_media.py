@@ -1,17 +1,11 @@
-"""WAV / MP4 / GIF metadata + decode — stdlib/numpy, public specs.
-
-Round 3 left audio/video/GIF as honest hash-shaped stubs ("no PIL/ffmpeg in
-this container"). The container constraint only blocks full video DECODE;
-the metadata and simple-raster layers are pure public-format parsing:
+"""Media container metadata plus the GIF and BMP pixel decoders —
+stdlib/numpy, public specs.
 
 - **WAV** (RIFF/WAVE, Microsoft spec): fmt chunk → channels/sample-rate/
-  bits; data chunk size → REAL duration; 16-bit PCM samples decode to a
-  numpy array for real amplitude features.
+  bits; data chunk size → duration.
 - **MP4** (ISO 14496-12 box structure): walk top-level boxes → moov/mvhd →
-  timescale + duration (version 0 and 1 boxes); full sample-table walk for
-  keyframe location. Frame pixel decode is real for I_PCM-coded H.264
-  (codec_h264); entropy-coded frames stay out, loudly (see that module's
-  header for why).
+  timescale + duration (version 0 and 1 boxes). The section's
+  ``_walk_boxes`` iterator serves the HEIF/AVIF ``meta`` → ``ispe`` parse.
 - **GIF** (GIF87a/89a): logical-screen dims, global palette, and a full
   LZW decoder for the first image frame (LSB-first variable-width codes —
   note this is the OPPOSITE bit order from PDF's /LZWDecode) with
@@ -19,10 +13,12 @@ the metadata and simple-raster layers are pure public-format parsing:
   encoder writes valid GIFs via the classic clear-code-per-symbol trick
   (no compression state, spec-legal), so round-trips are provable
   in-container.
+- **BMP** pixel decode; **WebP**, **SVG** and **ICO** dimensions; **MP3**,
+  **FLAC** and **Ogg** durations (see each section's header).
 
 Every writer exists so tests can build REAL fixtures without external
-tools; every parser degrades by raising ValueError (callers map that to
-their stub/passthrough path, loudly)."""
+tools; every parser degrades by raising ValueError (``media_metadata``
+maps that to null fields, the image route to a blank page)."""
 
 from __future__ import annotations
 
@@ -58,26 +54,6 @@ def wav_info(data: bytes) -> tuple[int, int, int, float]:
     if byte_rate == 0:
         raise ValueError("zero byte rate")
     return ch, rate, bits, data_size / byte_rate
-
-
-def wav_samples(data: bytes) -> np.ndarray:
-    """16-bit PCM samples as float32 in [-1, 1] (channels interleaved) —
-    the real-DSP input for audio features."""
-    ch, rate, bits, _ = wav_info(data)
-    if bits != 16:
-        raise ValueError(f"{bits}-bit PCM unsupported (16-bit only)")
-    pos = 12
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        if cid == b"data":
-            raw = data[pos + 8 : pos + 8 + size]
-            n = len(raw) // 2 * 2
-            return (
-                np.frombuffer(raw[:n], dtype="<i2").astype(np.float32) / 32768.0
-            )
-        pos += 8 + size + (size & 1)
-    raise ValueError("no data chunk")
 
 
 def build_wav(
@@ -169,244 +145,6 @@ def _child(buf: bytes, start: int, end: int, fourcc: bytes):
         if bt == fourcc:
             return bs, be
     return None
-
-
-MAX_VIDEO_SAMPLES = 1_000_000  # hostile-input bound: stsz can claim 2^32
-
-
-def mp4_video_samples(data: bytes) -> dict:
-    """Container-level video sample map from the first ``vide`` track's
-    sample tables (ISO 14496-12 §8.5-8.7): per-sample file offset, size,
-    decode timestamp, and sync (keyframe) flag, reconstructed from
-    stsd/stts/stss/stsz/stsc/stco|co64. This is the real work a frame
-    sampler does BEFORE any codec touches bytes — locating keyframes in a
-    100 TB crawl without decoding is exactly this table walk. Timestamps
-    are decode times (ctts composition offsets ignored — sync samples are
-    IDR frames where dt == pt for the common case). Returns ``{"codec",
-    "width", "height", "timescale", "samples": [(offset, size, ts_sec,
-    is_sync), ...]}``. Raises ValueError when no parseable video track
-    exists (callers fall back to their stub path) — mutated sample tables
-    included (struct/index errors wrap to the contract)."""
-    try:
-        return _mp4_video_samples_impl(data)
-    except (IndexError, KeyError, struct.error) as exc:
-        raise ValueError(f"malformed MP4 tables: {type(exc).__name__}") from exc
-
-
-def _mp4_video_samples_impl(data: bytes) -> dict:
-    if len(data) < 12 or data[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF file")
-    moov = _child(data, 0, len(data), b"moov")
-    if moov is None:
-        raise ValueError("no moov box")
-    for bt, bs, be in _walk_boxes(data, *moov):
-        if bt != b"trak":
-            continue
-        mdia = _child(data, bs, be, b"mdia")
-        if mdia is None:
-            continue
-        hdlr = _child(data, *mdia, b"hdlr")
-        if hdlr is None or data[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
-            continue
-        mdhd = _child(data, *mdia, b"mdhd")
-        if mdhd is None:
-            raise ValueError("video trak without mdhd")
-        ver = data[mdhd[0]]
-        timescale = struct.unpack(
-            ">I", data[mdhd[0] + (20 if ver else 12) :][:4]
-        )[0]
-        if timescale == 0:
-            raise ValueError("zero timescale")
-        minf = _child(data, *mdia, b"minf")
-        stbl = minf and _child(data, *minf, b"stbl")
-        if not stbl:
-            raise ValueError("video trak without stbl")
-
-        def table(fourcc: bytes) -> tuple[int, int] | None:
-            return _child(data, *stbl, fourcc)
-
-        stsd = table(b"stsd")
-        codec, width, height = "unknown", None, None
-        avcc = None
-        if stsd:
-            # full box (4) + entry_count (4) + first sample entry
-            es = stsd[0] + 8
-            if es + 34 <= stsd[1]:
-                codec = data[es + 4 : es + 8].decode("latin-1")
-                width, height = struct.unpack(">HH", data[es + 32 : es + 36])
-                # avc1 sample entries carry the avcC decoder-config record
-                # after the 78-byte VisualSampleEntry fields
-                cfg = _child(data, es + 8 + 78, stsd[1], b"avcC")
-                if cfg is not None:
-                    avcc = data[cfg[0] : cfg[1]]
-        stsz = table(b"stsz")
-        if stsz is None:
-            raise ValueError("no stsz")
-        fixed_size, count = struct.unpack(">II", data[stsz[0] + 4 : stsz[0] + 12])
-        if count > MAX_VIDEO_SAMPLES:
-            raise ValueError("sample count exceeds bound")
-        if fixed_size:
-            sizes = [fixed_size] * count
-        else:
-            sizes = list(
-                struct.unpack(
-                    ">%dI" % count, data[stsz[0] + 12 : stsz[0] + 12 + 4 * count]
-                )
-            )
-        # decode timestamps from stts run-lengths
-        stts = table(b"stts")
-        if stts is None:
-            raise ValueError("no stts")
-        (n_runs,) = struct.unpack(">I", data[stts[0] + 4 : stts[0] + 8])
-        ts_list: list[int] = []
-        t = 0
-        p = stts[0] + 8
-        for _ in range(min(n_runs, count)):
-            cnt, delta = struct.unpack(">II", data[p : p + 8])
-            p += 8
-            for _ in range(min(cnt, count - len(ts_list))):
-                ts_list.append(t)
-                t += delta
-        while len(ts_list) < count:  # short stts: extend with last delta
-            ts_list.append(t)
-            t += delta if n_runs else 1
-        # sync table (absent = every sample is sync, §8.6.2)
-        stss = table(b"stss")
-        if stss is None:
-            sync = set(range(1, count + 1))
-        else:
-            (n_sync,) = struct.unpack(">I", data[stss[0] + 4 : stss[0] + 8])
-            sync = set(
-                struct.unpack(
-                    ">%dI" % n_sync, data[stss[0] + 8 : stss[0] + 8 + 4 * n_sync]
-                )
-            )
-        # chunk offsets (stco 32-bit / co64 64-bit)
-        stco = table(b"stco")
-        wide = False
-        if stco is None:
-            stco = table(b"co64")
-            wide = True
-        stsc = table(b"stsc")
-        if stco is None or stsc is None:
-            raise ValueError("no stco/stsc")
-        (n_chunks,) = struct.unpack(">I", data[stco[0] + 4 : stco[0] + 8])
-        fmt = ">%d%s" % (n_chunks, "Q" if wide else "I")
-        width_b = 8 if wide else 4
-        chunk_off = struct.unpack(
-            fmt, data[stco[0] + 8 : stco[0] + 8 + width_b * n_chunks]
-        )
-        (n_sc,) = struct.unpack(">I", data[stsc[0] + 4 : stsc[0] + 8])
-        sc_runs = [
-            struct.unpack(">III", data[stsc[0] + 8 + 12 * i : stsc[0] + 20 + 12 * i])
-            for i in range(n_sc)
-        ]
-        samples: list[tuple[int, int, float, bool]] = []
-        si = 0  # 0-based sample index
-        for ci in range(n_chunks):
-            # samples_per_chunk for chunk ci+1: last run with first_chunk <= ci+1
-            per = 0
-            for first, cnt, _desc in sc_runs:
-                if first <= ci + 1:
-                    per = cnt
-                else:
-                    break
-            off = chunk_off[ci]
-            for _ in range(per):
-                if si >= count:
-                    break
-                samples.append(
-                    (off, sizes[si], ts_list[si] / timescale, (si + 1) in sync)
-                )
-                off += sizes[si]
-                si += 1
-        return {
-            "codec": codec,
-            "width": width,
-            "height": height,
-            "timescale": timescale,
-            "avcc": avcc,
-            "samples": samples,
-        }
-    raise ValueError("no video track")
-
-
-def build_mp4_video(
-    payloads: list[bytes],
-    fps: int = 10,
-    width: int = 64,
-    height: int = 48,
-    sync_every: int = 5,
-    timescale: int = 1000,
-    avcc: bytes | None = None,
-    codec_fourcc: bytes = b"avc1",
-) -> bytes:
-    """Fixture writer: valid ISO-BMFF with one ``vide`` track carrying the
-    given sample payloads in a single mdat chunk — full stsd/stts/stss/
-    stsz/stsc/stco tables so :func:`mp4_video_samples` (and any real
-    demuxer) can locate every sample. ``avcc`` supplies a REAL
-    decoder-config record (see :func:`build_mp4_h264`); without it a
-    minimal placeholder record is written and payloads are opaque.
-    ``codec_fourcc`` selects the visual sample entry type: the default
-    ``avc1`` carries an avcC record; any other fourcc (e.g. ``jpeg`` —
-    the QuickTime/ISO motion-JPEG entry whose samples are plain JFIF
-    images) writes a bare VisualSampleEntry."""
-    n = len(payloads)
-    if n == 0:
-        raise ValueError("need at least one sample")
-    mdat_body = b"".join(payloads)
-    ftyp = struct.pack(">I", 16) + b"ftyp" + b"isom" + struct.pack(">I", 512)
-    mdat = struct.pack(">I", 8 + len(mdat_body)) + b"mdat"
-    first_off = len(ftyp) + 8  # payloads start right after the mdat header
-
-    def box(fourcc: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(body)) + fourcc + body
-
-    def full(fourcc: bytes, body: bytes, ver: int = 0) -> bytes:
-        return box(fourcc, bytes([ver, 0, 0, 0]) + body)
-
-    delta = timescale // fps
-    dur = n * delta
-    mvhd = full(b"mvhd", struct.pack(">II", 0, 0) + struct.pack(">II", timescale, dur)
-                + struct.pack(">I", 0x00010000) + struct.pack(">H", 0x0100)
-                + b"\x00" * 10 + b"\x00" * 36 + b"\x00" * 24 + struct.pack(">I", 2))
-    tkhd = full(b"tkhd", struct.pack(">II", 0, 0) + struct.pack(">II", 1, 0)
-                + struct.pack(">I", dur) + b"\x00" * 8 + b"\x00" * 8 + b"\x00" * 36
-                + struct.pack(">II", width << 16, height << 16), ver=0)
-    mdhd = full(b"mdhd", struct.pack(">II", 0, 0)
-                + struct.pack(">II", timescale, dur) + struct.pack(">HH", 0x55C4, 0))
-    hdlr = full(b"hdlr", struct.pack(">I", 0) + b"vide" + b"\x00" * 12
-                + b"VideoHandler\x00")
-    # stsd: one visual sample entry (avc1 carries the avcC config record)
-    entry_body = (b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 16
-                  + struct.pack(">HH", width, height)
-                  + struct.pack(">II", 0x00480000, 0x00480000)
-                  + struct.pack(">I", 0) + struct.pack(">H", 1) + b"\x00" * 32
-                  + struct.pack(">H", 0x18) + struct.pack(">h", -1))
-    if codec_fourcc == b"avc1":
-        if avcc is None:
-            avcc = bytes([1, 66, 0, 30, 0xFF, 0xE1, 0, 2, 0x67, 0x42,
-                          1, 0, 2, 0x68, 0xCE])
-        entry_body += box(b"avcC", avcc)
-    stsd = full(b"stsd", struct.pack(">I", 1) + box(codec_fourcc, entry_body))
-    stts = full(b"stts", struct.pack(">III", 1, n, delta))
-    syncs = list(range(1, n + 1, sync_every))
-    stss = full(b"stss", struct.pack(">I", len(syncs))
-                + struct.pack(">%dI" % len(syncs), *syncs))
-    stsz = full(b"stsz", struct.pack(">II", 0, n)
-                + struct.pack(">%dI" % n, *[len(p) for p in payloads]))
-    stsc = full(b"stsc", struct.pack(">I", 1) + struct.pack(">III", 1, n, 1))
-    stco = full(b"stco", struct.pack(">I", 1) + struct.pack(">I", first_off))
-    stbl = box(b"stbl", stsd + stts + stss + stsz + stsc + stco)
-    vmhd = full(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0))
-    # dref with one self-contained url entry (flags bit 0 = data in file)
-    dinf = box(b"dinf", full(b"dref", struct.pack(">I", 1)
-                             + struct.pack(">I", 12) + b"url \x00\x00\x00\x01"))
-    minf = box(b"minf", vmhd + dinf + stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + mdat + mdat_body + moov
 
 
 def build_mp4(duration_sec: float, timescale: int = 1000) -> bytes:
@@ -587,35 +325,6 @@ def encode_gray_gif(pixels: bytes, width: int, height: int) -> bytes:
         out += chunk
     out += b"\x00\x3b"
     return bytes(out)
-
-
-def build_mp4_h264(
-    frames: list, fps: int = 10, sync_every: int = 1, timescale: int = 1000
-) -> bytes:
-    """Fixture writer: an MP4 whose video samples are REAL H.264 —
-    all-I_PCM IDR frames (codec_h264) with the matching avcC record, so
-    :func:`multimodal.sample_frames` decodes actual pixels. ``frames``
-    are (h, w) uint8 luma planes (even dims); every sample is a sync
-    sample by default (each frame is an IDR)."""
-    import numpy as np
-
-    from gnosis_ocr_spark.functions.codec_h264 import (
-        build_avcc,
-        encode_h264_ipcm,
-    )
-
-    if not frames:
-        raise ValueError("need at least one frame")
-    sps, pps, _ = encode_h264_ipcm(np.asarray(frames[0], dtype=np.uint8))
-    payloads = []
-    for f in frames:
-        _, _, idr = encode_h264_ipcm(np.asarray(f, dtype=np.uint8))
-        payloads.append(len(idr).to_bytes(4, "big") + idr)
-    h, w = np.asarray(frames[0]).shape
-    return build_mp4_video(
-        payloads, fps=fps, width=w, height=h, sync_every=sync_every,
-        timescale=timescale, avcc=build_avcc(sps, pps),
-    )
 
 
 # ---------------------------------------------------------------- BMP
@@ -1453,67 +1162,6 @@ def ico_info(data: bytes) -> dict:
         size, off = struct.unpack_from("<II", data, base + 8)
         images.append((w, h, size, off))
     return {"count": count, "images": images}
-
-
-def decode_ico_gray(data: bytes) -> tuple[int, int, bytes]:
-    """Decode the LARGEST icon image to 8-bit gray. PNG-compressed entries
-    route through the in-repo PNG decoder; DIB entries decode 32/24/8-bpp
-    XOR pixels (bottom-up rows, BGR(A) → luma, palette for 8-bpp; the AND
-    mask is ignored — gray features/resize have no alpha). 4/1-bpp DIBs
-    raise (vanishingly rare in modern favicons)."""
-    info = ico_info(data)
-    w, h, size, off = max(info["images"], key=lambda e: e[0] * e[1])
-    payload = data[off : off + size]
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from gnosis_ocr_spark.functions.codec_png import decode_png_gray
-
-        return decode_png_gray(payload)
-    if len(payload) < 40:
-        raise ValueError("ICO: truncated DIB")
-    (bi_size, bw, bh2) = struct.unpack_from("<Iii", payload, 0)
-    planes, bpp = struct.unpack_from("<HH", payload, 12)
-    (compression,) = struct.unpack_from("<I", payload, 16)
-    if bi_size < 40 or compression != 0:
-        raise ValueError("ICO: unsupported DIB header/compression")
-    ih = abs(bh2) // 2 if abs(bh2) == 2 * h else abs(bh2)
-    iw = bw
-    if iw != w or ih != h:
-        raise ValueError("ICO: DIB dims contradict directory entry")
-    if iw * ih > 50_000_000:
-        raise ValueError("ICO: unreasonable dimensions")
-    pos = bi_size
-    palette = None
-    if bpp == 8:
-        (clr_used,) = struct.unpack_from("<I", payload, 32)
-        n_pal = clr_used or 256
-        pal = np.frombuffer(
-            payload[pos : pos + 4 * n_pal], dtype=np.uint8
-        ).reshape(-1, 4)
-        if len(pal) < n_pal:
-            raise ValueError("ICO: truncated palette")
-        p32 = pal.astype(np.uint32)
-        palette = (
-            (77 * p32[:, 2] + 150 * p32[:, 1] + 29 * p32[:, 0]) >> 8
-        ).astype(np.uint8)
-        pos += 4 * n_pal
-    elif bpp not in (24, 32):
-        raise ValueError(f"ICO: {bpp}-bpp DIB unsupported")
-    stride = ((iw * bpp + 31) // 32) * 4
-    need = stride * ih
-    rows = payload[pos : pos + need]
-    if len(rows) < need:
-        raise ValueError("ICO: truncated XOR image")
-    arr = np.frombuffer(rows, dtype=np.uint8).reshape(ih, stride)
-    if bpp == 8:
-        gray = palette[arr[:, :iw]]
-    else:
-        nb = bpp // 8
-        px = arr[:, : iw * nb].reshape(ih, iw, nb).astype(np.uint32)
-        gray = ((77 * px[:, :, 2] + 150 * px[:, :, 1] + 29 * px[:, :, 0])
-                >> 8).astype(np.uint8)
-    if bh2 > 0:  # bottom-up rows (the spec shape); negative = top-down
-        gray = gray[::-1]
-    return iw, ih, np.ascontiguousarray(gray).tobytes()
 
 
 def build_ico(

@@ -100,7 +100,8 @@ def encode_page_png(text: str, width: int = 64, height: int = 64) -> bytes:
 
 def encode_gray_png(pixels: bytes, width: int, height: int) -> bytes:
     """Encode raw 8-bit grayscale pixels (row-major, len == width*height)
-    as a valid PNG — the re-encode half of real image transforms (resize)."""
+    as a valid PNG — pdf_split's re-encode of decoded image pages and the
+    image fixtures' writer."""
     if len(pixels) != width * height:
         raise ValueError("pixel buffer does not match dimensions")
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
@@ -154,15 +155,16 @@ def decode_dimensions(png: bytes) -> tuple[int, int]:
 
 def decode_pixels(png: bytes) -> bytes:
     """Return raw grayscale pixel bytes (filter-0 scanlines stripped).
-    Inflate is bounded to the declared geometry — this fast path sees raw
-    crawl bytes first in media_features/resize_images, so a zlib bomb
-    behind a small IHDR must fail loudly, not MemoryError the executor
-    (same rationale as decode_png_gray's bounded inflate below). The
-    declared geometry is itself attacker-controlled, so it gets the same
-    50 MPix gate as the general decoder; and a first-IDAT inflate that
-    comes up SHORT (multi-IDAT or truncated stream) raises so callers
-    fall back to decode_png_gray, which concatenates all IDAT chunks —
-    never a silently short pixel buffer."""
+    Inflate is bounded to the declared geometry — its caller, the OCR
+    stub's decode_scan_png_text, runs it on every page PNG, and those can
+    carry bytes lifted from crawled documents, so a zlib bomb behind a
+    small IHDR must fail loudly, not MemoryError the executor (same
+    rationale as decode_png_gray's bounded inflate below). The declared
+    geometry is itself attacker-controlled, so it gets the same 50 MPix
+    gate as the general decoder; and a first-IDAT inflate that comes up
+    SHORT (multi-IDAT or truncated stream) raises — decode_png_gray,
+    which concatenates all IDAT chunks, reads such files — never a
+    silently short pixel buffer."""
     w, h = decode_dimensions(png)
     if w == 0 or h == 0 or w * h > 50_000_000:
         raise ValueError("unreasonable PNG dimensions")

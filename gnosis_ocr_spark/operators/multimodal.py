@@ -1,53 +1,36 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata.
+"""Media payloads as opaque ``binary`` columns: sniffing, typed metadata
+and the standalone-image decode of the OCR route.
 
-The Spark-side plumbing (schemas, Arrow batching, ``mapInPandas`` signatures,
-partitioning) is real and tested; the codec work that needs PIL/ffmpeg —
-absent from this container — is stubbed behind ``DECODERS`` with deterministic
-fakes, clearly marked. Swapping in real decoders changes only the inner
-function bodies, not the Spark plan.
-
-Sniffing is real: magic-byte dispatch for PNG/JPEG/GIF/TIFF/BMP/WebP/
-WAV/MP4/JP2 (weak magics — RIFF, "BM" — are refined by structure checks
-before a type is claimed). The metadata layer is REAL for every sniffed
-type (image dimensions incl. TIFF IFD / BMP DIB / WebP VP8-header parses,
-WAV/MP4 duration — functions/codec_media.py, codec_jpeg.py,
-codec_tiff.py), pixel decode is real for PNG/baseline-JPEG/GIF/JP2 and
-for TIFF (stripped AND tiled, 1/8/16-bit, CCITT fax, LZW/deflate/
-PackBits, new-style JPEG-in-TIFF — codec_tiff composes the in-repo
-decoders) and BMP, and
-audio features are real DSP over 16-bit PCM (WAV) and over full FLAC
-frame decode (functions/codec_flac.py: rice/fixed/LPC subframes, stereo
-decorrelation, CRC-8/16 + STREAMINFO-MD5 verified — the built-in
-integrity oracle every FLAC stream carries). WebP pixel decode is REAL
-for BOTH lossless (VP8L — the full prefix-code/LZ77/transform stack in
-functions/codec_vp8l.py) and lossy payloads (VP8 key frames in
-functions/codec_vp8.py, conformance-verified byte-for-byte against the
-system libwebp). Video keyframe SAMPLING is real at the
-container level (round 5): sample_frames walks the MP4 sample tables
-(codec_media.mp4_video_samples) and emits actual encoded keyframe bytes
-+ true timestamps, and pixel decode of those payloads is REAL for
-I_PCM-coded H.264 (codec_h264 via the track's avcC). Entropy-coded
-(CAVLC/CABAC) frames keep a deterministic fake — the honest boundary
-documented in codec_h264's header.
+- Sniffing is magic-byte dispatch for PNG/JPEG/GIF/TIFF/BMP/WebP/WAV/
+  MP4/JP2/FLAC/Ogg, plus ISO-BMFF brands (HEIF/AVIF/MP4), SVG, MPEG audio
+  and ICO. Weak magics (RIFF, "BM", ICO's 00 00 01 00, a bare MP3 frame
+  sync) are refined by structure checks before a type is claimed.
+- ``DECODERS`` maps each sniffed type to a real header parser: image
+  dimensions (PNG IHDR, JPEG SOF with EXIF orientation, GIF screen, TIFF
+  IFD, BMP DIB, WebP VP8/VP8L/VP8X, JP2 SIZ, HEIF/AVIF ispe, SVG root,
+  ICO directory) and audio/video durations (WAV, MP4 mvhd, MP3, FLAC
+  STREAMINFO, Ogg granule). ``media_metadata`` runs them in one
+  ``mapInPandas``; a parse failure leaves the row's fields null.
+- ``decode_image_gray`` is the one pixel-decode dispatch: it turns a
+  standalone raster image into 8-bit gray pixels for the pipeline's image
+  route (functions/codec_png, codec_jpeg, codec_media, codec_vp8l,
+  codec_jpx).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gnosis_ocr_spark.functions.codec_png import decode_dimensions, decode_pixels
+from gnosis_ocr_spark.functions.codec_png import decode_dimensions
 
 MEDIA_META_SCHEMA = (
     "url string, media_type string, byte_len long, width int, height int, "
     "duration_sec double"
 )
-FEATURE_SCHEMA = "url string, media_type string, feature array<float>"
 
 _MAGIC = [
     (b"\x89PNG\r\n\x1a\n", "image/png"),
@@ -176,7 +159,7 @@ def _decode_jpeg_meta(data: bytes) -> tuple[int | None, int | None, float | None
     """REAL JPEG dimensions from the SOF marker (codec_jpeg; any DCT-family
     SOF — the pixel decode path additionally handles the baseline subset).
     EXIF orientations 5-8 swap the reported w/h — the upright dimensions
-    a browser shows, consistent with the OCR/resize paths."""
+    a browser shows, consistent with the OCR image route."""
     from gnosis_ocr_spark.functions.codec_jpeg import (
         decode_jpeg_dimensions,
         exif_orientation,
@@ -205,8 +188,7 @@ def _decode_wav_meta(data: bytes) -> tuple[int | None, int | None, float | None]
 
 
 def _decode_mp4_meta(data: bytes) -> tuple[int | None, int | None, float | None]:
-    """REAL MP4 duration from the moov/mvhd box (codec_media); frame
-    pixel decode lives in sample_frames (real for I_PCM H.264)."""
+    """REAL MP4 duration from the moov/mvhd box (codec_media)."""
     from gnosis_ocr_spark.functions.codec_media import mp4_duration
 
     return None, None, round(mp4_duration(data), 3)
@@ -223,7 +205,7 @@ def _decode_jp2_meta(data: bytes) -> tuple[int | None, int | None, float | None]
 def _decode_tiff_meta(data: bytes) -> tuple[int | None, int | None, float | None]:
     """REAL TIFF dimensions from the first IFD (codec_tiff). Orientations
     5-8 (tag 274) swap the reported w/h — the upright dimensions, matching
-    what decode_tiff_gray/resize return for the same bytes (the same
+    what decode_tiff_gray returns for the same bytes (the same
     consistency contract as the JPEG EXIF path)."""
     from gnosis_ocr_spark.functions.codec_tiff import tiff_info
 
@@ -301,17 +283,6 @@ def _decode_ogg_meta(data: bytes) -> tuple[int | None, int | None, float | None]
     return None, None, round(ogg_info(data)["duration_sec"], 3)
 
 
-def _decode_stub_meta(data: bytes) -> tuple[int | None, int | None, float | None]:
-    """Deterministic fake for formats whose decoders aren't in this container.
-
-    STUB: a real deployment plugs PIL/ffmpeg here; shapes derive from content
-    hash so tests exercise realistic variety."""
-    import zlib
-
-    h = zlib.crc32(data)
-    return 16 + h % 512, 16 + (h >> 9) % 512, round((h % 6000) / 100.0, 2)
-
-
 DECODERS = {
     "image/png": _decode_png_meta,  # real (stdlib codec)
     "image/jpeg": _decode_jpeg_meta,  # real (codec_jpeg SOF parse)
@@ -358,476 +329,6 @@ def media_metadata(df: DataFrame, url_col: str = "url", data_col: str = "data") 
     """(url, data BINARY) → typed media metadata via one ``mapInPandas``."""
     slim = df.select(F.col(url_col).alias("url"), F.col(data_col).alias("data"))
     return slim.mapInPandas(_meta_batches, schema=MEDIA_META_SCHEMA)
-
-
-def _feature_batches(dim: int):
-    def inner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            urls, types, feats = [], [], []
-            for url, blob in zip(b["url"], b["data"]):
-                data = bytes(blob) if blob is not None else b""
-                mtype = sniff_media_type(data)
-                px = None
-                if mtype == "image/png":
-                    # real pixel statistics: fast filter-0-gray path first,
-                    # then the general decoder (all filters/color types —
-                    # real crawl PNGs)
-                    try:
-                        px = np.frombuffer(decode_pixels(data), dtype=np.uint8)
-                    except Exception:
-                        try:
-                            from gnosis_ocr_spark.functions.codec_png import (
-                                decode_png_gray,
-                            )
-
-                            _, _, gray = decode_png_gray(data)
-                            px = np.frombuffer(gray, dtype=np.uint8)
-                        except Exception:
-                            px = None
-                elif mtype == "image/jpeg":
-                    # real luma statistics (codec_jpeg: baseline AND
-                    # progressive SOF2 — common in web crawls)
-                    try:
-                        from gnosis_ocr_spark.functions.codec_jpeg import (
-                            decode_jpeg,
-                        )
-
-                        _, _, _, luma = decode_jpeg(data)
-                        px = np.frombuffer(luma, dtype=np.uint8)
-                    except Exception:
-                        px = None
-                elif mtype == "image/gif":
-                    try:
-                        from gnosis_ocr_spark.functions.codec_media import (
-                            decode_gif_gray,
-                        )
-
-                        _, _, gray = decode_gif_gray(data)
-                        px = np.frombuffer(gray, dtype=np.uint8)
-                    except Exception:
-                        px = None
-                elif mtype == "image/jp2":
-                    # real wavelet decode to gray/luma (codec_jpx)
-                    try:
-                        from gnosis_ocr_spark.functions.codec_jpx import (
-                            decode_jpx_gray,
-                        )
-
-                        _, _, gray = decode_jpx_gray(data)
-                        px = np.frombuffer(gray, dtype=np.uint8)
-                    except Exception:
-                        px = None
-                elif mtype == "image/tiff":
-                    # real strip decode (fax/LZW/deflate/packbits → luma)
-                    try:
-                        from gnosis_ocr_spark.functions.codec_tiff import (
-                            decode_tiff_gray,
-                        )
-
-                        _, _, gray = decode_tiff_gray(data)
-                        px = np.frombuffer(gray, dtype=np.uint8)
-                    except Exception:
-                        px = None
-                elif mtype == "image/bmp":
-                    try:
-                        from gnosis_ocr_spark.functions.codec_media import (
-                            decode_bmp_gray,
-                        )
-
-                        _, _, gray = decode_bmp_gray(data)
-                        px = np.frombuffer(gray, dtype=np.uint8)
-                    except Exception:
-                        px = None
-                elif mtype == "image/webp":
-                    # real for BOTH lossless (VP8L, codec_vp8l) and
-                    # lossy (VP8 key frames, codec_vp8) payloads
-                    try:
-                        from gnosis_ocr_spark.functions.codec_vp8l import (
-                            decode_webp_gray,
-                        )
-
-                        _, _, gray = decode_webp_gray(data)
-                        px = np.frombuffer(gray, dtype=np.uint8)
-                    except Exception:
-                        px = None
-                elif mtype == "image/x-icon":
-                    # real: largest favicon image (PNG or DIB entry)
-                    try:
-                        from gnosis_ocr_spark.functions.codec_media import (
-                            decode_ico_gray,
-                        )
-
-                        _, _, gray = decode_ico_gray(data)
-                        px = np.frombuffer(gray, dtype=np.uint8)
-                    except Exception:
-                        px = None
-                elif mtype in ("audio/wav", "audio/flac"):
-                    # real DSP: one shared amplitude-histogram feature —
-                    # only the PCM source differs (16-bit WAV samples, or
-                    # full FLAC frame decode via codec_flac: rice/LPC/
-                    # stereo reconstruction, CRC + MD5 verified), so the
-                    # WAV-vs-FLAC parity the tests assert holds by
-                    # construction, not by keeping two copies in sync
-                    try:
-                        if mtype == "audio/wav":
-                            from gnosis_ocr_spark.functions.codec_media import (
-                                wav_samples,
-                            )
-
-                            amp = np.abs(wav_samples(data))
-                        else:
-                            from gnosis_ocr_spark.functions.codec_flac import (
-                                decode_flac_pcm16,
-                            )
-
-                            _, mono = decode_flac_pcm16(data)
-                            amp = np.abs(mono.astype(np.float64) / 32768.0)
-                        hist, _ = np.histogram(amp, bins=dim, range=(0.0, 1.0))
-                        v = (hist / max(len(amp), 1)).astype(np.float32)
-                        urls.append(url)
-                        types.append(mtype)
-                        feats.append(v.tolist())
-                        continue
-                    except Exception:
-                        px = None
-                if px is not None:
-                    # fixed-dim feature: histogram of decoded pixel bytes
-                    hist, _ = np.histogram(px, bins=dim, range=(0, 256))
-                    v = (hist / max(len(px), 1)).astype(np.float32)
-                else:
-                    # STUB feature for undecodable/other payloads:
-                    # deterministic bytes-histogram (decoder-free)
-                    arr = np.frombuffer(data[:4096], dtype=np.uint8)
-                    if len(arr) == 0:
-                        v = np.zeros(dim, dtype=np.float32)
-                    else:
-                        hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-                        v = (hist / len(arr)).astype(np.float32)
-                urls.append(url)
-                types.append(mtype)
-                feats.append(v.tolist())
-            yield pd.DataFrame({"url": urls, "media_type": types, "feature": feats})
-
-    return inner
-
-
-def media_features(df: DataFrame, dim: int = 16, url_col: str = "url",
-                   data_col: str = "data") -> DataFrame:
-    """Binary media → fixed-dim float features (Arrow-batched, vectorized
-    inner loop). Output feeds functions.similarity for cross-modal dedup."""
-    slim = df.select(F.col(url_col).alias("url"), F.col(data_col).alias("data"))
-    return slim.mapInPandas(_feature_batches(dim), schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "url string, media_type string, width int, height int, data binary, "
-    "status string"
-)
-FRAME_SCHEMA = (
-    "url string, frame_no int, ts_sec double, frame binary, "
-    "payload binary, is_sync boolean, codec string"
-)
-
-
-def _resize_gray_nn(px: bytes, w: int, h: int, max_dim: int) -> tuple[bytes, int, int]:
-    """Nearest-neighbor downsample of raw grayscale pixels so the longest
-    side is ≤ max_dim (numpy strided indexing; uint8 throughout)."""
-    if max(w, h) <= max_dim:
-        return px, w, h
-    scale = max(w, h) / max_dim
-    nw, nh = max(1, int(w / scale)), max(1, int(h / scale))
-    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
-    ys = (np.arange(nh) * (h / nh)).astype(np.int64)
-    xs = (np.arange(nw) * (w / nw)).astype(np.int64)
-    return arr[ys][:, xs].tobytes(), nw, nh
-
-
-def resize_images(df: DataFrame, max_dim: int = 256, url_col: str = "url",
-                  data_col: str = "data") -> DataFrame:
-    """Bound every image's longest side to ``max_dim`` — the standard
-    pre-inference normalization step of a multimodal training pipeline.
-
-    PNG path is REAL: stdlib decode → nearest-neighbor downsample →
-    re-encode. Other formats pass through unchanged with a claimed size from
-    the stub metadata decoder (STUB: PIL/ffmpeg absent from this container;
-    swapping real decoders in changes only the inner branch, not the plan).
-
-    The ``status`` column makes passthrough rows explicit (round-3 advice:
-    a consumer trusting ``data`` must not silently receive oversized bytes):
-
-    - ``resized`` — pixels really were downsampled and re-encoded
-    - ``in_bounds`` — already ≤ max_dim, bytes unchanged
-    - ``passthrough`` — ORIGINAL bytes, possibly > max_dim (undecodable PNG
-      or a format whose real decoder isn't in this container); consumers that
-      require the bound must filter ``status != 'passthrough'``."""
-    from gnosis_ocr_spark.functions.codec_png import encode_gray_png
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in it:
-            rows = {
-                k: []
-                for k in ("url", "media_type", "width", "height", "data", "status")
-            }
-            for url, blob in zip(b["url"], b["data"]):
-                data = bytes(blob) if blob is not None else b""
-                mtype = sniff_media_type(data)
-                w = h = None
-                out = data
-                status = "passthrough"
-                decoded = None  # (pixels, w, h) when a real decoder applies
-                if mtype == "image/png":
-                    try:
-                        dw, dh = decode_dimensions(data)
-                        if max(dw, dh) <= max_dim:
-                            # already in bounds: header check only, skip the
-                            # full inflate+unfilter pixel decode
-                            w, h = dw, dh
-                            status = "in_bounds"
-                        else:
-                            decoded = (decode_pixels(data), dw, dh)
-                    except Exception:
-                        # non-filter-0 / color / split-IDAT / Adam7 PNG:
-                        # the general decoder (codec_png.decode_png_gray)
-                        # handles the full baseline incl. interlacing; only
-                        # genuinely malformed files fall to the honest
-                        # unknown-size passthrough
-                        try:
-                            from gnosis_ocr_spark.functions.codec_png import (
-                                decode_png_gray,
-                            )
-
-                            dw, dh, gray = decode_png_gray(data)
-                            decoded = (gray, dw, dh)
-                        except Exception:
-                            w = h = None
-                elif mtype == "image/jpeg":
-                    # real decode (baseline + progressive) → EXIF
-                    # orientation → grayscale luma resize → PNG out
-                    try:
-                        from gnosis_ocr_spark.functions.codec_jpeg import (
-                            decode_jpeg,
-                            exif_orientation,
-                            orient_gray,
-                        )
-
-                        dw, dh, _, luma = decode_jpeg(data)
-                        luma, dw, dh = orient_gray(
-                            luma, dw, dh, exif_orientation(data)
-                        )
-                        decoded = (luma, dw, dh)
-                    except Exception:
-                        w = h = None  # arithmetic/lossless: passthrough
-                elif mtype == "image/gif":
-                    try:
-                        from gnosis_ocr_spark.functions.codec_media import (
-                            decode_gif_gray,
-                        )
-
-                        dw, dh, gray = decode_gif_gray(data)
-                        decoded = (gray, dw, dh)
-                    except Exception:
-                        w = h = None
-                elif mtype == "image/jp2":
-                    # real wavelet decode → gray/luma resize → PNG out
-                    try:
-                        from gnosis_ocr_spark.functions.codec_jpx import (
-                            decode_jpx_gray,
-                        )
-
-                        dw, dh, gray = decode_jpx_gray(data)
-                        decoded = (gray, dw, dh)
-                    except Exception:
-                        w = h = None  # unsupported JPX subset: passthrough
-                elif mtype == "image/tiff":
-                    # real strip decode (fax/LZW/deflate/packbits → luma)
-                    try:
-                        from gnosis_ocr_spark.functions.codec_tiff import (
-                            decode_tiff_gray,
-                        )
-
-                        dw, dh, gray = decode_tiff_gray(data)
-                        decoded = (gray, dw, dh)
-                    except Exception:
-                        w = h = None  # old-JPEG/planar-2 TIFF: passthrough
-                elif mtype == "image/bmp":
-                    try:
-                        from gnosis_ocr_spark.functions.codec_media import (
-                            decode_bmp_gray,
-                        )
-
-                        dw, dh, gray = decode_bmp_gray(data)
-                        decoded = (gray, dw, dh)
-                    except Exception:
-                        w = h = None  # RLE/bitfields BMP: passthrough
-                elif mtype == "image/webp":
-                    try:
-                        from gnosis_ocr_spark.functions.codec_vp8l import (
-                            decode_webp_gray,
-                        )
-
-                        dw, dh, gray = decode_webp_gray(data)
-                        decoded = (gray, dw, dh)
-                    except Exception:
-                        w = h = None  # corrupt/hostile webp: passthrough
-                elif mtype == "image/x-icon":
-                    try:
-                        from gnosis_ocr_spark.functions.codec_media import (
-                            decode_ico_gray,
-                        )
-
-                        dw, dh, gray = decode_ico_gray(data)
-                        decoded = (gray, dw, dh)
-                    except Exception:
-                        w = h = None  # 4/1-bpp DIB etc.: passthrough
-                if decoded is not None:
-                    px, dw, dh = decoded
-                    if max(dw, dh) <= max_dim:
-                        w, h = dw, dh
-                        if mtype == "image/png":
-                            status = "in_bounds"
-                        else:  # decoded formats re-encode as grayscale PNG
-                            out = encode_gray_png(px, dw, dh)
-                            status = "resized"
-                    else:
-                        px2, w2, h2 = _resize_gray_nn(px, dw, dh, max_dim)
-                        out = encode_gray_png(px2, w2, h2)
-                        w, h = w2, h2
-                        status = "resized"
-                rows["url"].append(url)
-                rows["media_type"].append(mtype)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["data"].append(out)
-                rows["status"].append(status)
-            yield pd.DataFrame(rows)
-
-    slim = df.select(F.col(url_col).alias("url"), F.col(data_col).alias("data"))
-    return slim.mapInPandas(batches, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_sec: float = 1.0, max_frames: int = 8,
-                  url_col: str = "url", data_col: str = "data") -> DataFrame:
-    """Video → sampled frames, one output ROW per frame (the flat-map shape a
-    real ffmpeg-backed sampler uses: rows multiply inside the partition, no
-    driver involvement, downstream image ops consume the frame column).
-
-    Container-level sampling is REAL: when the MP4 carries a parseable
-    video track (codec_media.mp4_video_samples), the sampler walks the
-    stss/stsz/stsc/stco tables and emits the actual encoded keyframe bytes
-    (``payload``), true timestamps, and the codec fourcc — selecting sync
-    samples at >= every_sec spacing, exactly what a 100 TB pipeline does
-    before shipping keyframes to GPU decoders. Pixel DECODE is real for
-    I_PCM-coded H.264 keyframes (codec_h264 + the track's avcC record —
-    the ``frame`` column is then the decoded luma as a gray PNG) and for
-    motion-JPEG tracks (``jpeg``/``mjpa`` sample entries whose samples
-    are plain JFIF images — codec_jpeg decodes baseline AND progressive);
-    entropy-coded (CAVLC/CABAC) H.264 frames keep the deterministic stub
-    PNG derived from the payload bytes, the documented boundary in
-    codec_h264's header. Table-less MP4s fall back to mvhd-duration
-    pacing with ``payload`` null / ``codec`` 'stub'. Non-video rows emit
-    nothing."""
-    from gnosis_ocr_spark.functions.codec_png import encode_page_png
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
-
-        cols = ("url", "frame_no", "ts_sec", "frame", "payload", "is_sync",
-                "codec")
-        for b in it:
-            rows = {k: [] for k in cols}
-            for url, blob in zip(b["url"], b["data"]):
-                data = bytes(blob) if blob is not None else b""
-                if sniff_media_type(data) != "video/mp4":
-                    continue
-                sig = zlib.crc32(data)
-                try:
-                    from gnosis_ocr_spark.functions.codec_media import (
-                        mp4_video_samples,
-                    )
-
-                    info = mp4_video_samples(data)
-                except Exception:
-                    info = None
-                if info is not None:
-                    picked: list[tuple[int, int, float, bool]] = []
-                    next_ts = 0.0
-                    for off, size, ts, sync in info["samples"]:
-                        if not sync or ts < next_ts:
-                            continue
-                        picked.append((off, size, ts, sync))
-                        next_ts = ts + every_sec
-                        if len(picked) >= max_frames:
-                            break
-                    for i, (off, size, ts, sync) in enumerate(picked):
-                        rows["url"].append(url)
-                        rows["frame_no"].append(i)
-                        rows["ts_sec"].append(round(ts, 3))
-                        rows["payload"].append(data[off : off + size])
-                        rows["is_sync"].append(sync)
-                        rows["codec"].append(info["codec"])
-                        frame = None
-                        if info.get("avcc"):
-                            # REAL decode: I_PCM H.264 keyframes → luma PNG
-                            try:
-                                from gnosis_ocr_spark.functions.codec_h264 import (
-                                    decode_h264_gray,
-                                )
-                                from gnosis_ocr_spark.functions.codec_png import (
-                                    encode_gray_png,
-                                )
-
-                                fw, fh, gray = decode_h264_gray(
-                                    data[off : off + size], info["avcc"]
-                                )
-                                frame = encode_gray_png(gray, fw, fh)
-                            except Exception:
-                                frame = None  # entropy-coded → stub below
-                        elif info["codec"] in ("jpeg", "mjpa", "MJPG"):
-                            # REAL decode: motion-JPEG samples are plain
-                            # JFIF images — the in-repo (and ImageIO-
-                            # conformance-tested) JPEG decoder applies
-                            try:
-                                from gnosis_ocr_spark.functions.codec_jpeg import (
-                                    decode_jpeg,
-                                )
-                                from gnosis_ocr_spark.functions.codec_png import (
-                                    encode_gray_png,
-                                )
-
-                                fw, fh, _nc, gray = decode_jpeg(
-                                    data[off : off + size]
-                                )
-                                frame = encode_gray_png(gray, fw, fh)
-                            except Exception:
-                                frame = None  # undecodable → stub below
-                        rows["frame"].append(
-                            frame
-                            or encode_page_png(f"frame:{sig}:{i}", 32, 32)
-                        )
-                    continue
-                try:  # REAL duration from the mvhd box when parseable
-                    from gnosis_ocr_spark.functions.codec_media import (
-                        mp4_duration,
-                    )
-
-                    dur = mp4_duration(data)
-                except Exception:
-                    _, _, dur = _decode_stub_meta(data)
-                n = min(max_frames, max(1, int((dur or 0) / every_sec)))
-                for i in range(n):
-                    ts = round(i * every_sec, 3)
-                    rows["url"].append(url)
-                    rows["frame_no"].append(i)
-                    rows["ts_sec"].append(ts)
-                    rows["payload"].append(None)
-                    rows["is_sync"].append(None)
-                    rows["codec"].append("stub")
-                    # STUB frame: deterministic, decodable PNG
-                    rows["frame"].append(encode_page_png(f"frame:{sig}:{i}", 32, 32))
-            yield pd.DataFrame(rows)
-
-    slim = df.select(F.col(url_col).alias("url"), F.col(data_col).alias("data"))
-    return slim.mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
 def media_fixture_rows() -> list[tuple[str, bytes, str, int | None, int | None, int | None]]:

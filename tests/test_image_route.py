@@ -6,17 +6,26 @@ raster+OCR stage — and extracts its scan-matrix text byte-identically."""
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
 import pytest
 
-from gnosis_ocr_spark.functions.codec_jpeg import encode_gray_jpeg
+from gnosis_ocr_spark.functions.codec_jpeg import (
+    encode_gray_jpeg,
+    encode_gray_jpeg_progressive,
+)
 from gnosis_ocr_spark.functions.codec_jpx import encode_jp2
 from gnosis_ocr_spark.functions.codec_media import encode_gray_bmp, encode_gray_gif
 from gnosis_ocr_spark.functions.codec_png import (
+    _MAGIC,
+    _chunk,
     encode_gray_png,
     encode_scan_pixels,
     encode_scan_pixels_robust,
 )
+from gnosis_ocr_spark.functions.codec_vp8 import build_webp_lossy
 from gnosis_ocr_spark.functions.codec_vp8l import encode_webp_lossless_gray
 from gnosis_ocr_spark.operators.multimodal import decode_image_gray, is_raster_image
 
@@ -43,13 +52,21 @@ def _fixtures() -> list[tuple[str, bytes]]:
 
 
 def test_sniff_and_decode_every_format():
-    for fmt, blob in _fixtures():
+    lossy = [
+        ("jpeg_prog", encode_gray_jpeg_progressive(_PXR, 64, 64)),
+        (
+            "webp_lossy",
+            build_webp_lossy(np.frombuffer(_PXR, dtype=np.uint8).reshape(64, 64))[0],
+        ),
+    ]
+    for fmt, blob in _fixtures() + lossy:
         assert is_raster_image(blob), fmt
         got = decode_image_gray(blob)
         assert got is not None, fmt
         w, h, gray = got
         assert (w, h) == (64, 64)
-        if fmt != "jpeg":  # lossless formats roundtrip the exact pixels
+        if fmt not in ("jpeg", "jpeg_prog", "webp_lossy"):
+            # lossless formats roundtrip the exact pixels
             assert gray == _PX, fmt
 
 
@@ -59,6 +76,15 @@ def test_sniff_rejects_non_images():
     assert not is_raster_image(b"BMx not a bitmap")
     assert not is_raster_image(b"RIFF....WAVEfmt ")  # audio, not WebP
     assert decode_image_gray(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16) is None
+    # hostile IHDR declaring w=0: a bare pixel-count gate passes it (0*h=0)
+    zero_w = (
+        _MAGIC
+        + _chunk(b"IHDR", struct.pack(">IIBBBBB", 0, 300, 8, 0, 0, 0, 0))
+        + _chunk(b"IDAT", zlib.compress(b"\x00" * 300))
+        + _chunk(b"IEND", b"")
+    )
+    assert is_raster_image(zero_w)
+    assert decode_image_gray(zero_w) is None
 
 
 def test_jvm_route_matches_python_sniff(spark):

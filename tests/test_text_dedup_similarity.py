@@ -938,7 +938,10 @@ def test_pack_sequences_parallelism_guard(spark):
 
     # approx_rows alone (within budget): no warning, identical packing
     with warnings.catch_warnings():
-        warnings.simplefilter("error")
+        # UserWarning only: pack_sequences' category. A blanket filter
+        # also turns a GC-time ResourceWarning for an unclosed py4j
+        # socket, PySpark's own, into an unraisable-exception warning.
+        warnings.simplefilter("error", UserWarning)
         same = {r["doc_id"]: r.asDict()
                 for r in pack_sequences(df, seq_len=8, n_shards=4,
                                         approx_rows=40).collect()}

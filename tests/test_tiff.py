@@ -1,6 +1,6 @@
 """TIFF codec (functions/codec_tiff.py) + the BMP/WebP additions to
-codec_media, and the multimodal surface they extend: sniffing, real
-metadata, real pixel features, real resize for scanned-archive formats.
+codec_media, and the multimodal surface they extend: sniffing and real
+metadata for scanned-archive formats.
 
 codec_tiff is composition: the strips route through the in-repo CCITT
 G3/G4, LZW, deflate, and PackBits decoders, so these tests double as
@@ -399,66 +399,6 @@ def test_media_metadata_real_for_tiff_bmp_webp(spark):
     assert (got["bmp"]["width"], got["bmp"]["height"]) == (44, 18)
     assert (got["webp"]["width"], got["webp"]["height"]) == (123, 45)
     assert (got["webp_l"]["width"], got["webp_l"]["height"]) == (77, 31)
-
-
-def test_media_features_identical_pixels_across_tiff_and_bmp(spark):
-    """The same bilevel page through the G4-fax TIFF decoder and the BMP
-    decoder yields byte-identical pixels ⇒ identical histograms — feature
-    vectors are provably from DECODE, not byte hashes."""
-    from gnosis_ocr_spark.operators.multimodal import media_features
-
-    gray = _doc_gray(48, 32)
-    bilevel = np.where(gray < 128, 0, 255).astype(np.uint8)
-    rows = [
-        ("tif", bytearray(T.encode_tiff_gray(
-            bilevel.tobytes(), 48, 32, compression="g4", photometric=0))),
-        ("bmp", bytearray(M.encode_gray_bmp(bilevel.tobytes(), 48, 32))),
-    ]
-    df = spark.createDataFrame(rows, schema="url string, data binary")
-    got = {r["url"]: np.array(r["feature"])
-           for r in media_features(df, dim=8).collect()}
-    assert float(np.abs(got["tif"] - got["bmp"]).max()) == 0.0
-    assert float(got["tif"].sum()) == pytest.approx(1.0)
-
-
-
-def _lossy_webp_500x400() -> bytes:
-    import numpy as np
-
-    from gnosis_ocr_spark.functions.codec_vp8 import build_webp_lossy
-
-    yy, xx = np.mgrid[0:400, 0:500]
-    return build_webp_lossy(
-        ((yy // 7 * 31 + xx // 9 * 17) % 256).astype(np.uint8), qindex=80)[0]
-
-def test_resize_real_for_tiff_and_bmp(spark):
-    from gnosis_ocr_spark.functions.codec_png import (
-        decode_dimensions,
-        decode_pixels,
-    )
-    from gnosis_ocr_spark.operators.multimodal import resize_images
-
-    gray = _doc_gray(300, 120, seed=13)
-    rows = [
-        ("tif", bytearray(T.encode_tiff_gray(
-            gray.tobytes(), 300, 120, compression="g4", photometric=0,
-            rows_per_strip=50))),
-        ("bmp", bytearray(M.encode_gray_bmp(gray.tobytes(), 300, 120))),
-        ("webp", bytearray(_lossy_webp_500x400())),
-    ]
-    df = spark.createDataFrame(rows, schema="url string, data binary")
-    got = {r["url"]: r.asDict() for r in resize_images(df, max_dim=64).collect()}
-    for k in ("tif", "bmp"):
-        assert got[k]["status"] == "resized"
-        assert max(got[k]["width"], got[k]["height"]) == 64
-        w, h = decode_dimensions(bytes(got[k]["data"]))
-        assert (w, h) == (got[k]["width"], got[k]["height"])
-        decode_pixels(bytes(got[k]["data"]))  # output PNG really decodes
-    # round 5: lossy WebP decodes in-engine (codec_vp8) → real resize
-    assert got["webp"]["status"] == "resized"
-    assert max(got["webp"]["width"], got["webp"]["height"]) == 64
-    w, h = decode_dimensions(bytes(got["webp"]["data"]))
-    assert (w, h) == (got["webp"]["width"], got["webp"]["height"])
 
 
 def test_tiff_orientation_tag_applies_all_transforms():

@@ -348,61 +348,3 @@ def test_mutation_fuzz_never_hangs_or_segfaults(pos, val):
         assert len(argb) == w * h
     except ValueError:
         pass
-
-
-# -------------------------------------------------------- spark integration
-
-
-def test_media_features_real_for_lossless_webp(spark):
-    """media_features over a VP8L WebP equals the decoded-luma histogram
-    (the REAL path), and differs from the undecodable-bytes stub."""
-    from gnosis_ocr_spark.operators.multimodal import media_features
-
-    gray = _rand_gray(40, 30, seed=5)
-    webp = V.encode_webp_lossless_gray(gray, 40, 30)
-    df = spark.createDataFrame(
-        [("u1", bytearray(webp))], "url string, data binary"
-    )
-    row = media_features(df, dim=8).collect()[0]
-    assert row.media_type == "image/webp"
-    px = np.frombuffer(gray, dtype=np.uint8)
-    hist, _ = np.histogram(px, bins=8, range=(0, 256))
-    expected = (hist / len(px)).astype(np.float32)
-    assert np.allclose(row.feature, expected, atol=1e-6)
-
-
-def test_resize_images_real_for_lossless_webp(spark):
-    from gnosis_ocr_spark.functions.codec_png import decode_png_gray
-    from gnosis_ocr_spark.operators.multimodal import resize_images
-
-    gray = _grad_gray(96, 64)
-    webp = V.encode_webp_lossless_gray(gray, 96, 64)
-    df = spark.createDataFrame(
-        [("u1", bytearray(webp))], "url string, data binary"
-    )
-    row = resize_images(df, max_dim=32).collect()[0]
-    assert row.status == "resized"
-    assert max(row.width, row.height) <= 32
-    dw, dh, _ = decode_png_gray(bytes(row.data))
-    assert (dw, dh) == (row.width, row.height)
-
-
-def test_resize_lossy_webp_decodes_real(spark):
-    # round 5: lossy WebP rides the real decode→resize path (codec_vp8)
-    import numpy as np
-
-    from gnosis_ocr_spark.functions.codec_png import decode_png_gray
-    from gnosis_ocr_spark.functions.codec_vp8 import build_webp_lossy
-    from gnosis_ocr_spark.operators.multimodal import resize_images
-
-    yy, xx = np.mgrid[0:80, 0:120]
-    blob, recon = build_webp_lossy(
-        ((yy * 3 + xx * 2) % 256).astype(np.uint8), qindex=10)
-    df = spark.createDataFrame(
-        [("u1", bytearray(blob))], "url string, data binary"
-    )
-    row = resize_images(df, max_dim=32).collect()[0]
-    assert row.status == "resized"
-    assert max(row.width, row.height) <= 32
-    dw, dh, _ = decode_png_gray(bytes(row.data))
-    assert (dw, dh) == (row.width, row.height)
