@@ -24,12 +24,16 @@ data feeds straight into an image's sample buffer. Rows are packed
 MSB-first and padded to a byte boundary (stride = ceil(columns/8)).
 
 Throughput honesty: the mode/run state machine is per-changing-element
-Python (row materialization is numpy). Scanned text has few transitions
-per row, so cost is O(transitions), not O(pixels) — same honesty class as
+Python, one table lookup per code word with the bit reader's state in
+locals for the row; the image is built with numpy from the rows'
+changing elements, a block of rows at a time. Scanned text has few
+transitions per row, so cost is O(transitions), not O(pixels) — same honesty class as
 codec_jpeg's entropy decoder; the libtiff swap seam is the same.
 """
 
 from __future__ import annotations
+
+import itertools
 
 import numpy as np
 
@@ -145,18 +149,20 @@ def _run_lut(dec: dict[tuple[int, int], int]) -> list:
 _WHITE_LUT = _run_lut(_WHITE_DEC)
 _BLACK_LUT = _run_lut(_BLACK_DEC)
 
-# 7-bit prefix LUT for the T.6 mode codes; None = EOL prefix / corrupt
+# 7-bit prefix LUT for the T.6 mode codes → (mode, code length), where
+# mode is the vertical a1-b1 offset (-3..3), _HORIZ or _PASS; None = EOL
+# prefix / corrupt
+_HORIZ = 8
+_PASS = 9
 _MODE_LUT: list = [None] * 128
 for _prefix, _mode in (
-    ("1", "v0"), ("011", "vr1"), ("010", "vl1"), ("001", "h"),
-    ("0001", "p"), ("000011", "vr2"), ("000010", "vl2"),
-    ("0000011", "vr3"), ("0000010", "vl3"),
+    ("1", 0), ("011", 1), ("010", -1), ("001", _HORIZ),
+    ("0001", _PASS), ("000011", 2), ("000010", -2),
+    ("0000011", 3), ("0000010", -3),
 ):
     _base = int(_prefix, 2) << (7 - len(_prefix))
     for _i in range(1 << (7 - len(_prefix))):
         _MODE_LUT[_base + _i] = (_mode, len(_prefix))
-_V_DELTA = {"v0": 0, "vr1": 1, "vl1": -1, "vr2": 2, "vl2": -2,
-            "vr3": 3, "vl3": -3}
 
 
 class _BitReader:
@@ -239,20 +245,36 @@ class _BitWriter:
         return bytes(self.buf)
 
 
-def _read_run(br: _BitReader, black: bool) -> int:
-    """One complete MH run length: zero or more makeup codes + a
-    terminating code (<64). Raises on unknown code words."""
-    lut = _BLACK_LUT if black else _WHITE_LUT
+def _read_run(
+    lut: list, data: bytes, nbytes: int, pos: int, acc: int, nbits: int,
+    pad: int,
+) -> tuple[int, int, int, int, int]:
+    """One complete MH run length — zero or more makeup codes + a
+    terminating code (<64) — read from ``lut`` (_WHITE_LUT/_BLACK_LUT)
+    on unpacked :class:`_BitReader` state → (run, pos, acc, nbits, pad).
+    One refill check and one table index per code word; raises on
+    unknown code words and on reads into the past-EOF padding."""
     total = 0
     while True:
-        hit = lut[br.peek(_MAX_CODE_LEN)]
+        while nbits < 13:  # refill; past-EOF fills are zeros (pad)
+            if pos < nbytes:
+                acc = (acc << 8) | data[pos]
+                pos += 1
+            else:
+                acc <<= 8
+                pad += 8
+            nbits += 8
+        hit = lut[(acc >> (nbits - 13)) & 0x1FFF]
         if hit is None:
             raise ValueError("CCITT: bad run code")
         run, length = hit
-        br.skip(length)
+        nbits -= length
+        acc &= (1 << nbits) - 1
+        if nbits < pad:  # consumed into the padding
+            raise ValueError("CCITT: truncated stream")
         total += run
         if run < 64:  # terminating code ends the run
-            return total
+            return total, pos, acc, nbits, pad
 
 
 def _write_run(bw: _BitWriter, run: int, black: bool) -> None:
@@ -272,16 +294,6 @@ def _transitions(row: np.ndarray) -> list[int]:
     return np.nonzero(padded)[0].tolist()
 
 
-def _row_from_transitions(cur: list[int], columns: int) -> np.ndarray:
-    """Materialize a bool row (True = black) from changing positions."""
-    row = np.zeros(columns, dtype=bool)
-    for i in range(0, len(cur), 2):
-        start = cur[i]
-        end = cur[i + 1] if i + 1 < len(cur) else columns
-        row[start:end] = True
-    return row
-
-
 def _b1_index(ref: list[int], a0: int, color: int) -> int:
     """First index i with ref[i] > a0 and parity matching the coding color
     (color 0 = white needs even i: a white->black transition)."""
@@ -296,7 +308,13 @@ def _b1_index(ref: list[int], a0: int, color: int) -> int:
 
 def _decode_2d_row(br: _BitReader, ref: list[int], columns: int) -> list[int]:
     """Decode one 2-D-coded row (T.6 / T.4 §4.2.1 mode words) against the
-    reference line's changing elements; returns the new changing elements."""
+    reference line's changing elements; returns the new changing elements.
+    The reader's state lives in locals for the row: one refill check and
+    one table index per mode word (the :class:`_BitReader` rules,
+    inlined); the horizontal mode's two runs go through :func:`_read_run`
+    on the same state."""
+    data, nbytes = br.data, br.nbytes
+    pos, acc, nbits, pad = br.pos, br.acc, br.nbits, br.pad
     cur: list[int] = []
     a0 = -1
     color = 0
@@ -307,41 +325,61 @@ def _decode_2d_row(br: _BitReader, ref: list[int], columns: int) -> list[int]:
             lo += 1
         i = lo if (lo & 1) == color else lo + 1
         b1 = ref[i] if i < nref else columns
-        hit = _MODE_LUT[br.peek(7)]
+        while nbits < 13:  # refill; past-EOF fills are zeros (pad)
+            if pos < nbytes:
+                acc = (acc << 8) | data[pos]
+                pos += 1
+            else:
+                acc <<= 8
+                pad += 8
+            nbits += 8
+        hit = _MODE_LUT[(acc >> (nbits - 7)) & 0x7F]
         if hit is None:  # EOL prefix mid-row = EOFB / corrupt end
             raise ValueError("CCITT: unexpected EOL in G4 row")
         mode, length = hit
-        br.skip(length)
-        if mode == "h":  # horizontal: two MH runs
-            start = a0 if a0 > 0 else 0
-            r1 = _read_run(br, black=bool(color))
-            r2 = _read_run(br, black=not bool(color))
-            a1 = start + r1
-            a2 = a1 + r2
-            cur.append(a1 if a1 < columns else columns)
-            cur.append(a2 if a2 < columns else columns)
-            a0 = a2
-        elif mode == "p":  # pass
+        nbits -= length
+        acc &= (1 << nbits) - 1
+        if nbits < pad:  # consumed into the padding
+            raise ValueError("CCITT: truncated stream")
+        if mode == _HORIZ:  # horizontal: two MH runs, a0a1 then a1a2
+            a1 = a0 if a0 > 0 else 0
+            lut = _BLACK_LUT if color else _WHITE_LUT
+            for _ in range(2):
+                run, pos, acc, nbits, pad = _read_run(
+                    lut, data, nbytes, pos, acc, nbits, pad
+                )
+                a1 += run
+                cur.append(a1 if a1 < columns else columns)
+                lut = _WHITE_LUT if lut is _BLACK_LUT else _BLACK_LUT
+            a0 = a1
+        elif mode == _PASS:
             a0 = ref[i + 1] if i + 1 < nref else columns
-        else:  # vertical family
-            a1 = b1 + _V_DELTA[mode]
+        else:  # vertical family: mode is the a1 - b1 offset
+            a1 = b1 + mode
             # clamp to [0, columns] (corrupt streams can overshoot)
             c = a1 if a1 < columns else columns
             cur.append(c if c > 0 else 0)
             a0, color = a1, color ^ 1
+    br.pos, br.acc, br.nbits, br.pad = pos, acc, nbits, pad
     return cur
 
 
 def _decode_1d_row(br: _BitReader, columns: int) -> list[int]:
-    """Decode one 1-D MH-coded row; returns its changing elements."""
-    pos = 0
-    color = 0
+    """Decode one 1-D MH-coded row; returns its changing elements. Reader
+    state in locals, as in :func:`_decode_2d_row`."""
+    data, nbytes = br.data, br.nbytes
+    pos, acc, nbits, pad = br.pos, br.acc, br.nbits, br.pad
+    x = 0
+    lut = _WHITE_LUT
     cur: list[int] = []
-    while pos < columns:
-        run = _read_run(br, black=bool(color))
-        pos += run
-        cur.append(min(pos, columns))
-        color ^= 1
+    while x < columns:
+        run, pos, acc, nbits, pad = _read_run(
+            lut, data, nbytes, pos, acc, nbits, pad
+        )
+        x += run
+        cur.append(x if x < columns else columns)
+        lut = _BLACK_LUT if lut is _WHITE_LUT else _WHITE_LUT
+    br.pos, br.acc, br.nbits, br.pad = pos, acc, nbits, pad
     return cur
 
 
@@ -362,10 +400,10 @@ def decode_g4(
         raise ValueError("CCITT: image exceeds pixel bound")
     br = _BitReader(data)
     ref: list[int] = []  # imaginary all-white reference line
-    out_rows: list[np.ndarray] = []
+    sink = _RowSink(columns)
     max_rows = rows if rows > 0 else max(1, MAX_PIXELS // columns)
     eol = int(_EOL, 2)
-    while len(out_rows) < max_rows:
+    while sink.count < max_rows:
         if byte_align:
             # EncodedByteAlign aligns each ROW start, but EOFB is written
             # UNALIGNED right after the last row (our encoder and the
@@ -381,13 +419,13 @@ def decode_g4(
         if br.peek12() == eol:  # EOFB (or stray EOL) terminates
             break
         cur = _decode_2d_row(br, ref, columns)
-        out_rows.append(_row_from_transitions(cur, columns))
+        sink.add(cur)
         ref = cur
         if rows <= 0 and br.eof():
             break
-    if rows > 0 and len(out_rows) < rows:
+    if rows > 0 and sink.count < rows:
         raise ValueError("CCITT: truncated image")
-    return _pack_rows(out_rows, columns, black_is_1)
+    return sink.pack(black_is_1)
 
 
 def decode_g3_2d(
@@ -412,9 +450,9 @@ def decode_g3_2d(
     br = _BitReader(data)
     eol = int(_EOL, 2)
     ref: list[int] = []
-    out_rows: list[np.ndarray] = []
+    sink = _RowSink(columns)
     max_rows = rows if rows > 0 else max(1, MAX_PIXELS // columns)
-    while len(out_rows) < max_rows:
+    while sink.count < max_rows:
         if byte_align:
             br.align()
         # zero fill bits are permitted before each EOL (T.4 §4.1.2)
@@ -435,11 +473,11 @@ def decode_g3_2d(
         cur = _decode_1d_row(br, columns) if tag else _decode_2d_row(
             br, ref, columns
         )
-        out_rows.append(_row_from_transitions(cur, columns))
+        sink.add(cur)
         ref = cur
-    if rows > 0 and len(out_rows) < rows:
+    if rows > 0 and sink.count < rows:
         raise ValueError("CCITT: truncated image")
-    return _pack_rows(out_rows, columns, black_is_1)
+    return sink.pack(black_is_1)
 
 
 def decode_g3_1d(
@@ -457,10 +495,10 @@ def decode_g3_1d(
     if rows > 0 and rows * columns > MAX_PIXELS:
         raise ValueError("CCITT: image exceeds pixel bound")
     br = _BitReader(data)
-    out_rows: list[np.ndarray] = []
+    sink = _RowSink(columns)
     max_rows = rows if rows > 0 else max(1, MAX_PIXELS // columns)
     eol = int(_EOL, 2)
-    while len(out_rows) < max_rows:
+    while sink.count < max_rows:
         if byte_align:
             br.align()
         # EOLs may carry FILL (zero bits) before them (T.4 §4.1.2 — the
@@ -477,23 +515,84 @@ def decode_g3_1d(
                 break
         if br.eof():
             break
-        cur = _decode_1d_row(br, columns)
-        out_rows.append(_row_from_transitions(cur, columns))
+        sink.add(_decode_1d_row(br, columns))
         if rows <= 0 and br.eof():
             break
-    if rows > 0 and len(out_rows) < rows:
+    if rows > 0 and sink.count < rows:
         raise ValueError("CCITT: truncated image")
-    return _pack_rows(out_rows, columns, black_is_1)
+    return sink.pack(black_is_1)
 
 
-def _pack_rows(
-    out_rows: list[np.ndarray], columns: int, black_is_1: bool
-) -> bytes:
-    if not out_rows:
-        return b""
-    black = np.vstack(out_rows)
-    bits = black if black_is_1 else ~black
-    return np.packbits(bits, axis=1).tobytes()
+def _image_from_transitions(rows: list[list[int]], columns: int) -> np.ndarray:
+    """(len(rows), columns) bool image (True = black) from each row's
+    changing elements, built once per image. A row's runs alternate
+    white/black from column 0; an odd count leaves the last run black
+    to the row end. Decoded rows are non-decreasing, so the image is the
+    run-length expansion of all rows' toggle positions laid end to end
+    (odd rows get a closing toggle at the row end). A corrupt stream can
+    step a row backwards; then each [start, end) pair is painted, the
+    per-row rule."""
+    n = len(rows)
+    counts = np.fromiter(map(len, rows), dtype=np.int64, count=n)
+    pos = np.fromiter(
+        itertools.chain.from_iterable(rows), dtype=np.int64,
+        count=int(counts.sum()),
+    )
+    pos += np.repeat(np.arange(n, dtype=np.int64) * columns, counts)
+    odd = np.flatnonzero(counts & 1)
+    pos = np.insert(pos, np.cumsum(counts)[odd], (odd + 1) * columns)
+    runs = np.diff(pos, prepend=0, append=n * columns)
+    if (runs >= 0).all():
+        color = (np.arange(runs.size) & 1).astype(bool)
+        return np.repeat(color, runs).reshape(n, columns)
+    black = np.zeros((n, columns), dtype=bool)
+    for r, cur in enumerate(rows):
+        for i in range(0, len(cur), 2):
+            end = cur[i + 1] if i + 1 < len(cur) else columns
+            black[r, cur[i] : end] = True
+    return black
+
+
+class _RowSink:
+    """Decoded rows' changing elements, materialized into bool image
+    blocks every ``_SINK_FLUSH`` transitions: one numpy build per block
+    instead of one array per row, and the transition lists a dense
+    (hostile) stream piles up stay bounded."""
+
+    __slots__ = ("columns", "rows", "pending", "count", "blocks")
+
+    def __init__(self, columns: int) -> None:
+        self.columns = columns
+        self.rows: list[list[int]] = []
+        self.pending = 0
+        self.count = 0
+        self.blocks: list[np.ndarray] = []
+
+    def add(self, cur: list[int]) -> None:
+        self.rows.append(cur)
+        self.count += 1
+        self.pending += len(cur)
+        if self.pending > _SINK_FLUSH:
+            self._flush()
+
+    def _flush(self) -> None:
+        if self.rows:
+            self.blocks.append(_image_from_transitions(self.rows, self.columns))
+            self.rows = []
+            self.pending = 0
+
+    def pack(self, black_is_1: bool) -> bytes:
+        """Packed 1-bpp rows (stride = ceil(columns/8)); b"" for none."""
+        self._flush()
+        if not self.blocks:
+            return b""
+        blocks = self.blocks
+        black = blocks[0] if len(blocks) == 1 else np.vstack(blocks)
+        bits = black if black_is_1 else ~black
+        return np.packbits(bits, axis=1).tobytes()
+
+
+_SINK_FLUSH = 1 << 16
 
 
 def _unpack_rows(

@@ -35,8 +35,9 @@ like codec_ccitt's defaults.
 Throughput honesty: MQ decoding is inherently per-pixel (one arithmetic
 decision per pixel — there is no run-length shortcut like fax MH/MMR), so
 the decoder is O(pixels) Python with an incremental-context fast path for
-nominal AT positions. Same honesty class as codec_jpeg's entropy decoder;
-the jbig2dec swap seam is the same.
+nominal AT positions that holds the MQ coder state in locals for the row.
+Same honesty class as codec_jpeg's entropy decoder; the jbig2dec swap
+seam is the same.
 """
 
 from __future__ import annotations
@@ -85,6 +86,22 @@ for _i, (_qe, _nmps, _nlps, _sw) in enumerate(_QE):
         _NMPS_ST[_st] = (_nmps << 1) | _mps
         _NLPS_ST[_st] = (_nlps << 1) | (_mps ^ 1 if _sw else _mps)
 del _i, _qe, _nmps, _nlps, _sw, _mps, _st
+# RENORMD shift count for A < 0x8000: the left shifts that bring A back
+# to 0x8000 or more, for the decode loops that take them in one step
+_RENORM_SHIFT = bytes([0] + [16 - _a.bit_length() for _a in range(1, 0x8000)])
+
+
+def _mq_bytein(data: bytes, n: int, bp: int, c: int) -> tuple[int, int, int]:
+    """BYTEIN (T.88 E.3.4) on unpacked coder state → (bp, c, ct). Shared
+    by :class:`_MQDecoder` and the decode loops that hold the coder state
+    in locals; it runs once per 8 renormalization shifts."""
+    b = data[bp] if bp < n else 0xFF
+    if b == 0xFF:
+        b1 = data[bp + 1] if bp + 1 < n else 0xFF
+        if b1 > 0x8F:  # marker / end of data: feed 1-bits, don't advance
+            return bp, c + 0xFF00, 8
+        return bp + 1, c + (b1 << 9), 7
+    return bp + 1, c + ((data[bp + 1] if bp + 1 < n else 0xFF) << 8), 8
 
 
 class _MQDecoder:
@@ -99,30 +116,11 @@ class _MQDecoder:
     def __init__(self, data: bytes) -> None:
         self.data = data
         self.n = len(data)
-        self.bp = 0
         b0 = data[0] if self.n > 0 else 0xFF
-        self.c = b0 << 16
-        self._bytein()
-        self.c = (self.c << 7) & 0xFFFFFFFF
-        self.ct -= 7
+        self.bp, c, ct = _mq_bytein(data, self.n, 0, b0 << 16)
+        self.c = (c << 7) & 0xFFFFFFFF
+        self.ct = ct - 7
         self.a = 0x8000
-
-    def _bytein(self) -> None:
-        data, bp, n = self.data, self.bp, self.n
-        b = data[bp] if bp < n else 0xFF
-        if b == 0xFF:
-            b1 = data[bp + 1] if bp + 1 < n else 0xFF
-            if b1 > 0x8F:  # marker / end of data: feed 1-bits, don't advance
-                self.c += 0xFF00
-                self.ct = 8
-            else:
-                self.bp = bp + 1
-                self.c += b1 << 9
-                self.ct = 7
-        else:
-            self.bp = bp + 1
-            self.c += (data[bp + 1] if bp + 1 < n else 0xFF) << 8
-            self.ct = 8
 
     def decode(self, states: bytearray, cx: int) -> int:
         st = states[cx]
@@ -151,9 +149,7 @@ class _MQDecoder:
         c, ct = self.c, self.ct
         while True:  # RENORMD
             if ct == 0:
-                self.c = c
-                self._bytein()
-                c, ct = self.c, self.ct
+                self.bp, c, ct = _mq_bytein(self.data, self.n, self.bp, c)
             a = (a << 1) & 0xFFFF
             c = (c << 1) & 0xFFFFFFFF
             ct -= 1
@@ -349,7 +345,7 @@ def _decode_bitmap(
                     bitmap[y] = bitmap[y - 1]
                 continue
         if nominal:
-            _decode_row_nominal(decode, states, bitmap, y, width, template)
+            _decode_row_nominal(dec, states, bitmap, y, width, template)
         else:
             _decode_row_generic(decode, states, bitmap, y, width, offsets)
     return bitmap
@@ -366,47 +362,81 @@ _NOMINAL_SPANS = (
 
 
 def _decode_row_nominal(
-    decode, states: bytearray, bitmap: np.ndarray, y: int, width: int,
-    template: int,
+    dec: _MQDecoder, states: bytearray, bitmap: np.ndarray, y: int,
+    width: int, template: int,
 ) -> None:
     """Incremental-context row decode for nominal AT positions: each
     reference row's window is contiguous, so the context is three shift
-    registers updated with one new bit per column step."""
+    registers updated with one new bit per column step. Reference rows
+    are zero-padded ``bytes`` (4 columns each side covers every nominal
+    window), and the MQ coder state lives in locals for the row."""
     s2, s1, n0 = _NOMINAL_SPANS[template]
-    row = bitmap[y]
-    r1 = bitmap[y - 1] if y >= 1 else None
-    r2 = bitmap[y - 2] if y >= 2 else None
-
-    def bit(r, x: int) -> int:
-        if r is None or x < 0 or x >= width:
-            return 0
-        return int(r[x])
-
-    if s2 is not None:
-        w2 = s2[1] - s2[0] + 1
-        m2 = (1 << w2) - 1
-        c2 = 0
-        for x in range(s2[0], s2[1]):  # seed bits for x=0, minus the last
-            c2 = (c2 << 1) | bit(r2, x)
+    zero = bytes(width)
+    pad = b"\0\0\0\0"
+    r1 = pad + (bitmap[y - 1].tobytes() if y >= 1 else zero) + pad
+    if s2 is None:  # single reference row: a row-2 register that stays 0
+        r2, s2, m2 = r1, (0, 0), 0
+    else:
+        r2 = pad + (bitmap[y - 2].tobytes() if y >= 2 else zero) + pad
+        m2 = (1 << (s2[1] - s2[0] + 1)) - 1
+    c2 = 0
+    for x in range(s2[0], s2[1]):  # seed bits for x=0, minus the last
+        c2 = ((c2 << 1) | r2[x + 4]) & m2
     w1 = s1[1] - s1[0] + 1
     m1 = (1 << w1) - 1
     c1 = 0
     for x in range(s1[0], s1[1]):
-        c1 = (c1 << 1) | bit(r1, x)
+        c1 = (c1 << 1) | r1[x + 4]
     m0 = (1 << n0) - 1
     c0 = 0  # row-0 window x-n0..x-1 is all left of x: zeros at x=0
     sh0 = n0
     sh1 = w1 + n0
+    e1 = s1[1] + 4
+    e2 = s2[1] + 4
+    row = bytearray(width)
+    qe_t, nmps, nlps, shift_t = _QE_ST, _NMPS_ST, _NLPS_ST, _RENORM_SHIFT
+    data, n = dec.data, dec.n
+    a, c, ct, bp = dec.a, dec.c, dec.ct, dec.bp
     for x in range(width):
-        c1 = ((c1 << 1) | bit(r1, x + s1[1])) & m1
-        if s2 is not None:
-            c2 = ((c2 << 1) | bit(r2, x + s2[1])) & m2
-            cx = (c2 << sh1) | (c1 << sh0) | c0
+        c1 = ((c1 << 1) | r1[x + e1]) & m1
+        c2 = ((c2 << 1) | r2[x + e2]) & m2
+        cx = (c2 << sh1) | (c1 << sh0) | c0
+        # _MQDecoder.decode, inlined on local coder state, with RENORMD's
+        # shifts taken in one step
+        st = states[cx]
+        qe = qe_t[st]
+        a -= qe
+        if ((c >> 16) & 0xFFFF) < qe:
+            if a < qe:
+                d = st & 1
+                states[cx] = nmps[st]
+            else:
+                d = (st & 1) ^ 1
+                states[cx] = nlps[st]
+            a = qe
         else:
-            cx = (c1 << sh0) | c0
-        d = decode(states, cx)
+            c -= qe << 16
+            if a & 0x8000:
+                d = st & 1
+            elif a < qe:
+                d = (st & 1) ^ 1
+                states[cx] = nlps[st]
+            else:
+                d = st & 1
+                states[cx] = nmps[st]
+        if a < 0x8000:  # RENORMD, all shifts at once
+            s = shift_t[a]
+            a <<= s
+            while s > ct:
+                c = (c << ct) & 0xFFFFFFFF
+                s -= ct
+                bp, c, ct = _mq_bytein(data, n, bp, c)
+            c = (c << s) & 0xFFFFFFFF
+            ct -= s
         row[x] = d
         c0 = ((c0 << 1) | d) & m0
+    dec.a, dec.c, dec.ct, dec.bp = a, c, ct, bp
+    bitmap[y] = np.frombuffer(row, dtype=np.uint8)
 
 
 def _decode_row_generic(

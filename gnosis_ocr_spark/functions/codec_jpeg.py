@@ -78,6 +78,33 @@ MAX_PIXELS = 50_000_000
 # ---------------------------------------------------------------- bits
 
 
+def _fill(
+    d: bytes, pos: int, acc: int, nbits: int, marker: int | None
+) -> tuple[int, int, int, int | None]:
+    """Top the bit buffer up past 24 bits → (pos, acc, nbits, marker).
+    Works on unpacked reader state so the scan loops that hold it in
+    locals share it with :class:`_BitReader`."""
+    while nbits <= 24:
+        if marker is not None or pos >= len(d):
+            # feed 1-bits past the end (spec: padding); decode stops at EOB
+            acc = (acc << 8) | 0xFF
+            nbits += 8
+            continue
+        b = d[pos]
+        if b == 0xFF:
+            nxt = d[pos + 1] if pos + 1 < len(d) else 0xD9
+            if nxt == 0x00:  # stuffed 0xFF data byte
+                pos += 2
+            else:  # a real marker terminates the entropy segment
+                marker = nxt
+                continue
+        else:
+            pos += 1
+        acc = (acc << 8) | b
+        nbits += 8
+    return pos, acc, nbits, marker
+
+
 class _BitReader:
     """MSB-first bit reader over entropy-coded data with 0xFF00 unstuffing;
     stops (and records) restart/terminating markers."""
@@ -90,26 +117,9 @@ class _BitReader:
         self.marker: int | None = None
 
     def _fill(self) -> None:
-        d = self.data
-        while self.nbits <= 24:
-            if self.marker is not None or self.pos >= len(d):
-                # feed 1-bits past the end (spec: padding); decode stops at EOB
-                self.acc = (self.acc << 8) | 0xFF
-                self.nbits += 8
-                continue
-            b = d[self.pos]
-            if b == 0xFF:
-                nxt = d[self.pos + 1] if self.pos + 1 < len(d) else 0xD9
-                if nxt == 0x00:  # stuffed 0xFF data byte
-                    self.pos += 2
-                else:  # a real marker terminates the entropy segment
-                    self.marker = nxt
-                    continue
-                b = 0xFF
-            else:
-                self.pos += 1
-            self.acc = (self.acc << 8) | b
-            self.nbits += 8
+        self.pos, self.acc, self.nbits, self.marker = _fill(
+            self.data, self.pos, self.acc, self.nbits, self.marker
+        )
 
     def bits(self, n: int) -> int:
         if n == 0:
@@ -151,6 +161,7 @@ class _BitReader:
 
 
 _FASTBITS = 10
+_FASTMASK = (1 << _FASTBITS) - 1
 
 
 class _Huff:
@@ -415,19 +426,26 @@ def _decode_prog_scan(
         comp, td, ta = scan[0]
         bh, bw = _comp_block_dims(frame, comp)
         blk = coefs[comp["id"]]
-        n = 0
-        for by in range(bh):
-            for bx in range(bw):
-                unit(n)
-                n += 1
-                if ss == 0:
+        if ss == 0:
+            n = 0
+            for by in range(bh):
+                for bx in range(bw):
+                    unit(n)
+                    n += 1
                     _prog_dc_block(
                         br, htabs, td, ah, al, state, blk[by, bx], comp["id"]
                     )
-                elif ah == 0:
-                    _prog_ac_first(br, htabs, ta, ss, se, al, state, blk[by, bx])
-                else:
-                    _prog_ac_refine(br, htabs, ta, ss, se, al, state, blk[by, bx])
+        else:
+            # AC bands decode into plain int lists (AC values stay well
+            # inside int32), written back once per scan
+            ac = _prog_ac_first if ah == 0 else _prog_ac_refine
+            blocks = blk[:bh, :bw].reshape(-1, 64).tolist()
+            for n, coef in enumerate(blocks):
+                unit(n)
+                ac(br, htabs, ta, ss, se, al, state, coef)
+            blk[:bh, :bw] = np.array(blocks, dtype=np.int32).reshape(
+                bh, bw, 64
+            )
     return _next_marker_pos(data, br)
 
 
@@ -444,6 +462,12 @@ def _prog_dc_block(br, htabs, td, ah, al, state, coef, cid):
             coef[0] = int(coef[0]) | (1 << al)
 
 
+# The scan loops below hold the bit reader's pos/acc/nbits/marker in
+# locals and write them back when they hand off (block end, restart
+# marker, long Huffman code); the inlined Huffman and bit reads are
+# _Huff.decode and _BitReader.bits on that state.
+
+
 def _prog_ac_first(br, htabs, ta, ss, se, al, state, coef):
     if state["eobrun"] > 0:
         state["eobrun"] -= 1
@@ -451,23 +475,50 @@ def _prog_ac_first(br, htabs, ta, ss, se, al, state, coef):
     act = htabs.get((1, ta))
     if act is None:
         raise JpegError("missing table")
+    fast = act.fast
+    data = br.data
+    pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
     k = ss
     while k <= se:
-        rs = act.decode(br)
+        if nbits < _FASTBITS:
+            pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+        hit = fast[(acc >> (nbits - _FASTBITS)) & _FASTMASK]
+        if hit is None:  # longer than the LUT: the method's bit-serial path
+            br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
+            rs = act.decode(br)
+            pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
+        else:
+            rs, ln = hit
+            nbits -= ln
+            acc &= (1 << nbits) - 1
         r, s = rs >> 4, rs & 0xF
         if s == 0:
             if r < 15:  # EOBn: run of (1<<r)+bits(r) all-done blocks
-                state["eobrun"] = (1 << r) - 1
+                eobrun = (1 << r) - 1
                 if r:
-                    state["eobrun"] += br.bits(r)
-                return
+                    if nbits < r:
+                        pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                    nbits -= r
+                    v = (acc >> nbits) & ((1 << r) - 1)
+                    acc &= (1 << nbits) - 1
+                    eobrun += v
+                state["eobrun"] = eobrun
+                break
             k += 16  # ZRL
         else:
             k += r
             if k > se:
                 raise JpegError("AC index overflow")
-            coef[k] = _extend(br.bits(s), s) << al
+            if nbits < s:
+                pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+            nbits -= s
+            v = (acc >> nbits) & ((1 << s) - 1)
+            acc &= (1 << nbits) - 1
+            if v < 1 << (s - 1):  # _extend
+                v -= (1 << s) - 1
+            coef[k] = v << al
             k += 1
+    br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
 
 
 def _prog_ac_refine(br, htabs, ta, ss, se, al, state, coef):
@@ -477,39 +528,71 @@ def _prog_ac_refine(br, htabs, ta, ss, se, al, state, coef):
     act = htabs.get((1, ta))
     if act is None:
         raise JpegError("missing table")
+    fast = act.fast
     p1 = 1 << al
-
-    def bump(k):
-        if br.bits(1):
-            v = int(coef[k])
-            if (v & p1) == 0:
-                coef[k] = v + (p1 if v >= 0 else -p1)
-
+    data = br.data
+    pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
     if state["eobrun"] > 0:
         for k in range(ss, se + 1):
-            if coef[k] != 0:
-                bump(k)
+            v = coef[k]
+            if v != 0:  # correction bit
+                if not nbits:
+                    pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                nbits -= 1
+                b = (acc >> nbits) & 1
+                acc &= (1 << nbits) - 1
+                if b and (v & p1) == 0:
+                    coef[k] = v + (p1 if v >= 0 else -p1)
         state["eobrun"] -= 1
+        br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
         return
     k = ss
     while k <= se:
-        rs = act.decode(br)
+        if nbits < _FASTBITS:
+            pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+        hit = fast[(acc >> (nbits - _FASTBITS)) & _FASTMASK]
+        if hit is None:  # longer than the LUT: the method's bit-serial path
+            br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
+            rs = act.decode(br)
+            pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
+        else:
+            rs, ln = hit
+            nbits -= ln
+            acc &= (1 << nbits) - 1
         r, s = rs >> 4, rs & 0xF
         newval = 0
         if s == 0:
             if r < 15:  # EOBn: correct the rest of this band, then run
-                state["eobrun"] = (1 << r) - 1
+                eobrun = (1 << r) - 1
                 if r:
-                    state["eobrun"] += br.bits(r)
+                    if nbits < r:
+                        pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                    nbits -= r
+                    v = (acc >> nbits) & ((1 << r) - 1)
+                    acc &= (1 << nbits) - 1
+                    eobrun += v
+                state["eobrun"] = eobrun
                 r = 64  # never exhausts inside the band
             # r == 15: ZRL — skip 16 zero-history coefficients
         else:
             if s != 1:
                 raise JpegError("bad refinement symbol")
-            newval = p1 if br.bits(1) else -p1
+            if not nbits:
+                pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+            nbits -= 1
+            b = (acc >> nbits) & 1
+            acc &= (1 << nbits) - 1
+            newval = p1 if b else -p1
         while k <= se:
-            if coef[k] != 0:
-                bump(k)
+            v = coef[k]
+            if v != 0:  # correction bit
+                if not nbits:
+                    pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                nbits -= 1
+                b = (acc >> nbits) & 1
+                acc &= (1 << nbits) - 1
+                if b and (v & p1) == 0:
+                    coef[k] = v + (p1 if v >= 0 else -p1)
             else:
                 if r == 0:
                     break
@@ -518,6 +601,7 @@ def _prog_ac_refine(br, htabs, ta, ss, se, al, state, coef):
         if k <= se and newval:
             coef[k] = newval
         k += 1
+    br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
 
 
 def _next_marker_pos(data: bytes, br: _BitReader) -> int:
@@ -579,6 +663,7 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
             raise JpegError("unreasonable component plane size")
         planes[comp["id"]] = np.zeros((ph, pw), dtype=np.float64)
     br = _BitReader(data, pos)
+    pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
     dc_pred = {comp["id"]: 0 for comp, _, _ in scan}
     pend_coefs = {comp["id"]: [] for comp, _, _ in scan}
     pend_pos = {comp["id"]: [] for comp, _, _ in scan}
@@ -586,7 +671,9 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and mcu_count and mcu_count % restart_interval == 0:
+                br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
                 m = br.align_to_marker()
+                pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
                 if m is None or not (0xD0 <= m <= 0xD7):
                     raise JpegError("expected restart marker")
                 for k in dc_pred:
@@ -597,18 +684,48 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
                 q = qtabs.get(comp["tq"])
                 if dct is None or act is None or q is None:
                     raise JpegError("missing table")
+                dfast, afast = dct.fast, act.fast
+                cid = comp["id"]
                 for by in range(comp["v"]):
                     for bx in range(comp["h"]):
                         # entropy-decode ONE block into a plain list; the
                         # IDCT batches per component after the scan (one
                         # einsum instead of 2 tiny matmuls per block)
                         coef = [0.0] * 64
-                        s = dct.decode(br)
-                        dc_pred[comp["id"]] += _extend(br.bits(s), s)
-                        coef[0] = float(dc_pred[comp["id"]])
+                        if nbits < _FASTBITS:
+                            pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                        hit = dfast[(acc >> (nbits - _FASTBITS)) & _FASTMASK]
+                        if hit is None:  # longer than the LUT: the method's bit-serial path
+                            br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
+                            s = dct.decode(br)
+                            pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
+                        else:
+                            s, ln = hit
+                            nbits -= ln
+                            acc &= (1 << nbits) - 1
+                        if s:
+                            if nbits < s:
+                                pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                            nbits -= s
+                            v = (acc >> nbits) & ((1 << s) - 1)
+                            acc &= (1 << nbits) - 1
+                            if v < 1 << (s - 1):  # _extend
+                                v -= (1 << s) - 1
+                            dc_pred[cid] += v
+                        coef[0] = float(dc_pred[cid])
                         k = 1
                         while k < 64:
-                            rs = act.decode(br)
+                            if nbits < _FASTBITS:
+                                pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                            hit = afast[(acc >> (nbits - _FASTBITS)) & _FASTMASK]
+                            if hit is None:  # longer than the LUT: the method's bit-serial path
+                                br.pos, br.acc, br.nbits, br.marker = pos, acc, nbits, marker
+                                rs = act.decode(br)
+                                pos, acc, nbits, marker = br.pos, br.acc, br.nbits, br.marker
+                            else:
+                                rs, ln = hit
+                                nbits -= ln
+                                acc &= (1 << nbits) - 1
                             r, size = rs >> 4, rs & 0xF
                             if size == 0:
                                 if r == 15:  # ZRL
@@ -618,9 +735,15 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
                             k += r
                             if k > 63:
                                 raise JpegError("AC index overflow")
-                            coef[k] = float(_extend(br.bits(size), size))
+                            if nbits < size:
+                                pos, acc, nbits, marker = _fill(data, pos, acc, nbits, marker)
+                            nbits -= size
+                            v = (acc >> nbits) & ((1 << size) - 1)
+                            acc &= (1 << nbits) - 1
+                            if v < 1 << (size - 1):  # _extend
+                                v -= (1 << size) - 1
+                            coef[k] = float(v)
                             k += 1
-                        cid = comp["id"]
                         pend_coefs[cid].append(coef)
                         pend_pos[cid].append(
                             ((my * comp["v"] + by) * 8, (mx * comp["h"] + bx) * 8)

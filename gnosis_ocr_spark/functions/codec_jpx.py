@@ -58,16 +58,29 @@ Scope honesty: tile grids whose origins go odd at some DWT level
 tile sizes — real encoders emit aligned ones) raise ValueError → codec_pdf/pdf_split map that to the opaque carry
 (same degradation as the JBIG2 halftone subset). Tier-1 is per-symbol
 Python like every entropy coder here — linear, Arrow-batched across
-pages, same honesty class as codec_jpeg's note.
+pages, same honesty class as codec_jpeg's note. The passes hold the MQ
+coder state in loop locals: ~0.5 µs per decision against ~0.7 µs
+through a ``_MQDecoder.decode`` call, so a 64×64 scanned page (~51k
+decisions) costs ~42 ms in the raster+OCR stage on a 4-vCPU VM
+(FIXTURES.md §8).
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
 
-from gnosis_ocr_spark.functions.codec_jbig2 import _MQDecoder, _MQEncoder
+from gnosis_ocr_spark.functions.codec_jbig2 import (
+    _NLPS_ST,
+    _NMPS_ST,
+    _QE_ST,
+    _RENORM_SHIFT,
+    _MQDecoder,
+    _MQEncoder,
+    _mq_bytein,
+)
 
 MAX_PIXELS = 50_000_000  # hostile-input allocation bound (codec_jpeg rationale)
 
@@ -257,22 +270,58 @@ _ZC_FLAT = tuple(bytes(_ZC_LUT[b]) for b in range(4))
 _SC_PAIR = bytes([1, 2, 0, 2, 2, 1, 0, 1, 0])
 
 
+@functools.lru_cache(maxsize=64)
+def _stripe_order(h: int, w: int) -> np.ndarray:
+    """Flat sample indices (y * w + x) of an h×w code-block in pass scan
+    order: 4-row stripes, column by column, top to bottom in a column."""
+    y = np.arange(h)
+    x = np.arange(w)
+    key = (y[:, None] // 4) * (4 * w) + x[None, :] * 4 + (y[:, None] % 4)
+    return np.argsort(key.ravel(), kind="stable")
+
+
+def _neighbor_or(sig: np.ndarray, causal: bool) -> np.ndarray:
+    """(h, w) OR of each sample's 8 neighbors in a padded (h+2, w+2)
+    0/1 significance plane; ``causal`` hides the row below each 4-row
+    stripe from the stripe's last row (style 0x08)."""
+    nb = (
+        sig[:-2, :-2] | sig[:-2, 1:-1] | sig[:-2, 2:]
+        | sig[1:-1, :-2] | sig[1:-1, 2:]
+    )
+    below = sig[2:, :-2] | sig[2:, 1:-1] | sig[2:, 2:]
+    if causal:
+        below[3::4] = 0
+    return nb | below
+
+
+def _by_stripe(m: np.ndarray, fill: int) -> np.ndarray:
+    """(h, w) → (ceil(h/4), 4, w) stripes; a partial last stripe is
+    padded with ``fill``."""
+    h, w = m.shape
+    r = -h % 4
+    if r:
+        m = np.concatenate([m, np.full((r, w), fill, dtype=m.dtype)])
+    return m.reshape(-1, 4, w)
+
+
 class _BlockCoder:
     """EBCOT Tier-1 code-block coder (T.800 Annex D, default code-block
     style): shared state machine driven either by an MQ decoder (filling
     magnitudes/signs) or an MQ encoder (emitting them). One instance per
     code-block.
 
-    Hot-loop honesty: EBCOT is per-symbol with in-pass feedback (a bit
-    decoded at (y, x) changes the context of the very next column), so
-    the passes are Python loops — but over FLAT bytearrays with inlined
-    neighbor reads, not numpy scalar indexing (measured ~10x). Same
-    throughput class as codec_jpeg's entropy decoder; the OpenJPEG swap
-    seam is the same."""
+    Hot-loop honesty: significance propagation and cleanup are per-symbol
+    with in-pass feedback (a bit decoded at (y, x) changes the context of
+    the very next column), so they are Python loops — over FLAT
+    bytearrays with the MQ decoder inlined on local state, not numpy
+    scalar indexing (measured ~10x). Magnitude refinement has no in-pass
+    feedback: numpy picks its members and contexts, and the loop only
+    decodes. Same throughput class as codec_jpeg's entropy decoder; the
+    OpenJPEG swap seam is the same."""
 
     __slots__ = (
-        "h", "w", "stride", "zlut", "sig", "sgn", "visited", "refined",
-        "mag", "causal",
+        "h", "w", "stride", "zlut", "sig", "sgn", "nbr", "visited",
+        "refined", "mag", "causal",
     )
 
     def __init__(
@@ -283,6 +332,9 @@ class _BlockCoder:
         self.zlut = _ZC_FLAT[band]
         self.sig = bytearray((h + 2) * (w + 2))
         self.sgn = bytearray((h + 2) * (w + 2))  # 0 none, 1 pos, 2 neg
+        # decoder's zero-coding LUT index per padded cell: 15 per
+        # significant horizontal neighbor, 5 per vertical, 1 per diagonal
+        self.nbr = bytearray((h + 2) * (w + 2))
         self.visited = bytearray(h * w)
         self.refined = bytearray(h * w)
         self.mag = [0] * (h * w)
@@ -313,143 +365,423 @@ class _BlockCoder:
 
     # -- decoding passes
 
+    # The MQ passes hold the decoder's a/c/ct/bp in locals and write them
+    # back once at the pass end; each "_MQDecoder.decode, inlined" block
+    # is that method on the local state, with RENORMD's shifts taken in
+    # one step (_RENORM_SHIFT). Zero-coding contexts come from ``nbr``,
+    # kept up to date as samples turn significant; a causal stripe's last
+    # row, whose stripe below is hidden, reads ``sig`` instead. SPP and
+    # CUP skip stripe columns that cannot code a symbol: whole-block
+    # numpy flags from the state at pass start, plus two in-pass flags
+    # for the neighbors scanned earlier in the pass — the previous column
+    # of the stripe (``left``) and the last row of the stripe above
+    # (``above``, indexed x + 1).
+
     def dec_sig_pass(self, mq, states, plane) -> None:
         h, w, W2 = self.h, self.w, self.stride
         sig, sgn, visited, mag = self.sig, self.sgn, self.visited, self.mag
+        nbr = self.nbr
         zlut, pair, sclut = self.zlut, _SC_PAIR, _SC_LUT
-        decode = mq.decode
+        # columns holding an insignificant sample with a significant
+        # neighbor; visited is all-zero here (the cleanup pass clears it)
+        sg = np.frombuffer(sig, dtype=np.uint8).reshape(h + 2, w + 2)
+        nb = np.frombuffer(nbr, dtype=np.uint8).reshape(h + 2, w + 2)
+        cand = nb[1:-1, 1:-1] > (sg[1:-1, 1:-1] * np.uint8(255))
+        live = [r.tobytes() for r in _by_stripe(cand, False).any(axis=1)]
+        qe_t, nmps, nlps, shift_t = _QE_ST, _NMPS_ST, _NLPS_ST, _RENORM_SHIFT
+        data, n = mq.data, mq.n
+        a, c, ct, bp = mq.a, mq.c, mq.ct, mq.bp
         bit = 1 << plane
+        above = bytes(w + 2)
         for y0 in range(0, h, 4):
             rows = min(4, h - y0)
+            last = rows - 1
             _cs = self._stripe_hide(y0, rows)
+            hid = -1 if _cs is None else last
+            cols = live[y0 >> 2]
+            below = bytearray(w + 2)
+            left = 0
             for x in range(w):
+                if not (
+                    cols[x] or left or above[x] or above[x + 1]
+                    or above[x + 2]
+                ):
+                    continue
+                left = 0
                 i = (y0 + 1) * W2 + x + 1
                 j = y0 * w + x
-                for _y in range(rows):
+                for y in range(rows):
                     if not sig[i]:
-                        ctx = zlut[
-                            ((sig[i - 1] + sig[i + 1]) * 3
-                             + sig[i - W2] + sig[i + W2]) * 5
-                            + sig[i - W2 - 1] + sig[i - W2 + 1]
-                            + sig[i + W2 - 1] + sig[i + W2 + 1]
-                        ]
-                        if ctx == 0:
-                            visited[j] = 0
+                        if y == hid:  # causal: stripe below hidden
+                            cx = zlut[
+                                ((sig[i - 1] + sig[i + 1]) * 3
+                                 + sig[i - W2] + sig[i + W2]) * 5
+                                + sig[i - W2 - 1] + sig[i - W2 + 1]
+                                + sig[i + W2 - 1] + sig[i + W2 + 1]
+                            ]
                         else:
+                            cx = zlut[nbr[i]]
+                        if cx:
                             visited[j] = 1
-                            if decode(states, ctx):
-                                sc, xor = sclut[
+                            # _MQDecoder.decode, inlined (zero coding)
+                            st = states[cx]
+                            qe = qe_t[st]
+                            a -= qe
+                            if ((c >> 16) & 0xFFFF) < qe:
+                                if a < qe:
+                                    d = st & 1
+                                    states[cx] = nmps[st]
+                                else:
+                                    d = (st & 1) ^ 1
+                                    states[cx] = nlps[st]
+                                a = qe
+                            else:
+                                c -= qe << 16
+                                if a & 0x8000:
+                                    d = st & 1
+                                elif a < qe:
+                                    d = (st & 1) ^ 1
+                                    states[cx] = nlps[st]
+                                else:
+                                    d = st & 1
+                                    states[cx] = nmps[st]
+                            if a < 0x8000:  # RENORMD, all shifts at once
+                                s = shift_t[a]
+                                a <<= s
+                                while s > ct:
+                                    c = (c << ct) & 0xFFFFFFFF
+                                    s -= ct
+                                    bp, c, ct = _mq_bytein(data, n, bp, c)
+                                c = (c << s) & 0xFFFFFFFF
+                                ct -= s
+                            if d:
+                                cx, xor = sclut[
                                     pair[sgn[i - 1] * 3 + sgn[i + 1]] * 3
                                     + pair[sgn[i - W2] * 3 + sgn[i + W2]]
                                 ]
+                                # _MQDecoder.decode, inlined (sign coding)
+                                st = states[cx]
+                                qe = qe_t[st]
+                                a -= qe
+                                if ((c >> 16) & 0xFFFF) < qe:
+                                    if a < qe:
+                                        d = st & 1
+                                        states[cx] = nmps[st]
+                                    else:
+                                        d = (st & 1) ^ 1
+                                        states[cx] = nlps[st]
+                                    a = qe
+                                else:
+                                    c -= qe << 16
+                                    if a & 0x8000:
+                                        d = st & 1
+                                    elif a < qe:
+                                        d = (st & 1) ^ 1
+                                        states[cx] = nlps[st]
+                                    else:
+                                        d = st & 1
+                                        states[cx] = nmps[st]
+                                if a < 0x8000:  # RENORMD, all shifts at once
+                                    s = shift_t[a]
+                                    a <<= s
+                                    while s > ct:
+                                        c = (c << ct) & 0xFFFFFFFF
+                                        s -= ct
+                                        bp, c, ct = _mq_bytein(data, n, bp, c)
+                                    c = (c << s) & 0xFFFFFFFF
+                                    ct -= s
                                 sig[i] = 1
-                                sgn[i] = 1 + (decode(states, sc) ^ xor)
+                                sgn[i] = 1 + (d ^ xor)
+                                nbr[i - 1] += 15
+                                nbr[i + 1] += 15
+                                nbr[i - W2] += 5
+                                nbr[i + W2] += 5
+                                nbr[i - W2 - 1] += 1
+                                nbr[i - W2 + 1] += 1
+                                nbr[i + W2 - 1] += 1
+                                nbr[i + W2 + 1] += 1
                                 mag[j] = bit
+                                left = 1
+                                if y == last:
+                                    below[x + 1] = 1
                     i += W2
                     j += w
-
             self._stripe_restore(_cs)
+            above = below
+        mq.a, mq.c, mq.ct, mq.bp = a, c, ct, bp
+
     def dec_mag_pass(self, mq, states, plane) -> None:
-        h, w, W2 = self.h, self.w, self.stride
-        sig, visited, refined, mag = (
-            self.sig, self.visited, self.refined, self.mag,
+        """Magnitude refinement has no in-pass feedback: its members
+        (significant, not visited by this plane's SPP) and their contexts
+        (own refined flag, neighbor significance) are fixed before the
+        pass starts, so both come from whole-block numpy, in stripe
+        order."""
+        h, w = self.h, self.w
+        sg = np.frombuffer(self.sig, dtype=np.uint8).reshape(h + 2, w + 2)
+        visited = np.frombuffer(self.visited, dtype=np.uint8)
+        refined = np.frombuffer(self.refined, dtype=np.uint8)
+        order = _stripe_order(h, w)
+        sel = order[(sg[1:-1, 1:-1].ravel() > visited)[order]]
+        if not sel.size:
+            return
+        nb = _neighbor_or(sg, self.causal).ravel()[sel]
+        ctx = np.where(
+            refined[sel] != 0, np.uint8(16), (nb != 0).view(np.uint8) + 14
         )
-        decode = mq.decode
+        mag = self.mag
         bit = 1 << plane
-        for y0 in range(0, h, 4):
-            rows = min(4, h - y0)
-            _cs = self._stripe_hide(y0, rows)
-            for x in range(w):
-                i = (y0 + 1) * W2 + x + 1
-                j = y0 * w + x
-                for _y in range(rows):
-                    if sig[i] and not visited[j]:
-                        if refined[j]:
-                            ctx = 16
-                        elif (
-                            sig[i - 1] or sig[i + 1] or sig[i - W2]
-                            or sig[i + W2] or sig[i - W2 - 1]
-                            or sig[i - W2 + 1] or sig[i + W2 - 1]
-                            or sig[i + W2 + 1]
-                        ):
-                            ctx = 15
-                        else:
-                            ctx = 14
-                        if decode(states, ctx):
-                            mag[j] |= bit
-                        refined[j] = 1
-                        visited[j] = 1
-                    i += W2
-                    j += w
+        qe_t, nmps, nlps, shift_t = _QE_ST, _NMPS_ST, _NLPS_ST, _RENORM_SHIFT
+        data, n = mq.data, mq.n
+        a, c, ct, bp = mq.a, mq.c, mq.ct, mq.bp
+        for j, cx in zip(sel.tolist(), ctx.tolist()):
+            # _MQDecoder.decode, inlined
+            st = states[cx]
+            qe = qe_t[st]
+            a -= qe
+            if ((c >> 16) & 0xFFFF) < qe:
+                if a < qe:
+                    d = st & 1
+                    states[cx] = nmps[st]
+                else:
+                    d = (st & 1) ^ 1
+                    states[cx] = nlps[st]
+                a = qe
+            else:
+                c -= qe << 16
+                if a & 0x8000:
+                    d = st & 1
+                elif a < qe:
+                    d = (st & 1) ^ 1
+                    states[cx] = nlps[st]
+                else:
+                    d = st & 1
+                    states[cx] = nmps[st]
+            if a < 0x8000:  # RENORMD, all shifts at once
+                s = shift_t[a]
+                a <<= s
+                while s > ct:
+                    c = (c << ct) & 0xFFFFFFFF
+                    s -= ct
+                    bp, c, ct = _mq_bytein(data, n, bp, c)
+                c = (c << s) & 0xFFFFFFFF
+                ct -= s
+            if d:
+                mag[j] |= bit
+        mq.a, mq.c, mq.ct, mq.bp = a, c, ct, bp
+        refined[sel] = 1
+        visited[sel] = 1
 
-            self._stripe_restore(_cs)
     def dec_cleanup_pass(self, mq, states, plane) -> None:
         h, w, W2 = self.h, self.w, self.stride
         sig, sgn, visited, mag = self.sig, self.sgn, self.visited, self.mag
+        nbr = self.nbr
         zlut, pair, sclut = self.zlut, _SC_PAIR, _SC_LUT
-        decode = mq.decode
+        sg = np.frombuffer(sig, dtype=np.uint8).reshape(h + 2, w + 2)
+        vis = _by_stripe(
+            np.frombuffer(visited, dtype=np.uint8).reshape(h, w), 1
+        )
+        # every sample visited (significant ones all are by now): the
+        # column codes nothing
+        done = [r.tobytes() for r in vis.min(axis=1)]
+        # run-length mode (T.800 D.4.4): a full stripe column with no
+        # visited sample whose 6x3 neighborhood window is insignificant —
+        # the 4 samples and all their ZC contexts are zero. Under causal
+        # the window's bottom row (the stripe below) is hidden.
+        nf = h >> 2
+        hz = sg[:, :-2] | sg[:, 1:-1] | sg[:, 2:]
+        win = hz[: 4 * nf].reshape(nf, 4, w).max(axis=1) | hz[4::4][:nf]
+        if not self.causal:
+            win |= hz[5::4][:nf]
+        rl = [
+            r.tobytes() for r in (vis[:nf].max(axis=1) == 0) & (win == 0)
+        ]
+        qe_t, nmps, nlps, shift_t = _QE_ST, _NMPS_ST, _NLPS_ST, _RENORM_SHIFT
+        data, n = mq.data, mq.n
+        a, c, ct, bp = mq.a, mq.c, mq.ct, mq.bp
         bit = 1 << plane
-        z3 = b"\x00\x00\x00"
+        above = bytes(w + 2)
         for y0 in range(0, h, 4):
-            full = y0 + 4 <= h
             rows = min(4, h - y0)
+            last = rows - 1
             _cs = self._stripe_hide(y0, rows)
+            hid = -1 if _cs is None else last
+            cols = done[y0 >> 2]
+            runs = rl[y0 >> 2] if rows == 4 else None
+            below = bytearray(w + 2)
+            left = 0
             for x in range(w):
+                if cols[x]:
+                    left = 0
+                    continue
                 i0 = (y0 + 1) * W2 + x + 1
                 j0 = y0 * w + x
                 start = 0
-                if full and not (
-                    visited[j0] or visited[j0 + w] or visited[j0 + 2 * w]
-                    or visited[j0 + 3 * w]
+                new = 0
+                if runs and runs[x] and not (
+                    left or above[x] or above[x + 1] or above[x + 2]
                 ):
-                    # run-length mode: the whole 6x3 neighborhood window
-                    # insignificant == the 4 samples and all their ZC
-                    # contexts are zero (T.800 D.4.4)
-                    p = i0 - W2 - 1
-                    if (
-                        sig[p : p + 3] == z3
-                        and sig[p + W2 : p + W2 + 3] == z3
-                        and sig[p + 2 * W2 : p + 2 * W2 + 3] == z3
-                        and sig[p + 3 * W2 : p + 3 * W2 + 3] == z3
-                        and sig[p + 4 * W2 : p + 4 * W2 + 3] == z3
-                        and sig[p + 5 * W2 : p + 5 * W2 + 3] == z3
-                    ):
-                        if not decode(states, _CTX_RL):
-                            continue  # whole column stays insignificant
-                        r = (decode(states, _CTX_UNI) << 1) | decode(
-                            states, _CTX_UNI
-                        )
-                        i = i0 + r * W2
-                        # sample r is significant (ZC bit implied)
-                        sc, xor = sclut[
-                            pair[sgn[i - 1] * 3 + sgn[i + 1]] * 3
-                            + pair[sgn[i - W2] * 3 + sgn[i + W2]]
-                        ]
-                        sig[i] = 1
-                        sgn[i] = 1 + (decode(states, sc) ^ xor)
-                        mag[j0 + r * w] = bit
-                        start = r + 1
+                    # _MQDecoder.decode, inlined (run-length context)
+                    st = states[_CTX_RL]
+                    qe = qe_t[st]
+                    a -= qe
+                    if ((c >> 16) & 0xFFFF) < qe:
+                        if a < qe:
+                            d = st & 1
+                            states[_CTX_RL] = nmps[st]
+                        else:
+                            d = (st & 1) ^ 1
+                            states[_CTX_RL] = nlps[st]
+                        a = qe
+                    else:
+                        c -= qe << 16
+                        if a & 0x8000:
+                            d = st & 1
+                        elif a < qe:
+                            d = (st & 1) ^ 1
+                            states[_CTX_RL] = nlps[st]
+                        else:
+                            d = st & 1
+                            states[_CTX_RL] = nmps[st]
+                    if a < 0x8000:  # RENORMD, all shifts at once
+                        s = shift_t[a]
+                        a <<= s
+                        while s > ct:
+                            c = (c << ct) & 0xFFFFFFFF
+                            s -= ct
+                            bp, c, ct = _mq_bytein(data, n, bp, c)
+                        c = (c << s) & 0xFFFFFFFF
+                        ct -= s
+                    if not d:
+                        left = 0
+                        continue  # whole column stays insignificant
+                    # a significant sample in the run (rare): its position
+                    # and sign go through the method
+                    mq.a, mq.c, mq.ct, mq.bp = a, c, ct, bp
+                    r = (mq.decode(states, _CTX_UNI) << 1) | mq.decode(
+                        states, _CTX_UNI
+                    )
+                    i = i0 + r * W2
+                    # sample r is significant (ZC bit implied)
+                    cx, xor = sclut[
+                        pair[sgn[i - 1] * 3 + sgn[i + 1]] * 3
+                        + pair[sgn[i - W2] * 3 + sgn[i + W2]]
+                    ]
+                    sig[i] = 1
+                    sgn[i] = 1 + (mq.decode(states, cx) ^ xor)
+                    a, c, ct, bp = mq.a, mq.c, mq.ct, mq.bp
+                    nbr[i - 1] += 15
+                    nbr[i + 1] += 15
+                    nbr[i - W2] += 5
+                    nbr[i + W2] += 5
+                    nbr[i - W2 - 1] += 1
+                    nbr[i - W2 + 1] += 1
+                    nbr[i + W2 - 1] += 1
+                    nbr[i + W2 + 1] += 1
+                    mag[j0 + r * w] = bit
+                    new = 1
+                    if r == 3:
+                        below[x + 1] = 1
+                    start = r + 1
                 i = i0 + start * W2
                 j = j0 + start * w
-                for _y in range(rows - start):
+                for y in range(start, rows):
                     if not sig[i] and not visited[j]:
-                        ctx = zlut[
-                            ((sig[i - 1] + sig[i + 1]) * 3
-                             + sig[i - W2] + sig[i + W2]) * 5
-                            + sig[i - W2 - 1] + sig[i - W2 + 1]
-                            + sig[i + W2 - 1] + sig[i + W2 + 1]
-                        ]
-                        if decode(states, ctx):
-                            sc, xor = sclut[
+                        if y == hid:  # causal: stripe below hidden
+                            cx = zlut[
+                                ((sig[i - 1] + sig[i + 1]) * 3
+                                 + sig[i - W2] + sig[i + W2]) * 5
+                                + sig[i - W2 - 1] + sig[i - W2 + 1]
+                                + sig[i + W2 - 1] + sig[i + W2 + 1]
+                            ]
+                        else:
+                            cx = zlut[nbr[i]]
+                        # _MQDecoder.decode, inlined (zero coding)
+                        st = states[cx]
+                        qe = qe_t[st]
+                        a -= qe
+                        if ((c >> 16) & 0xFFFF) < qe:
+                            if a < qe:
+                                d = st & 1
+                                states[cx] = nmps[st]
+                            else:
+                                d = (st & 1) ^ 1
+                                states[cx] = nlps[st]
+                            a = qe
+                        else:
+                            c -= qe << 16
+                            if a & 0x8000:
+                                d = st & 1
+                            elif a < qe:
+                                d = (st & 1) ^ 1
+                                states[cx] = nlps[st]
+                            else:
+                                d = st & 1
+                                states[cx] = nmps[st]
+                        if a < 0x8000:  # RENORMD, all shifts at once
+                            s = shift_t[a]
+                            a <<= s
+                            while s > ct:
+                                c = (c << ct) & 0xFFFFFFFF
+                                s -= ct
+                                bp, c, ct = _mq_bytein(data, n, bp, c)
+                            c = (c << s) & 0xFFFFFFFF
+                            ct -= s
+                        if d:
+                            cx, xor = sclut[
                                 pair[sgn[i - 1] * 3 + sgn[i + 1]] * 3
                                 + pair[sgn[i - W2] * 3 + sgn[i + W2]]
                             ]
+                            # _MQDecoder.decode, inlined (sign coding)
+                            st = states[cx]
+                            qe = qe_t[st]
+                            a -= qe
+                            if ((c >> 16) & 0xFFFF) < qe:
+                                if a < qe:
+                                    d = st & 1
+                                    states[cx] = nmps[st]
+                                else:
+                                    d = (st & 1) ^ 1
+                                    states[cx] = nlps[st]
+                                a = qe
+                            else:
+                                c -= qe << 16
+                                if a & 0x8000:
+                                    d = st & 1
+                                elif a < qe:
+                                    d = (st & 1) ^ 1
+                                    states[cx] = nlps[st]
+                                else:
+                                    d = st & 1
+                                    states[cx] = nmps[st]
+                            if a < 0x8000:  # RENORMD, all shifts at once
+                                s = shift_t[a]
+                                a <<= s
+                                while s > ct:
+                                    c = (c << ct) & 0xFFFFFFFF
+                                    s -= ct
+                                    bp, c, ct = _mq_bytein(data, n, bp, c)
+                                c = (c << s) & 0xFFFFFFFF
+                                ct -= s
                             sig[i] = 1
-                            sgn[i] = 1 + (decode(states, sc) ^ xor)
+                            sgn[i] = 1 + (d ^ xor)
+                            nbr[i - 1] += 15
+                            nbr[i + 1] += 15
+                            nbr[i - W2] += 5
+                            nbr[i + W2] += 5
+                            nbr[i - W2 - 1] += 1
+                            nbr[i - W2 + 1] += 1
+                            nbr[i + W2 - 1] += 1
+                            nbr[i + W2 + 1] += 1
                             mag[j] = bit
+                            new = 1
+                            if y == last:
+                                below[x + 1] = 1
                     i += W2
                     j += w
+                left = new
             self._stripe_restore(_cs)
+            above = below
+        mq.a, mq.c, mq.ct, mq.bp = a, c, ct, bp
         self.visited = bytearray(h * w)
 
     # -- raw (bypass) decoding passes: same membership/visited rules as
@@ -460,6 +792,7 @@ class _BlockCoder:
     def dec_sig_pass_raw(self, raw, plane) -> None:
         h, w, W2 = self.h, self.w, self.stride
         sig, sgn, visited, mag = self.sig, self.sgn, self.visited, self.mag
+        nbr = self.nbr
         bit = 1 << plane
         rbit = raw.bit
         for y0 in range(0, h, 4):
@@ -480,6 +813,14 @@ class _BlockCoder:
                             if rbit():
                                 sig[i] = 1
                                 sgn[i] = 1 + rbit()
+                                nbr[i - 1] += 15
+                                nbr[i + 1] += 15
+                                nbr[i - W2] += 5
+                                nbr[i + W2] += 5
+                                nbr[i - W2 - 1] += 1
+                                nbr[i - W2 + 1] += 1
+                                nbr[i + W2 - 1] += 1
+                                nbr[i + W2 + 1] += 1
                                 mag[j] = bit
                         else:
                             visited[j] = 0

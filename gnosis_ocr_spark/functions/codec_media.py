@@ -5,7 +5,8 @@ stdlib/numpy, public specs.
   bits; data chunk size → duration.
 - **MP4** (ISO 14496-12 box structure): walk top-level boxes → moov/mvhd →
   timescale + duration (version 0 and 1 boxes). The section's
-  ``_walk_boxes`` iterator serves the HEIF/AVIF ``meta`` → ``ispe`` parse.
+  ``_walk_boxes`` iterator is the one box walker: the mvhd lookup and the
+  HEIF/AVIF ``meta`` → ``ispe`` parse both use it.
 - **GIF** (GIF87a/89a): logical-screen dims, global palette, and a full
   LZW decoder for the first image frame (LSB-first variable-width codes —
   note this is the OPPOSITE bit order from PDF's /LZWDecode) with
@@ -76,27 +77,20 @@ def build_wav(
 
 def mp4_duration(data: bytes) -> float:
     """Duration in seconds from the moov/mvhd box (ISO 14496-12 §8.2.2,
-    version 0 and 1). Raises ValueError when no mvhd is present."""
+    version 0 and 1). Raises ValueError when no mvhd is present or its
+    body is too short for its version's fields."""
 
-    def walk(buf: bytes, start: int, end: int, depth: int = 0) -> float | None:
-        pos = start
-        while pos + 8 <= end and depth < 8:
-            (size,) = struct.unpack(">I", buf[pos : pos + 4])
-            btype = buf[pos + 4 : pos + 8]
-            hdr = 8
-            if size == 1:  # 64-bit largesize
-                if pos + 16 > end:
-                    break
-                (size,) = struct.unpack(">Q", buf[pos + 8 : pos + 16])
-                hdr = 16
-            elif size == 0:  # to end of file
-                size = end - pos
-            if size < hdr:
-                break
+    def walk(start: int, end: int, depth: int = 0) -> float | None:
+        if depth >= 8:
+            return None
+        for btype, bs, be in _walk_boxes(data, start, end):
             if btype == b"mvhd":
-                body = buf[pos + hdr : pos + size]
-                ver = body[0]
-                if ver == 1:
+                body = data[bs:be]
+                # version 1: 64-bit times, duration ends at byte 32
+                long = bool(body) and body[0] == 1
+                if len(body) < (32 if long else 20):
+                    raise ValueError("truncated mvhd box")
+                if long:
                     timescale, dur = struct.unpack(">IQ", body[20:32])
                 else:
                     timescale, dur = struct.unpack(">II", body[12:20])
@@ -104,15 +98,14 @@ def mp4_duration(data: bytes) -> float:
                     raise ValueError("zero timescale")
                 return dur / timescale
             if btype == b"moov":
-                found = walk(buf, pos + hdr, pos + size, depth + 1)
+                found = walk(bs, be, depth + 1)
                 if found is not None:
                     return found
-            pos += size
         return None
 
     if len(data) < 12 or data[4:8] != b"ftyp":
         raise ValueError("not an ISO-BMFF file")
-    dur = walk(data, 0, len(data))
+    dur = walk(0, len(data))
     if dur is None:
         raise ValueError("no mvhd box")
     return dur

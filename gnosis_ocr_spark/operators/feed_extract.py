@@ -20,7 +20,7 @@ overwhelmingly CDATA-wrapped.
 
 Routing: a feed starts (after an optional XML declaration / comments /
 whitespace) with ``<rss``, ``<feed`` or ``<rdf:RDF`` — mirrored by
-``routing.is_feed_col`` JVM-side so route and extractor agree.
+``routing.route_col`` JVM-side so route and extractor agree.
 """
 
 from __future__ import annotations

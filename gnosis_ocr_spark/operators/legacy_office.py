@@ -400,7 +400,7 @@ _EML_HEADER_RE = re.compile(
 
 def looks_like_eml(data: bytes) -> bool:
     # the leading-'<' guard keeps pathological HTML ("<html>x: y\nFrom: …")
-    # out of the mail path — mirrored by routing.is_office_col's JVM regex
+    # out of the mail path — mirrored by routing.route_col's JVM regex
     return not data.startswith(b"<") and bool(_EML_HEADER_RE.match(data[:512]))
 
 

@@ -5,12 +5,12 @@ js/app.js:354-359; server allow-list: /root/reference/app/config.py:19,92-95).
 At web scale extensions lie, so we sniff content: ``%PDF-`` magic → PDF path,
 TIFF magic (``II*\\0`` / ``MM\\0*`` — multi-page scan archives) → TIFF path,
 ``PK\\x03\\x04`` (OOXML/ODF/EPUB containers) and ``{\\rtf`` → office path,
-empty/null → empty path, everything else → HTML path. Pure Column
-expressions — stays inside whole-stage codegen, no Python."""
+empty/null → empty path, everything else → HTML path. One SQL CASE
+expression — stays inside whole-stage codegen, no Python."""
 
 from __future__ import annotations
 
-from functools import reduce
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -41,93 +41,95 @@ _EML_RE = (
     r"(?i:From|To|Subject|Date|Received|Return-Path|MIME-Version|Message-ID)"
     r":[ \t]"
 )
-
-
-def is_pdf_col(html: Column) -> Column:
-    return F.substring(html, 1, 5) == F.lit(_PDF_MAGIC)
-
-
-def is_tiff_col(html: Column) -> Column:
-    head = F.substring(html, 1, 4)
-    return (head == F.lit(_TIFF_MAGIC_LE)) | (head == F.lit(_TIFF_MAGIC_BE))
-
-
-def is_image_col(html: Column) -> Column:
-    """Standalone raster images — the reference OCRs these directly
-    (client accepts .png/.jpg/.jpeg/.webp, app/static/js/app.js:392).
-    Mirrors multimodal.sniff_media_type (incl. the BMP DIB-size check that
-    keeps text starting with 'BM' off the image path); TIFF is excluded —
-    it has its own multi-page route."""
-    return (
-        (F.substring(html, 1, 8) == F.lit(b"\x89PNG\r\n\x1a\n"))
-        | (F.substring(html, 1, 3) == F.lit(b"\xff\xd8\xff"))
-        | (F.substring(html, 1, 4) == F.lit(b"GIF8"))  # 4-byte magic,
-        # exactly like sniff_media_type — a 6-byte version check here
-        # routed GIF8-prefixed payloads html while the extractor called
-        # them image/gif (route and extractor must agree at the boundary)
-        | (
-            (F.substring(html, 1, 4) == F.lit(b"RIFF"))
-            & (F.substring(html, 9, 4) == F.lit(b"WEBP"))
-        )
-        | (
-            F.substring(html, 1, 12)
-            == F.lit(b"\x00\x00\x00\x0cjP  \r\n\x87\n")
-        )  # the FULL 12-byte JP2 signature box (sniff checks all 12; the
-        # 8-byte prefix admitted payloads the extractor then rejected)
-        | (F.substring(html, 1, 4) == F.lit(b"\xff\x4f\xff\x51"))
-        | (
-            (F.substring(html, 1, 2) == F.lit(b"BM"))
-            & reduce(
-                lambda a, b: a | b,
-                [
-                    F.substring(html, 15, 4) == F.lit(bytes([n, 0, 0, 0]))
-                    for n in (12, 40, 52, 56, 108, 124)
-                ],
-            )
-        )
-    )
-
-
-def is_office_col(html: Column) -> Column:
-    # ZIP containers (docx/xlsx/pptx/odt/epub — the subtype is sniffed
-    # inside the extractor from the member names), RTF, CFB/OLE2
-    # (doc/xls/ppt), gzip (still-content-encoded payloads — gunzipped and
-    # re-sniffed inside the extractor), and RFC 5322 mail headers (eml)
-    return (
-        (F.substring(html, 1, 4) == F.lit(_ZIP_MAGIC))
-        | (F.substring(html, 1, 5) == F.lit(_RTF_MAGIC))
-        | (F.substring(html, 1, 4) == F.lit(_CFB_MAGIC))
-        | (F.substring(html, 1, 2) == F.lit(_GZIP_MAGIC))
-        | (
-            (F.substring(html, 1, 1) != F.lit(b"<"))
-            # cast, not decode(): decode raises MALFORMED_CHARACTER_CODING
-            # on invalid UTF-8 crawl bytes; cast substitutes and never throws
-            & F.substring(html, 1, 512).cast("string").rlike(_EML_RE)
-        )
-    )
-
-
 # a feed starts — after an optional XML declaration / comments /
 # whitespace — with <rss, <feed or <rdf:RDF; mirrors
 # feed_extract.looks_like_feed so route and extractor agree
 _FEED_RE = r"(?s)^\s*(?:<\?xml[^>]*\?>\s*)?(?:<!--.*?-->\s*)*<(?i:rss[\s>]|feed[\s>]|rdf:RDF)"
 
+# BMP: 'BM' plus a known DIB header size at byte 14, the check
+# multimodal.sniff_media_type makes, so text starting with 'BM' stays html
+_BMP_DIB_SIZES = (12, 40, 52, 56, 108, 124)
 
-def is_feed_col(html: Column) -> Column:
-    return F.substring(html, 1, 512).cast("string").rlike(_FEED_RE)
+
+def _x(magic: bytes) -> str:
+    """A SQL binary literal."""
+    return f"X'{magic.hex().upper()}'"
 
 
-def route_col(html: Column) -> Column:
+def _sql_str(text: str) -> str:
+    """A SQL string literal for ``text``: the parser un-escapes backslash
+    sequences (spark.sql.parser.escapedStringLiterals is off), so
+    backslashes and quotes are escaped."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _route_sql(h: str) -> str:
+    """The route CASE over the SQL expression ``h`` (a quoted column).
+    Order matters: the first matching magic wins."""
+
+    def at(pos: int, magic: bytes) -> str:
+        return f"substring({h}, {pos}, {len(magic)}) = {_x(magic)}"
+
+    head = f"CAST(substring({h}, 1, 512) AS STRING)"
+    tiff = f"{at(1, _TIFF_MAGIC_LE)} OR {at(1, _TIFF_MAGIC_BE)}"
+    # standalone rasters — the reference OCRs these directly (client
+    # accepts .png/.jpg/.jpeg/.webp, app/static/js/app.js:392). Mirrors
+    # multimodal.sniff_media_type: GIF by its 4-byte magic, the FULL
+    # 12-byte JP2 signature box, BMP with its DIB size check. TIFF is
+    # excluded — it has its own multi-page route.
+    bmp_dib = " OR ".join(at(15, bytes([n, 0, 0, 0])) for n in _BMP_DIB_SIZES)
+    image = " OR ".join((
+        at(1, b"\x89PNG\r\n\x1a\n"),
+        at(1, b"\xff\xd8\xff"),
+        at(1, b"GIF8"),
+        f"({at(1, b'RIFF')} AND {at(9, b'WEBP')})",
+        at(1, b"\x00\x00\x00\x0cjP  \r\n\x87\n"),
+        at(1, b"\xff\x4f\xff\x51"),
+        f"({at(1, b'BM')} AND ({bmp_dib}))",
+    ))
+    # ZIP containers (docx/xlsx/pptx/odt/epub — the subtype is sniffed
+    # inside the extractor from the member names), RTF, CFB/OLE2
+    # (doc/xls/ppt), gzip (still-content-encoded payloads — gunzipped and
+    # re-sniffed inside the extractor), and RFC 5322 mail headers (eml).
+    # CAST, not decode(): decode raises MALFORMED_CHARACTER_CODING on
+    # invalid UTF-8 crawl bytes; the cast substitutes and never throws.
+    office = " OR ".join((
+        at(1, _ZIP_MAGIC),
+        at(1, _RTF_MAGIC),
+        at(1, _CFB_MAGIC),
+        at(1, _GZIP_MAGIC),
+        f"(substring({h}, 1, 1) != {_x(b'<')} AND {head} RLIKE "
+        f"{_sql_str(_EML_RE)})",
+    ))
     return (
-        F.when(html.isNull() | (F.length(html) == 0), F.lit(ROUTE_EMPTY))
-        .when(is_pdf_col(html), F.lit(ROUTE_PDF))
-        .when(is_tiff_col(html), F.lit(ROUTE_TIFF))
-        .when(is_image_col(html), F.lit(ROUTE_IMAGE))
-        .when(is_office_col(html), F.lit(ROUTE_OFFICE))
-        .when(is_feed_col(html), F.lit(ROUTE_FEED))
-        .otherwise(F.lit(ROUTE_HTML))
+        "CASE"
+        f" WHEN {h} IS NULL OR length({h}) = 0 THEN '{ROUTE_EMPTY}'"
+        f" WHEN {at(1, _PDF_MAGIC)} THEN '{ROUTE_PDF}'"
+        f" WHEN {tiff} THEN '{ROUTE_TIFF}'"
+        f" WHEN {image} THEN '{ROUTE_IMAGE}'"
+        f" WHEN {office} THEN '{ROUTE_OFFICE}'"
+        f" WHEN {head} RLIKE {_sql_str(_FEED_RE)} THEN '{ROUTE_FEED}'"
+        f" ELSE '{ROUTE_HTML}' END"
     )
 
 
+_PLAIN_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def route_col(html: Column | str) -> Column:
+    """Each payload's route, built as ONE SQL CASE expression: plan
+    construction makes one JVM call for it instead of one per magic-byte
+    comparison. ``html`` is a column name or a plain column reference
+    (``F.col(name)``); alias a computed payload before routing it."""
+    if not isinstance(html, str):
+        html = html._jc.toString()
+        if not _PLAIN_NAME.fullmatch(html):
+            raise ValueError(
+                f"route_col routes a named column, got {html!r}: alias "
+                "the payload expression first"
+            )
+    return F.expr(_route_sql("`" + html.replace("`", "``") + "`"))
+
+
 def with_route(df: DataFrame, html_col: str = "html", out_col: str = "route") -> DataFrame:
-    return df.withColumn(out_col, route_col(F.col(html_col)))
+    return df.withColumn(out_col, route_col(html_col))

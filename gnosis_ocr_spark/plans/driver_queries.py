@@ -465,7 +465,8 @@ def q_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.encode(F.lit(""), "UTF-8"))
     )
     return (
-        docs.select(route_col(payload).alias("route"))
+        docs.select(payload.alias("payload"))
+        .select(route_col("payload").alias("route"))
         .groupBy("route")
         .agg(F.count("*").alias("cnt"))
     )

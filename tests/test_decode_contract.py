@@ -6,7 +6,7 @@ distinguish from an engine bug, and never RecursionError/MemoryError.
 This is the uniform totality property callers use to tell a decode
 failure from an engine bug, found violated in four codecs by a fuzz sweep
 and pinned here for all of them. Formats with no pixel or sample decoder
-(WAV, MP3, Ogg, HEIF, ICO) sweep their metadata parser. Deterministic
+(WAV, MP3, Ogg, HEIF, ICO, MP4) sweep their metadata parser. Deterministic
 seed; ~100 mutations per format keeps the file under a few seconds."""
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ def _samples() -> dict[str, bytes]:
         "ogg": M.build_ogg_vorbis(8000),
         "heif": M.build_heif(60, 40),
         "ico": M.build_ico([(g, "dib32")]),
+        "mp4": M.build_mp4(2.5),
     }
 
 
@@ -63,6 +64,7 @@ def _decoders() -> dict:
         "ogg": M.ogg_info,
         "heif": M.heif_info,
         "ico": M.ico_info,
+        "mp4": M.mp4_duration,
     }
 
 

@@ -33,6 +33,21 @@ def test_mp4_duration_box_walk():
         M.mp4_duration(b"RIFFxxxx")
 
 
+def test_mp4_duration_truncated_mvhd_raises_valueerror():
+    """A consistent box tree whose mvhd body is too short for its version's
+    fields — empty, cut inside the v0 duration, or a v1 flag over a v0-sized
+    body — is a decode failure (ValueError), not struct.error/IndexError."""
+    import struct
+
+    ftyp = struct.pack(">I", 16) + b"ftyp" + b"isom" + struct.pack(">I", 512)
+    full = M.build_mp4(2.5)[len(ftyp) + 16 :]  # mvhd body after its header
+    for body in (b"", full[:14], b"\x01" + full[1:24]):
+        mvhd = struct.pack(">I", 8 + len(body)) + b"mvhd" + body
+        moov = struct.pack(">I", 8 + len(mvhd)) + b"moov" + mvhd
+        with pytest.raises(ValueError):
+            M.mp4_duration(ftyp + moov)
+
+
 def test_gif_gray_roundtrip_exact():
     px = bytes((x * 7 + 13) % 256 for x in range(40 * 25))
     gif = M.encode_gray_gif(px, 40, 25)
