@@ -635,10 +635,6 @@ def golden_df(spark, n: int = 200, seed: int = 42):
     return spark.createDataFrame(data, schema=GOLDEN_SCHEMA)
 
 
-def write_corpus(spark, path: str, n: int = 200, seed: int = 42, num_partitions: int = 8) -> None:
-    corpus_df(spark, n, seed, num_partitions).write.mode("overwrite").parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # scanned-heavy corpus — the bench honesty row (round-5 task #8)
 #

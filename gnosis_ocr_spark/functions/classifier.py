@@ -165,127 +165,6 @@ def unigram_lm_score(
     )
 
 
-def quality_score_expr(
-    toks: Column, n_features: int = DEFAULT_N_FEATURES
-) -> list[Column]:
-    """The hashed linear classifier as PER-ROW pure Column expressions —
-    the stream-safe form: no explode, no groupBy, so it applies unchanged
-    to a readStream projection (append mode, no watermark needed) and to
-    any per-row context. Returns ``[n_feats, logit_bp, keep]`` aliased
-    exactly like :func:`quality_score`'s demo-weight output, and is
-    unit-tested byte-identical to it.
-
-    ``toks`` MUST be a MATERIALIZED filtered-token array column
-    (``withColumn("_toks", F.filter(tokens(...), len>0))``): the bigram
-    and aggregate lambdas re-evaluate captured expressions per element
-    (the repo's HOF-CSE gotcha), which is a cheap attribute read for a
-    materialized column and a quadratic re-tokenization otherwise."""
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(
-                "_", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    feats = F.concat(toks, bigrams)
-    sum_c = F.aggregate(
-        feats,
-        F.lit(0).cast("long"),
-        lambda acc, f: acc + demo_weight_c(feature_bucket(f, n_features)),
-    )
-    n_feats = F.size(feats).cast("long")
-    logit_bp = F.when(
-        n_feats > 0,
-        F.round(F.round(sum_c / (100 * n_feats), 4) * 10000).cast("int"),
-    ).otherwise(F.lit(0))
-    return [
-        n_feats.alias("n_feats"),
-        logit_bp.alias("logit_bp"),
-        (sum_c > 0).alias("keep"),
-    ]
-
-
-def lm_fit(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, int]:
-    """Train the add-one-smoothed unigram LM on a corpus and return the
-    STATIC model: a ``(token, logp_mb)`` table plus the out-of-vocabulary
-    log-probability (``ln(1/(N+V))`` in millibels). This is the
-    offline-training half of the CCNet shape (the real pipeline trains its
-    LM on a reference corpus, then scores the crawl against it) — the
-    table broadcast/stream-static-joins into scoring jobs, including the
-    streaming ingest path."""
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    words = base.select(
-        F.explode(
-            F.filter(tokens(F.lower(F.col("text"))), lambda t: F.length(t) > 0)
-        ).alias("token")
-    )
-    counts = words.groupBy("token").agg(F.count("*").alias("cnt"))
-    totals = counts.agg(
-        F.sum("cnt").alias("n_total"), F.count("*").alias("v_size")
-    )
-    logp = counts.crossJoin(F.broadcast(totals)).select(
-        "token",
-        F.round(
-            F.log((F.col("cnt") + 1.0) / (F.col("n_total") + F.col("v_size")))
-            * 1000
-        )
-        .cast("int")
-        .alias("logp_mb"),
-    )
-    row = totals.collect()[0]  # two scalars — KB-scale driver traffic
-    import math
-
-    oov_mb = int(round(math.log(1.0 / (row["n_total"] + row["v_size"])) * 1000))
-    return logp, oov_mb
-
-
-def unigram_lm_score_static(
-    df: DataFrame,
-    logp_table: DataFrame,
-    oov_mb: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_mean_mb: int = -9000,
-) -> DataFrame:
-    """Score documents against a PRE-TRAINED static unigram LM (the
-    :func:`lm_fit` output): same output contract as
-    :func:`unigram_lm_score` — byte-identical when the table was fitted on
-    the scored corpus itself — but with the model as data, so the scoring
-    plan is a stream-static broadcast join plus a doc-keyed aggregation
-    and works inside a foreachBatch streaming sink. Unknown tokens score
-    ``oov_mb`` (the add-one smoothing floor)."""
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    words = base.select(
-        "doc_id",
-        F.explode(
-            F.filter(tokens(F.lower(F.col("text"))), lambda t: F.length(t) > 0)
-        ).alias("token"),
-    )
-    scored = (
-        words.join(F.broadcast(logp_table), "token", "left")
-        .select("doc_id", F.coalesce("logp_mb", F.lit(oov_mb)).alias("logp_mb"))
-        .groupBy("doc_id")
-        .agg(F.sum("logp_mb").alias("sum_logp_mb"), F.count("*").alias("n_toks"))
-    )
-    ids = base.select("doc_id")
-    return ids.join(scored, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_toks"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce(F.col("sum_logp_mb"), F.lit(0)).cast("long").alias("sum_logp_mb"),
-        (
-            (F.coalesce(F.col("n_toks"), F.lit(0)) > 0)
-            & (
-                F.coalesce(F.col("sum_logp_mb"), F.lit(0))
-                >= keep_mean_mb * F.coalesce(F.col("n_toks"), F.lit(0))
-            )
-        ).alias("keep_lm"),
-    )
-
-
 def _hashed_features(
     df: DataFrame, key_cols: list[str], text_col: str, n_features: int
 ) -> DataFrame:

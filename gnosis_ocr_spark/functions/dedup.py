@@ -294,10 +294,9 @@ def shingle_sketches(
     min-wise sketch).
 
     Plan (r6): ZERO exchanges — the per-row :func:`row_sketch` expression
-    (shingle hashes → in-row distinct → sort → slice), shared with the
-    streaming path, so batch and stream sketches can never drift. The
-    previous explode → distinct → per-doc window → collect formulation
-    cost two full shuffles of the shingle-hash frame plus a per-doc sort;
+    (shingle hashes → in-row distinct → sort → slice). The previous
+    explode → distinct → per-doc window → collect formulation cost two
+    full shuffles of the shingle-hash frame plus a per-doc sort;
     measured at sf0.1 over the curate corpus: 1.08 → 0.70 s, and 2×
     faster at 32k-token documents (the per-row HOF is linear — ``_toks``
     is referenced ≥ 2×, so the materialized alias survives
@@ -952,20 +951,19 @@ def row_sketch(
     sketch_size: int = SKETCH_SIZE,
 ) -> Column:
     """The bottom-s shingle sketch as a PER-ROW pure Column expression —
-    the stream-safe form of :func:`shingle_sketches` (no explode, no
-    groupBy): shingle positions come from one sequence, hashes sort and
-    slice in-row. Unit-tested against a plain-Python bottom-s sketch built
-    from the same ``xxhash64(shingle, 99)`` hashes.
+    the body of :func:`shingle_sketches`, with no explode and no groupBy, so
+    sketching a document costs no shuffle: shingle positions come from one
+    sequence, hashes sort and slice in-row. Unit-tested against a
+    plain-Python bottom-s sketch built from the same ``xxhash64(shingle,
+    99)`` hashes.
 
     ``toks`` MUST be a MATERIALIZED token array column referenced at least
     twice in the enclosing plan (the HOF lambdas below re-evaluate
     captured expressions per element — cheap for a materialized attribute,
     quadratic re-tokenization otherwise, and CollapseProject re-inlines an
-    alias referenced only once; the repo's documented gotcha). Since r6
-    this IS the batch path too — :func:`shingle_sketches` wraps it, so the
-    stream and batch sketches share one definition (measured linear in doc
-    length and faster than the former explode → distinct → window plan at
-    every probed size, including 32k-token docs).
+    alias referenced only once; the repo's documented gotcha). Measured
+    linear in doc length and faster than the former explode → distinct →
+    window plan at every probed size, including 32k-token docs.
     """
     n = shingle_words
     shingles = F.when(

@@ -101,3 +101,22 @@ def latest_sessions(sessions: DataFrame, k: int = 50) -> DataFrame:
         .orderBy(F.desc("ts"), F.asc("session"))
         .limit(k)  # Spark executes as TakeOrderedAndProject — no full sort
     )
+
+
+def windowed_throughput(docs: DataFrame, window: str = "10 minutes") -> DataFrame:
+    """Per event-time window document count and input bytes: tumbling
+    ``window``-wide buckets of ``warc_ts`` with ``count(*)`` and
+    ``sum(length(html))``, one row per non-empty window."""
+    return (
+        docs.groupBy(F.window("warc_ts", window).alias("w"))
+        .agg(
+            F.count("*").alias("docs"),
+            F.sum(F.length("html")).alias("bytes_in"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "docs",
+            "bytes_in",
+        )
+    )

@@ -57,6 +57,7 @@ from gnosis_ocr_spark.functions.text import (
     stopword_ratio,
     token_count,
 )
+from gnosis_ocr_spark.operators.aggregates import windowed_throughput
 from gnosis_ocr_spark.operators.chunks import (
     assemble_chunks,
     missing_chunks,
@@ -71,7 +72,6 @@ from gnosis_ocr_spark.operators.pdf_split import (
     split_pdf_text_pages,
 )
 from gnosis_ocr_spark.operators.routing import route_col
-from gnosis_ocr_spark.streaming.extract_stream import windowed_throughput
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1556,7 +1556,7 @@ FROM m
 
 
 def q_windowed_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time window aggregation (streaming metrics shape) on events."""
+    """Event-time window aggregation on events: docs and bytes per 10 minutes."""
     events = _t(spark, sf_dir, "events").select(
         F.col("ts").alias("warc_ts"), F.encode(F.col("event_type"), "UTF-8").alias("html")
     )

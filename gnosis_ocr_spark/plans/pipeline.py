@@ -53,9 +53,9 @@ def light_branch(routed: DataFrame) -> DataFrame:
     extraction, feeds → item text, empty → ('', 0). Narrow end to end, zero
     shuffles.
 
-    Adds ``extracted_text`` and ``n_pages`` and drops ``html``; every other
-    input column passes through, so the batch plan and the stateless stream
-    select their own outputs from this one definition."""
+    Returns the five union columns of :func:`extract_corpus`. Light
+    extraction is not model inference, so ``ocr_confidence`` is 1.0 for
+    non-empty text and 0.0 for empty/unparseable rows."""
     return (
         routed.filter(~F.col("route").isin(*HEAVY_ROUTES))
         .withColumn("_lx", light_extract_udf(F.col("html"), F.col("route")))
@@ -63,7 +63,15 @@ def light_branch(routed: DataFrame) -> DataFrame:
             "extracted_text": F.col("_lx.extracted_text"),
             "n_pages": F.col("_lx.n_pages"),
         })
-        .drop("_lx", "html")
+        .select(
+            "url",
+            "extracted_text",
+            "n_pages",
+            "route",
+            F.when(F.length("extracted_text") > 0, F.lit(1.0))
+            .otherwise(0.0)
+            .alias("ocr_confidence"),
+        )
     )
 
 
@@ -83,21 +91,10 @@ def extract_corpus(
 
     ``ocr_confidence`` is the page-average of the OCR engine's per-page
     score on the heavy branch (aggregated inside the existing assembly
-    groupBy — no extra shuffle); light extraction is not model inference,
-    so that branch reports 1.0 for non-empty text and 0.0 for
-    empty/unparseable rows.
+    groupBy — no extra shuffle); :func:`light_branch` sets the light
+    rows' value.
     """
     routed = with_route(docs)
-
-    light = light_branch(routed).select(
-        "url",
-        "extracted_text",
-        "n_pages",
-        "route",
-        F.when(F.length("extracted_text") > 0, F.lit(1.0))
-        .otherwise(0.0)
-        .alias("ocr_confidence"),
-    )
 
     # heavy branch: PDFs, multi-page TIFFs and images share one topology —
     # the split stage re-sniffs the magic per blob and emits a route column
@@ -116,4 +113,4 @@ def extract_corpus(
     # assembly folds the per-page route into the same sort-aggregate; the
     # coalesce (no exchange) keeps the stages above the union at n tasks
     # instead of spark.sql.shuffle.partitions
-    return light.unionByName(assemble_documents(ocred).coalesce(n))
+    return light_branch(routed).unionByName(assemble_documents(ocred).coalesce(n))

@@ -25,15 +25,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession configured for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    the same entry points serve tests, the driver harness, and bench runs; on
-    a real cluster callers pass ``master=None`` with spark-submit owning the
-    master URL.
+    ``master`` is the master URL to set (tests, the driver harness and bench
+    runs pass ``local[N]``). With ``master=None`` the builder sets none, so
+    the launcher's applies: ``spark-submit --master`` (yarn, ``spark://``,
+    ``local-cluster[...]``), or spark-submit's own default ``local[*]`` for
+    a plain ``python`` launch.
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None and not os.environ.get("SPARK_MASTER_SET"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
     n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))

@@ -8,10 +8,11 @@ spark-submit --py-files on multi-executor clusters").
         --run-id run-2026-08-16 \
         [--engine stub|nanonets] [--resume/--no-resume] [--raster dpi150]
 
-On a cluster, spark-submit owns the master URL; locally this falls back to
-local[$SPARK_GRAFT_CPUS]. The job is resumable: re-submitting with the same
---output anti-joins the urls of the committed runs (results/ joined with
-runs/) and processes only the rest (plans/run.py).
+spark-submit's --master is the master URL the job runs on (yarn, spark://,
+local-cluster[...], local[N]); without one it runs on local[*]. The job is
+resumable: re-submitting with the same --output anti-joins the urls of the
+committed runs (results/ joined with runs/) and processes only the rest
+(plans/run.py).
 """
 
 from __future__ import annotations

@@ -191,6 +191,55 @@ def test_shingles_short_docs_do_not_crash(spark):
     assert {(r["a"], r["b"]) for r in jac} == {(4, 5)}
 
 
+def test_row_sketch_matches_batch_sketches(spark):
+    """row_sketch equals a bottom-s sketch built outside the expression:
+    word shingles in plain Python, each hashed by Spark's
+    ``xxhash64(shingle, 99)`` on a one-column frame, then distinct → sort
+    → slice in Python. Sketch size 4 is below doc 2's distinct-shingle
+    count, so the slice is exercised too."""
+    from gnosis_ocr_spark.functions.dedup import (
+        SHINGLE_WORDS,
+        SKETCH_SIZE,
+        row_sketch,
+    )
+    from gnosis_ocr_spark.functions.text import tokens
+
+    texts = {
+        1: "a b c d a b c d a b",  # repeated shingles: distinct matters
+        2: "The quick brown fox jumps over the lazy dog near the river bank",
+        3: "dup dup dup " * 12,
+        4: "too short",  # fewer than SHINGLE_WORDS tokens → empty sketch
+    }
+    n = SHINGLE_WORDS
+    shingles = {}
+    for doc_id, text in texts.items():
+        toks = text.lower().split()
+        shingles[doc_id] = {
+            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+        }
+    distinct = sorted(set().union(*shingles.values()))
+    hashed = dict(
+        spark.createDataFrame([(sh,) for sh in distinct], "s string")
+        .select("s", F.xxhash64("s", F.lit(99)))
+        .collect()
+    )
+
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    docs = docs.withColumn("_toks", tokens(F.lower(F.col("text"))))
+    for size in (SKETCH_SIZE, 4):
+        got = {
+            r["doc_id"]: list(r["sk"])
+            for r in docs.select(
+                "doc_id", row_sketch(F.col("_toks"), n, size).alias("sk")
+            ).collect()
+        }
+        want = {
+            doc_id: sorted({hashed[sh] for sh in sh_set})[:size]
+            for doc_id, sh_set in shingles.items()
+        }
+        assert got == want, size
+
+
 def test_connected_components_path_graph(spark):
     """Multi-hop convergence: a path 0-1-2-...-9 needs the min label to walk
     the full diameter (one hop per round), plus a disjoint pair and triangle."""
