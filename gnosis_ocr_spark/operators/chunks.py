@@ -9,8 +9,6 @@ difference (:76-96). Input table shape:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

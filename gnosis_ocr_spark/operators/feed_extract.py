@@ -159,159 +159,3 @@ def build_atom(feed_title: str, entries: list[tuple[str, str]]) -> bytes:
         )
     parts.append("</feed>")
     return "".join(parts).encode("utf-8")
-
-
-# ---------------------------------------------------------------------------
-# XML sitemaps (sitemaps.org protocol 0.9) — the crawl-frontier input
-# ---------------------------------------------------------------------------
-#
-# Every polite crawler starts from /sitemap.xml: <urlset> leaves carry the
-# page URLs (+ lastmod/changefreq/priority hints that drive re-crawl
-# scheduling), <sitemapindex> nodes fan out to child sitemaps, and large
-# sites ship them gzipped (sitemap.xml.gz). parse_sitemap is total in the
-# feed_extract style (truncated XML keeps its parsed prefix); the Spark
-# operator explodes sitemap blobs into frontier rows.
-
-_SITEMAP_START_RE = re.compile(
-    rb"^\s*(?:<\?xml[^>]*\?>\s*)?(?:<!--.*?-->\s*)*<(?:urlset|sitemapindex)[\s>]",
-    re.S | re.I,
-)
-_SITEMAP_MAX_BYTES = 64 * 1024 * 1024  # protocol caps sitemaps at 50 MB raw
-
-
-def _sitemap_bytes(data: bytes) -> bytes:
-    """Transparently gunzip .xml.gz payloads (bounded — a bomb truncates,
-    keeping the parser total like the WARC member path)."""
-    if data[:2] != b"\x1f\x8b":
-        return data
-    import zlib
-
-    d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-    try:
-        out = d.decompress(data, _SITEMAP_MAX_BYTES)
-    except zlib.error:
-        return b""
-    return out
-
-
-def looks_like_sitemap(data: bytes) -> bool:
-    return bool(_SITEMAP_START_RE.match(_sitemap_bytes(data[:4096])[:512]))
-
-
-class _SitemapWalk(_XMLWalk):
-    _FIELDS = ("loc", "lastmod", "changefreq", "priority")
-
-    def __init__(self) -> None:
-        super().__init__()
-        self.kind: str | None = None
-        self.entries: list[dict[str, str]] = []
-        self._cur: dict[str, str] | None = None
-        self._field: str | None = None
-        self._buf: list[str] = []
-
-    def on_start(self, tag, attrs):
-        if tag in ("urlset", "sitemapindex") and self.kind is None:
-            self.kind = tag
-        elif tag in ("url", "sitemap"):
-            self._cur = {}
-        elif self._cur is not None and tag in self._FIELDS:
-            self._field = tag
-            self._buf = []
-
-    def on_text(self, data):
-        if self._field is not None:
-            self._buf.append(data)
-
-    def on_end(self, tag):
-        if tag == self._field:
-            # mis-nested close tags can leave _field set with _cur already
-            # cleared — guard so one malformed entry cannot abort the walk
-            # (and with it every entry after it in a 50k-URL sitemap)
-            if self._cur is not None:
-                self._cur[self._field] = "".join(self._buf).strip()
-            self._field = None
-        elif tag in ("url", "sitemap") and self._cur is not None:
-            if self._cur.get("loc"):
-                self.entries.append(self._cur)
-            self._cur = None
-            self._field = None
-
-
-def parse_sitemap(data: bytes) -> dict:
-    """One sitemap blob (plain or gzipped) → ``{"kind": "urlset" |
-    "sitemapindex" | None, "entries": [{loc, lastmod?, changefreq?,
-    priority?}, ...]}``. Total: non-sitemap or truncated input yields the
-    parsed prefix (possibly empty), never an exception."""
-    raw = _sitemap_bytes(data)[:_SITEMAP_MAX_BYTES]
-    w = _SitemapWalk()
-    w.walk(raw)
-    return {"kind": w.kind, "entries": w.entries}
-
-
-def sitemap_urls(df, name_col: str = "name", data_col: str = "data"):
-    """Explode a DataFrame of sitemap blobs ``(name, data:binary)`` into
-    crawl-frontier rows ``(sitemap_name, kind, loc, lastmod, changefreq,
-    priority)`` — <sitemapindex> rows carry kind='sitemapindex' so the
-    caller can iterate the fan-out (fetch children, feed them back in);
-    the plan is one mapInPandas, no driver-side loop."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    schema = (
-        "sitemap_name string, kind string, loc string, lastmod string, "
-        "changefreq string, priority string"
-    )
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("sitemap_name", "kind", "loc", "lastmod", "changefreq",
-                "priority")
-        for b in batches:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for name, blob in zip(b[name_col], b[data_col]):
-                parsed = parse_sitemap(bytes(blob) if blob is not None else b"")
-                for e in parsed["entries"]:
-                    rows["sitemap_name"].append(name)
-                    rows["kind"].append(parsed["kind"])
-                    rows["loc"].append(e.get("loc"))
-                    rows["lastmod"].append(e.get("lastmod") or None)
-                    rows["changefreq"].append(e.get("changefreq") or None)
-                    rows["priority"].append(e.get("priority") or None)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(explode, schema=schema)
-
-
-def build_sitemap(
-    urls: list[tuple[str, str | None]], gzip_out: bool = False
-) -> bytes:
-    """Fixture writer: [(loc, lastmod|None), ...] → a protocol-valid
-    <urlset> sitemap, optionally gzipped (the .xml.gz shape)."""
-    parts = [
-        '<?xml version="1.0" encoding="UTF-8"?>',
-        '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">',
-    ]
-    for loc, lastmod in urls:
-        e = f"<url><loc>{_esc(loc)}</loc>"
-        if lastmod:
-            e += f"<lastmod>{_esc(lastmod)}</lastmod>"
-        parts.append(e + "</url>")
-    parts.append("</urlset>")
-    out = "".join(parts).encode("utf-8")
-    if gzip_out:
-        import gzip
-
-        out = gzip.compress(out, 6)
-    return out
-
-
-def build_sitemap_index(locs: list[str]) -> bytes:
-    """Fixture writer: child sitemap locations → a <sitemapindex>."""
-    parts = [
-        '<?xml version="1.0" encoding="UTF-8"?>',
-        '<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">',
-    ]
-    for loc in locs:
-        parts.append(f"<sitemap><loc>{_esc(loc)}</loc></sitemap>")
-    parts.append("</sitemapindex>")
-    return "".join(parts).encode("utf-8")

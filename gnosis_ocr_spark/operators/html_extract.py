@@ -22,14 +22,8 @@ from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    BooleanType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType
 
 # containers whose entire subtree is boilerplate
 _KILL_TAGS = frozenset(
@@ -346,135 +340,3 @@ def extract_main_text(html: bytes | str | None) -> str:
 def extract_html_udf(html: pd.Series) -> pd.Series:
     """Vectorized U7: html BINARY → extracted main text STRING."""
     return html.map(extract_main_text)
-
-
-# ---------------------------------------------------------------------------
-# Document metadata (head-level): title / description / canonical /
-# OpenGraph / lang / published time — the fields a curation pipeline
-# groups, dedups, and filters on (trafilatura-style metadata extraction,
-# restricted to deterministic head parsing; no content guessing).
-# ---------------------------------------------------------------------------
-
-_META_NAME_KEYS = frozenset({"description", "author", "date", "robots"})
-_META_PROP_KEYS = frozenset(
-    {
-        "og:title", "og:description", "og:type", "og:url", "og:site_name",
-        "article:published_time",
-    }
-)
-
-
-class _MetaExtractor(HTMLParser):
-    """Head-level metadata of one page. Parsing stops at </head> or at the
-    first <body> (real crawls omit </head> constantly), so a hostile body
-    can't override head fields; first occurrence wins throughout
-    (the HTML5 rule for title, extended to the rest for determinism)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.fields: dict[str, str] = {}
-        self._in_title = False
-        self._title_parts: list[str] = []
-        self._done = False
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if self._done:
-            return
-        a = {k: (v or "") for k, v in attrs}
-        if tag == "html" and "lang" in a and "lang" not in self.fields:
-            self.fields["lang"] = a["lang"].strip()
-        elif tag == "title" and "title" not in self.fields:
-            self._in_title = True
-            self._title_parts = []
-        elif tag == "meta":
-            key = a.get("name", a.get("property", "")).strip().lower()
-            content = _WS_RE.sub(" ", a.get("content", "")).strip()
-            if content and (key in _META_NAME_KEYS or key in _META_PROP_KEYS):
-                self.fields.setdefault(key, content)
-        elif tag == "link":
-            # rel is a space-separated TOKEN LIST (rel="canonical nofollow")
-            rels = a.get("rel", "").lower().split()
-            if "canonical" in rels and a.get("href"):
-                self.fields.setdefault("canonical", a["href"].strip())
-        elif tag == "body":
-            self._done = True
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag == "title" and self._in_title:
-            self._in_title = False
-            t = _WS_RE.sub(" ", "".join(self._title_parts)).strip()
-            if t:
-                self.fields["title"] = t
-        elif tag == "head":
-            self._done = True
-
-    def handle_data(self, data: str) -> None:
-        if self._in_title and not self._done:
-            self._title_parts.append(data)
-
-
-def extract_html_meta(html: bytes | str | None) -> dict:
-    """Deterministic head-metadata of one page: {title, description,
-    canonical, og_title, og_description, og_type, og_url, og_site_name,
-    author, lang, published_time, robots, noindex} — absent string
-    fields map to empty strings. ``noindex`` is the derived curation
-    gate: True iff the head's robots meta carries a ``noindex`` or
-    ``none`` directive (comma/space-tokenized, case-insensitive — the
-    robots-meta convention all major crawlers honor), the pages a
-    crawl-respecting corpus must be able to drop."""
-    out = {
-        "title": "", "description": "", "canonical": "", "og_title": "",
-        "og_description": "", "og_type": "", "og_url": "", "og_site_name": "",
-        "author": "", "lang": "", "published_time": "", "robots": "",
-        "noindex": False,
-    }
-    if html is None:
-        return out
-    raw = decode_html_bytes(bytes(html)) if isinstance(html, (bytes, bytearray)) else html
-    p = _MetaExtractor()
-    try:
-        p.feed(raw)
-        p.close()
-    except Exception:
-        return out
-    f = p.fields
-    out.update(
-        title=f.get("title", ""),
-        description=f.get("description", ""),
-        canonical=f.get("canonical", ""),
-        og_title=f.get("og:title", ""),
-        og_description=f.get("og:description", ""),
-        og_type=f.get("og:type", ""),
-        og_url=f.get("og:url", ""),
-        og_site_name=f.get("og:site_name", ""),
-        author=f.get("author", ""),
-        lang=f.get("lang", ""),
-        published_time=f.get("article:published_time", f.get("date", "")),
-        robots=f.get("robots", ""),
-    )
-    tokens = {
-        t for t in re.split(r"[,\s]+", out["robots"].lower()) if t
-    }
-    out["noindex"] = bool(tokens & {"noindex", "none"})
-    return out
-
-
-HTML_META_SCHEMA = StructType(
-    [StructField(k, StringType()) for k in (
-        "title", "description", "canonical", "og_title", "og_description",
-        "og_type", "og_url", "og_site_name", "author", "lang",
-        "published_time", "robots",
-    )]
-    + [StructField("noindex", BooleanType())]
-)
-
-
-@pandas_udf(HTML_META_SCHEMA)
-def extract_html_meta_udf(html: pd.Series) -> pd.DataFrame:
-    """Vectorized head-metadata: html BINARY → struct of string fields."""
-    return pd.DataFrame([extract_html_meta(h) for h in html])
-
-
-def with_html_meta(df, html_col: str = "html", out_col: str = "meta"):
-    """DataFrame helper: add the head-metadata struct column."""
-    return df.withColumn(out_col, extract_html_meta_udf(F.col(html_col)))

@@ -38,13 +38,10 @@ import struct
 from gnosis_ocr_spark.functions.codec_cfb import CfbError, CfbView, build_cfb
 from gnosis_ocr_spark.operators.html_extract import extract_main_text
 
-# paragraph normalization is ONE convention across every extraction route
-# — shared with the ZIP-based extractors (cycle-free: office_extract only
-# imports this module lazily), never re-defined
-from gnosis_ocr_spark.operators.office_extract import (  # noqa: E402
-    _join_paras,
-    _norm_para,
-)
+# paragraphs join by ONE convention across every extraction route — shared
+# with the ZIP-based extractors (cycle-free: office_extract only imports
+# this module lazily), never re-defined
+from gnosis_ocr_spark.operators.office_extract import _join_paras
 
 
 # ---------------------------------------------------------------------------

@@ -34,6 +34,7 @@ produces the reference's real 1275×1650 output shape (scaling bench).
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -63,15 +64,24 @@ EXTRACT_BATCH_PAGES = 10  # reference window: 10 pages/job (app/jobs.py:378)
 MAX_PAGES = 500  # reference cap (app/config.py:18)
 
 
+_RASTER_SPEC_RE = re.compile(r"([0-9]+)(?:x([0-9]+))?")
+
+
 def _raster_size(spec: str | None = None) -> tuple[int, int]:
-    spec = (spec or os.environ.get("SPARK_GRAFT_RASTER", "64x64")).strip().lower()
-    if spec == "dpi150":
+    """Page raster ``dpi150``, ``N`` (square) or ``WxH``, case-insensitive;
+    unset (argument or ``SPARK_GRAFT_RASTER``) means 64x64. Anything else
+    raises on the driver, so a typo cannot OCR every page at a wrong size."""
+    raw = spec or os.environ.get("SPARK_GRAFT_RASTER") or "64x64"
+    norm = raw.strip().lower()
+    if norm == "dpi150":
         return DPI150_SIZE
-    w, _, h = spec.partition("x")
-    try:
-        return int(w), int(h or w)
-    except ValueError:
-        return 64, 64
+    m = _RASTER_SPEC_RE.fullmatch(norm)
+    w, h = (int(m[1]), int(m[2] or m[1])) if m else (0, 0)
+    if w <= 0 or h <= 0:
+        raise ValueError(
+            f"bad raster spec {raw!r}: want dpi150, N or WxH with positive integers"
+        )
+    return w, h
 
 
 @pandas_udf(IntegerType())

@@ -36,7 +36,6 @@ from gnosis_ocr_spark.functions.text import (
     gopher_repetition,
     lang_id,
     repetition_bp,
-    token_count,
     tokens,
 )
 
@@ -58,7 +57,6 @@ def curate_corpus(
     near_dup: bool = False,
     near_dup_threshold: float = 0.8,
     lang_model: DataFrame | None = None,
-    extra_gate_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """One row per document with every curation signal and the composed
     ``keep`` decision + deterministic ``split``. All stages are the
@@ -83,31 +81,11 @@ def curate_corpus(
     (:func:`~gnosis_ocr_spark.functions.classifier.lang_id_predict`: one
     broadcast join + doc-keyed argmax) instead of the inline marker
     expression. The marker path stays the default (and the oracle-side
-    contract).
-
-    With ``extra_gate_cols``, the named boolean PASS-flag columns of
-    ``docs`` (e.g. ``~meta.noindex`` from the HTML head extractor, an
-    upstream spam verdict) are carried to the output and conjoined into
-    ``keep``; NULL flags count as fail."""
+    contract)."""
     cols = [F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")]
     if url_col is not None:
         cols.append(F.col(url_col).alias("url"))
     base = docs.select(*cols)
-    # extra_gate_cols: caller-supplied per-doc PASS flags already on
-    # ``docs`` (e.g. ~meta.noindex from the HTML head extractor, an
-    # upstream spam verdict) that ride through to the output and AND into
-    # ``keep``; NULL counts as fail — an absent upstream signal must not
-    # silently pass a document. Pure per-row expressions, no extra
-    # exchange (the flags join the same doc_id-keyed plan).
-    extras = None
-    if extra_gate_cols:
-        extras = docs.select(
-            F.col(id_col).alias("doc_id"),
-            *[
-                F.coalesce(F.col(c).cast("boolean"), F.lit(False)).alias(c)
-                for c in extra_gate_cols
-            ],
-        )
 
     ltoks = F.filter(tokens(F.lower(F.col("text"))), lambda t: F.length(t) > 0)
     enriched = base.withColumn("_ltoks", ltoks).select(
@@ -233,10 +211,6 @@ def curate_corpus(
         out = out.join(host_sig, "doc_id").withColumn(
             "keep", F.col("keep") & F.col("ok_host_quota")
         )
-    if extras is not None:
-        out = out.join(extras, "doc_id")
-        for c in extra_gate_cols:
-            out = out.withColumn("keep", F.col("keep") & F.col(c))
     return out.drop("text")
 
 

@@ -55,7 +55,6 @@ from gnosis_ocr_spark.functions.text import (
     lang_id,
     quality_metrics,
     stopword_ratio,
-    token_count,
 )
 from gnosis_ocr_spark.operators.aggregates import windowed_throughput
 from gnosis_ocr_spark.operators.chunks import (

@@ -48,12 +48,9 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
-        # bucketed-table support (co-located joins) without polluting the
-        # repo: warehouse + derby metastore live under /tmp
+        # saveAsTable (write_bucketed) lands under /tmp, not the cwd; the
+        # catalog is in-memory and bucketing is on by default
         "spark.sql.warehouse.dir": "/tmp/gnosis_spark_warehouse",
-        "spark.driver.extraJavaOptions": "-Dderby.system.home=/tmp/gnosis_derby",
-        "spark.sql.sources.bucketing.enabled": "true",
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled": "true",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -177,25 +177,6 @@ def test_trained_lang_backend_option(spark):
         assert got == want
 
 
-def test_extra_gate_cols_conjoin_and_null_fails(spark):
-    """extra_gate_cols: caller pass-flags AND into keep, ride to the
-    output, and a NULL flag counts as FAIL (absent upstream signal must
-    not silently pass)."""
-    docs = _docs(spark).withColumn(
-        "ok_robots",
-        F.when(F.col("doc_id") % 3 == 0, F.lit(False))
-        .when(F.col("doc_id") % 3 == 1, F.lit(None).cast("boolean"))
-        .otherwise(F.lit(True)),
-    )
-    base = {r["doc_id"]: r["keep"] for r in curate_corpus(_docs(spark)).collect()}
-    out = curate_corpus(docs, extra_gate_cols=("ok_robots",)).collect()
-    assert len(out) == len(base)
-    for r in out:
-        expect_flag = r["doc_id"] % 3 == 2
-        assert r["ok_robots"] == expect_flag  # NULL coalesced to False
-        assert r["keep"] == (base[r["doc_id"]] and expect_flag)
-
-
 def test_newline_framed_text_counts_match_oracle_semantics(spark):
     """Review-found latent driver divergence: Spark counted empty boundary
     tokens ('\\nhello world\\n' → 4) while the DuckDB oracle counts

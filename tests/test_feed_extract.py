@@ -64,6 +64,7 @@ def test_sniff_guards():
     assert not looks_like_feed(b"<html><body>feed</body></html>")
     assert not looks_like_feed(b'<?xml version="1.0"?><document/>')
     assert not looks_like_feed(b"plain text rss mention")
+    assert not looks_like_feed(b'<?xml version="1.0"?><urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">')
 
 
 def test_truncated_feed_keeps_prefix():
@@ -117,106 +118,3 @@ def test_feed_routes_through_pipeline(spark):
     assert out["u-atom"]["route"] == "feed"
     assert out["u-atom"]["n_pages"] == 2
 
-
-def test_sitemap_parse_urlset_index_and_gzip():
-    from gnosis_ocr_spark.operators.feed_extract import (
-        build_sitemap,
-        build_sitemap_index,
-        looks_like_sitemap,
-        parse_sitemap,
-    )
-
-    sm = build_sitemap(
-        [("https://a.test/p1", "2026-01-02"), ("https://a.test/p2", None)]
-    )
-    assert looks_like_sitemap(sm)
-    p = parse_sitemap(sm)
-    assert p["kind"] == "urlset"
-    assert [e["loc"] for e in p["entries"]] == [
-        "https://a.test/p1", "https://a.test/p2"
-    ]
-    assert p["entries"][0]["lastmod"] == "2026-01-02"
-    # gzipped (.xml.gz) transparently
-    smz = build_sitemap([("https://z.test/", None)], gzip_out=True)
-    assert looks_like_sitemap(smz)
-    assert parse_sitemap(smz)["entries"][0]["loc"] == "https://z.test/"
-    # index fan-out kind
-    idx = build_sitemap_index(["https://a.test/s1.xml.gz", "https://a.test/s2.xml"])
-    pi = parse_sitemap(idx)
-    assert pi["kind"] == "sitemapindex" and len(pi["entries"]) == 2
-
-
-def test_sitemap_total_on_hostile_and_not_confused_with_feeds():
-    import random
-
-    from gnosis_ocr_spark.operators.feed_extract import (
-        build_rss,
-        build_sitemap,
-        looks_like_feed,
-        looks_like_sitemap,
-        parse_sitemap,
-    )
-
-    sm = build_sitemap([(f"https://m.test/{i}", None) for i in range(5)])
-    # truncation keeps the parsed prefix, never raises
-    for cut in range(0, len(sm), 37):
-        parse_sitemap(sm[:cut])
-    # byte mutations stay total
-    for seed in range(120):
-        rng = random.Random(seed)
-        data = bytearray(sm)
-        for _ in range(3):
-            data[rng.randrange(len(data))] = rng.randrange(256)
-        parse_sitemap(bytes(data))
-    # routing stays disjoint from feeds
-    rss = build_rss("t", [("a", "b")])
-    assert not looks_like_sitemap(rss) and looks_like_feed(rss)
-    assert not looks_like_feed(sm)
-    # gzip bomb truncates (total), never raises
-    import gzip
-
-    bomb = gzip.compress(b"<urlset>" + b"\x00" * (80 << 20), 9)
-    parse_sitemap(bomb)
-
-
-def test_sitemap_urls_spark_explode(spark):
-    from gnosis_ocr_spark.operators.feed_extract import (
-        build_sitemap,
-        build_sitemap_index,
-        sitemap_urls,
-    )
-
-    sm = build_sitemap(
-        [("https://s.test/a", "2026-03-01"), ("https://s.test/b", None)],
-        gzip_out=True,
-    )
-    idx = build_sitemap_index(["https://s.test/child1.xml.gz"])
-    df = spark.createDataFrame(
-        [("sm.xml.gz", bytearray(sm)), ("idx.xml", bytearray(idx)),
-         ("junk.bin", bytearray(b"not a sitemap"))],
-        "name string, data binary",
-    )
-    rows = sitemap_urls(df).collect()
-    by_name = {}
-    for r in rows:
-        by_name.setdefault(r["sitemap_name"], []).append(r)
-    assert [r["loc"] for r in sorted(by_name["sm.xml.gz"], key=lambda r: r["loc"])] \
-        == ["https://s.test/a", "https://s.test/b"]
-    assert by_name["sm.xml.gz"][0]["kind"] == "urlset"
-    assert by_name["idx.xml"][0]["kind"] == "sitemapindex"
-    assert by_name["idx.xml"][0]["loc"] == "https://s.test/child1.xml.gz"
-    assert "junk.bin" not in by_name  # no rows for non-sitemaps
-
-
-def test_sitemap_misnested_entry_does_not_abort_the_walk():
-    """One mis-nested entry (</url> before </loc>) must lose at most that
-    entry — never everything after it in the file."""
-    from gnosis_ocr_spark.operators.feed_extract import parse_sitemap
-
-    xml = (b'<?xml version="1.0"?><urlset>'
-           b"<url><loc>https://a.test/1</loc></url>"
-           b"<url><loc>https://a.test/2</url></loc>"  # mis-nested
-           b"<url><loc>https://a.test/3</loc></url>"
-           b"</urlset>")
-    locs = [e["loc"] for e in parse_sitemap(xml)["entries"]]
-    assert "https://a.test/1" in locs and "https://a.test/3" in locs

@@ -62,3 +62,37 @@ def unreferenced_definitions() -> list[str]:
 def test_every_package_definition_is_referenced():
     dead = unreferenced_definitions()
     assert dead == [], "unreferenced top-level definitions:\n" + "\n".join(dead)
+
+
+def unused_imports() -> list[str]:
+    """``module:line name`` for each import in a package module whose bound
+    name the module never uses. ``__future__`` imports, ``__init__.py``
+    re-exports and statements marked ``# noqa: F401`` (deliberate import
+    probes) are exempt."""
+    found: list[str] = []
+    for path in _py_files(PACKAGE):
+        if path.name == "__init__.py":
+            continue
+        src = path.read_text(encoding="utf-8")
+        lines = src.splitlines()
+        tree = ast.parse(src, filename=str(path))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        module = path.relative_to(ROOT).with_suffix("").as_posix().replace("/", ".")
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if any("# noqa: F401" in line
+                   for line in lines[node.lineno - 1:node.end_lineno]):
+                continue
+            for alias in node.names:
+                bound = alias.asname or alias.name.split(".")[0]
+                if bound != "*" and bound not in used:
+                    found.append(f"{module}:{alias.lineno} {bound}")
+    return sorted(found)
+
+
+def test_every_package_import_is_used():
+    unused = unused_imports()
+    assert unused == [], "unused imports:\n" + "\n".join(unused)

@@ -3,10 +3,11 @@ assembly, salted skew repartition."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from gnosis_ocr_spark.functions.codec_pdf import build_pdf
-from gnosis_ocr_spark.functions.codec_png import encode_page_png
+from gnosis_ocr_spark.functions.codec_png import DPI150_SIZE, encode_page_png
 from gnosis_ocr_spark.operators.layout import assemble_documents, assemble_spans
 from gnosis_ocr_spark.operators.ocr import get_engine
 from gnosis_ocr_spark.operators.pdf_split import (
@@ -140,6 +141,38 @@ def test_pdf15_files_flow_through_spark_pipeline(spark):
         assert got[f"u{i}-15"] == got[f"u{i}-14"]
         assert got[f"u{i}-14"][1] == len(pg)
 
+
+
+@pytest.mark.parametrize(
+    "spec,size",
+    [
+        (None, (64, 64)),
+        ("64x64", (64, 64)),
+        ("dpi150", DPI150_SIZE),
+        ("DPI150", DPI150_SIZE),
+        ("32", (32, 32)),
+        ("640X480", (640, 480)),
+        ("dpi300", None),
+        ("abc", None),
+        ("0x0", None),
+        ("-5x3", None),
+        ("5x", None),
+    ],
+)
+def test_raster_spec_parses_or_raises_at_plan_build(spark, monkeypatch, spec, size):
+    """A raster spec outside dpi150 / N / WxH (positive integers) raises
+    ValueError naming it while raster_ocr_pages builds the plan, on the
+    driver: before this, a typo silently OCR'd every page at 64x64."""
+    from gnosis_ocr_spark.operators.pdf_split import _raster_size, raster_ocr_pages
+
+    monkeypatch.delenv("SPARK_GRAFT_RASTER", raising=False)
+    pages = spark.createDataFrame([], "url string, page_no int, page_text string")
+    if size is None:
+        with pytest.raises(ValueError, match=repr(spec)):
+            raster_ocr_pages(pages, raster=spec)
+    else:
+        assert _raster_size(spec) == size
+        raster_ocr_pages(pages, raster=spec)
 
 def test_mid_document_split_failure_leaves_sentinel(monkeypatch):
     """A parse failure AFTER partial page emission (corrupt tail — common
